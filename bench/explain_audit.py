@@ -13,6 +13,7 @@ from __future__ import annotations
 import argparse
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -158,6 +159,81 @@ def formatted_plan(df) -> str:
     return buf.getvalue()
 
 
+def shuffle_exchanges(plan: str) -> list[str]:
+    """The ``Arguments`` of every shuffle ``Exchange`` node in a
+    formatted plan (broadcast exchanges are a different node)."""
+    out = []
+    for block in plan.split("\n\n"):
+        lines = block.strip().splitlines()
+        if lines and re.fullmatch(r"\(\d+\) Exchange", lines[0]):
+            args = [ln for ln in lines if ln.startswith("Arguments: ")]
+            out.append(args[0][len("Arguments: "):] if args else "")
+    return out
+
+
+def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
+    """Plans of one ingest epoch's bucket-granular stages, captured at
+    their commits, and the shape failures found in them. The SPJ merge
+    must sit on exactly one explicit-count hash shuffle on ``_bucket``
+    (a byte-sized shuffle would let AQE collapse a small epoch into one
+    task); the per-epoch rollup must run on at most one shuffle, counting
+    the one the write adds unless the commit is told its input is
+    already bucket-partitioned, and that shuffle must be on ``_bucket``
+    (its partials stay in their bucket's partition through the write)."""
+    from pyspark.sql import functions as F
+
+    from etl_spark.pipeline import Warehouse, ingest_epoch
+
+    wh = Warehouse.init(os.path.join(root, "wh_shape"), n_buckets=8)
+    plans: dict[str, str] = {}
+    write_shuffles: dict[str, int] = {}
+    for name, table in (("merge", wh.pages), ("rollup", wh.rollup)):
+        def capture(df, _commit=table.commit, _name=name, **kw):
+            if df is not None:
+                plans[_name] = formatted_plan(df)
+                write_shuffles[_name] = (
+                    0 if kw.get("already_bucket_partitioned") else 1
+                )
+            return _commit(df, **kw)
+
+        table.commit = capture
+    ev = spark.createDataFrame(
+        [
+            (i, 0, "I", f"https://d{i % 3}.example/{i}", "2024-01-01 00:00:00",
+             b"<p>x</p>", None)
+            for i in range(64)
+        ],
+        "seq long, epoch long, op string, url string, warc_ts string, html binary, lang string",
+    ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
+    ingest_epoch(spark, wh, ev, 0, with_lineage=False)
+
+    failures = []
+    by_bucket = r"hashpartitioning\(_bucket#\d+, \d+\)"
+    merge = plans.get("merge", "")
+    ex = shuffle_exchanges(merge)
+    if (
+        "FlatMapGroupsInPandas" not in merge
+        or write_shuffles["merge"]
+        or len(ex) != 1
+        or not re.match(by_bucket + ", REPARTITION_BY_NUM", ex[0])
+    ):
+        failures.append(
+            "ingest_stage_shape: SPJ merge must run FlatMapGroupsInPandas on "
+            f"one REPARTITION_BY_NUM hash Exchange on _bucket; got {ex}"
+            f" (+{write_shuffles.get('merge')} at the write)"
+        )
+    ex = shuffle_exchanges(plans.get("rollup", ""))
+    n_rollup = len(ex) + write_shuffles.get("rollup", 0)
+    if "rollup" not in plans or n_rollup > 1 or not all(
+        re.match(by_bucket, e) for e in ex
+    ):
+        failures.append(
+            "ingest_stage_shape: per-epoch rollup must run on <= 1 Exchange, "
+            f"on _bucket; got {ex} (+{write_shuffles.get('rollup')} at the write)"
+        )
+    return plans, failures
+
+
 def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
@@ -216,6 +292,10 @@ def main() -> None:
         failures.append(
             "tombstone read: _deleted visibility predicate not pushed to scan"
         )
+    plans, shape_failures = ingest_stage_shape(spark, ts_root)
+    for stage, plan in plans.items():
+        report += [f"## ingest_stage_shape: {stage}", "", "```", plan.strip(), "```", ""]
+    failures += shape_failures
     import shutil
 
     shutil.rmtree(ts_root, ignore_errors=True)

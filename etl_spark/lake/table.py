@@ -97,6 +97,23 @@ def bucket_expr(key_cols: list[str], n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
 
 
+def repartition_by_bucket(df: DataFrame, touched: list[int]) -> DataFrame:
+    """Hash-partition ``df`` on BUCKET_COL into one wave of tasks:
+    ``min(len(touched), defaultParallelism)`` partitions.
+
+    A bucket-granular epoch step (the SPJ merge kernel, the per-epoch
+    rollup) costs per bucket, not per delta byte. Left to AQE, its
+    shuffle is sized by bytes: a trickle epoch's few hundred KB fall
+    under the coalescing floor and ONE task rewrites every touched
+    bucket while the other cores idle. An explicit-count repartition is
+    never coalesced, and one partition per slot (not per bucket) keeps
+    each task's fixed Python-worker cost paid once per core. Every
+    bucket still lands in exactly one partition, so downstream writes
+    stay ``already_bucket_partitioned`` (one file per bucket)."""
+    n = min(len(touched), df.sparkSession.sparkContext.defaultParallelism)
+    return df.repartition(n, F.col(BUCKET_COL))
+
+
 @dataclass
 class Snapshot:
     version: int
@@ -498,11 +515,15 @@ class LakeTable:
         event-time bounds fall outside [lo, hi] — the manifest-level
         twin of parquet row-group min/max pruning, and the successor of
         the reference's stbox/SP-GiST window indexes (cell_query.sql's
-        bread-and-butter read). Pruning only SKIPS whole files: the
-        caller still applies the actual ``event_time_col BETWEEN``
-        predicate (which a range semantically implies — a range
-        predicate excludes null event times, matching the pruning of
-        all-null files).
+        bread-and-butter read) — and filters rows to
+        ``event_time_col BETWEEN lo AND hi`` itself, the column being
+        the one the manifest's bounds were recorded on. The result is
+        exactly the window whatever files pruning kept: pruning is a pure
+        optimisation, and null event times are always excluded (a range
+        predicate never matches them), not only when they happen to sit
+        in a pruned all-null file. On a table where no commit has
+        recorded an event-time column there are neither bounds nor a
+        column to filter on, and ``time_range`` leaves the read whole.
         """
         snap = self.snapshot(version)
         schema = snap.schema
@@ -513,7 +534,9 @@ class LakeTable:
             paths = [p for plist in snap.files.values() for p in plist]
         else:
             paths = [p for b in buckets for p in snap.files.get(str(b), [])]
+        in_range = None
         if time_range is not None:
+            in_range = self._time_range_predicate(snap, time_range)
             paths = self._prune_paths_by_time(snap, paths, time_range)
         if not paths:
             df = spark.createDataFrame([], read_schema)
@@ -521,6 +544,8 @@ class LakeTable:
             df = spark.read.schema(read_schema).parquet(
                 *[os.path.join(self.root, p) for p in paths]
             )
+        if in_range is not None:
+            df = df.filter(in_range)
         has_tomb = any(f.name == DELETED_COL for f in schema.fields)
         if has_tomb and not include_deleted:
             # IsNull-OR-EqualTo (not ~coalesce) so the predicate stays
@@ -531,6 +556,35 @@ class LakeTable:
         if not with_bucket:
             df = df.drop(BUCKET_COL)
         return df
+
+    @staticmethod
+    def _time_range_predicate(
+        snap: Snapshot, time_range: tuple
+    ) -> F.Column | None:
+        """``col BETWEEN lo AND hi`` on the snapshot's event-time column
+        (an open side drops its bound; nulls never match), or None when
+        no commit has recorded an event-time column. String bounds cast
+        in Spark, i.e. in the session time zone, as the caller's own
+        ``to_timestamp`` would."""
+        import datetime as dt
+
+        col = (snap.file_stats or {}).get("col")
+        if not col:
+            return None
+
+        def _lit(x):
+            if isinstance(x, str):
+                dt.datetime.fromisoformat(x)  # ValueError on junk
+                return F.lit(x).cast(T.TimestampType())
+            return F.lit(x)
+
+        lo, hi = time_range
+        pred = F.col(col).isNotNull()
+        if lo is not None:
+            pred = pred & (F.col(col) >= _lit(lo))
+        if hi is not None:
+            pred = pred & (F.col(col) <= _lit(hi))
+        return pred
 
     @staticmethod
     def _prune_paths_by_time(

@@ -122,9 +122,22 @@ class LineageLog:
         ]
         if missing:
             self.table.add_columns(missing)
-        df = spark.createDataFrame(self.rows, LINEAGE_SCHEMA)
+        # An Arrow table typed from LINEAGE_SCHEMA plans as a
+        # LocalRelation: the append runs on the JVM alone (a list of
+        # tuples becomes a Python RDD, i.e. Python-worker tasks, each
+        # with a fixed start-up cost), and nullable longs stay exact
+        # int64 instead of detouring through float64.
+        import pyarrow as pa
         import pyspark.sql.functions as F
+        from pyspark.sql.pandas.types import to_arrow_schema
 
+        arrow_schema = to_arrow_schema(LINEAGE_SCHEMA)
+        columns = zip(*self.rows)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+            schema=arrow_schema,
+        )
+        df = spark.createDataFrame(table, LINEAGE_SCHEMA)
         self.table.append(
             df.withColumn("committed_at", F.current_timestamp()),
             summary={"operation": "lineage"},

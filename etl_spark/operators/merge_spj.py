@@ -5,7 +5,19 @@ times: LWW groupBy (hash by key), full-outer join vs current (hash by
 key again), and the write repartition (hash by bucket). This variant
 collapses them into ONE payload shuffle:
 
-    delta.groupBy(bucket).applyInPandas(merge_bucket) -> write
+    delta.repartition(n, bucket).groupBy(bucket).applyInPandas(merge_bucket)
+         -> write
+
+The kernel's partition count is ``n = min(touched buckets, slots)``
+(``lake.table.repartition_by_bucket``), fixed by the epoch's touched
+list and ``defaultParallelism`` — never by the delta's size in bytes.
+The kernel's cost is per bucket (read + rewrite the whole bucket), but
+AQE sizes a shuffle by its bytes: a small epoch's shuffle falls under
+the coalescing floor and a single Python task would rewrite every
+touched bucket while the other cores idle. An explicit count is never
+coalesced, so the epoch runs as one full wave. One partition per slot,
+not one per bucket, because every Python-worker task pays a fixed
+start-up cost (``bench/BASELINE.md``, trickle epoch decomposition).
 
 Inside the grouped-map kernel (one call per bucket, Arrow-batched):
   1. LWW winner per key (vectorized sort + drop_duplicates keep-last —
@@ -45,7 +57,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_spark.functions.extract import extract_text_series
-from etl_spark.lake.table import BUCKET_COL, DELETED_COL, LakeTable, bucket_expr
+from etl_spark.lake.table import (
+    BUCKET_COL,
+    DELETED_COL,
+    LakeTable,
+    bucket_expr,
+    repartition_by_bucket,
+)
 from etl_spark.operators.dedup import salted_lww_dedup
 from etl_spark.operators.merge import MergeStats, evolve_for_delta
 
@@ -398,7 +416,11 @@ def merge_epoch_spj(
         order_cols,
         extracted,
     )
-    merged = bucketed.groupBy(BUCKET_COL).applyInPandas(kernel, out_schema)
+    merged = (
+        repartition_by_bucket(bucketed, touched)
+        .groupBy(BUCKET_COL)
+        .applyInPandas(kernel, out_schema)
+    )
 
     new_snap = table.commit(
         merged,

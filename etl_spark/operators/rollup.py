@@ -30,7 +30,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_spark.functions.keys import smart_date_id
-from etl_spark.lake.table import BUCKET_COL, CommitConflictError, LakeTable
+from etl_spark.lake.table import (
+    BUCKET_COL,
+    CommitConflictError,
+    LakeTable,
+    repartition_by_bucket,
+)
 from etl_spark.operators.clean import domain_of
 
 # Manifest-layout stamp carried in every rollup commit summary: the
@@ -136,14 +141,23 @@ def rollup_domain_stats(
     if not touched_buckets:
         rollup.commit(None, applied_epoch=epoch, summary=summary)
         return
+    # One explicit shuffle on the pages bucket: the partial aggregate's
+    # (src_bucket, domain, day_id) clustering is already satisfied by it
+    # (src_bucket IS _bucket), and each src_bucket's partials stay in one
+    # task, so the commit writes them as they are — one file per bucket,
+    # on all cores, with no second shuffle.
     fresh = compute_partials(
-        pages.read(spark, buckets=touched_buckets, with_bucket=True)
+        repartition_by_bucket(
+            pages.read(spark, buckets=touched_buckets, with_bucket=True),
+            touched_buckets,
+        )
     )
     rollup.commit(
         fresh.withColumn(BUCKET_COL, F.col("src_bucket")),
         touched_buckets=[int(b) for b in touched_buckets],
         applied_epoch=epoch,
         summary=summary,
+        already_bucket_partitioned=True,
     )
 
 

@@ -92,6 +92,11 @@ def _cosine_np_udf():
     windows — a NaN here would sort FIRST and poison every top-k), and
     a length-mismatched pair yields NULL too (the fold's
     ``zip_with`` pads the short side with nulls, nulling the sum).
+    A null ELEMENT on either side yields NULL too (the fold's null
+    product nulls its sum); Arrow hands a null element over as NaN, so
+    such rows are nulled after the math. A NaN element cannot be told
+    from a null one on this side of the boundary and yields NULL as
+    well (the fold gives NaN): NaN embeddings are out of contract.
     Rows are batched per vector length so ragged inputs never crash
     ``np.stack``. Zero-length/zero-norm vectors are out of contract
     (both kernels produce a 0/0)."""
@@ -123,7 +128,10 @@ def _cosine_np_udf():
                     na = na + A[:, i] * A[:, i]
                     nb = nb + B[:, i] * B[:, i]
                 vals = dot_ / (np.sqrt(na) * np.sqrt(nb))
-                out[idx[sel]] = vals  # object dtype: NaN stays NaN
+                ok = ~(np.isnan(A).any(axis=1) | np.isnan(B).any(axis=1))
+                # object dtype: null-element rows stay None; a 0/0 NaN
+                # from a zero-norm vector stays NaN
+                out[idx[sel][ok]] = vals[ok]
         return pd.Series(out, index=a.index, dtype=object)
 
     return _cos

@@ -153,6 +153,36 @@ def test_all_null_event_time_file_is_pruned(spark, tmp_path):
     assert pruned.count() == 0
 
 
+@pytest.mark.parametrize("order", [(0, 1, 2), (2, 1, 0), (1, 2, 0)])
+def test_time_range_read_filters_rows_itself(spark, tmp_path, order):
+    """read(time_range=) alone returns exactly the window: rows outside
+    it in a kept file are filtered, and null event times never show —
+    neither from a mixed file (kept by pruning) nor an all-null one
+    (pruned), whatever order the files were committed in."""
+    lo, hi = dt.datetime(2024, 1, 3), dt.datetime(2024, 1, 5, 23)
+    batches = [
+        # straddles the window, with nulls: kept by pruning
+        [("a1", dt.datetime(2024, 1, 2), 1), ("a2", dt.datetime(2024, 1, 4), 2),
+         ("a3", None, 3), ("a4", dt.datetime(2024, 1, 9), 4)],
+        [("b1", None, 5), ("b2", None, 6)],  # all null: pruned
+        [("c1", dt.datetime(2024, 1, 3), 7), ("c2", dt.datetime(2024, 1, 5, 23), 8)],
+    ]
+    t = LakeTable.create(
+        str(tmp_path / "t"), SCHEMA, key_cols=["k"], n_buckets=1
+    )
+    for i in order:
+        t.append(spark.createDataFrame(batches[i], SCHEMA), event_time_col="ts")
+    got = sorted(r.k for r in t.read(spark, time_range=(lo, hi)).collect())
+    assert got == ["a2", "c1", "c2"]
+    # string bounds and an open side mean the same window semantics
+    got = sorted(
+        r.k for r in t.read(spark, time_range=(None, "2024-01-02")).collect()
+    )
+    assert got == ["a1"]
+    with pytest.raises(ValueError):
+        t.read(spark, time_range=("not-a-ts", None))
+
+
 def test_bounds_survive_compaction_and_carry_forward(spark, tmp_path):
     t = LakeTable.create(
         str(tmp_path / "t"), SCHEMA, key_cols=["k"], n_buckets=2

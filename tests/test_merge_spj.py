@@ -271,3 +271,60 @@ def test_kernel_reads_current_side_through_fs_seam(spark, tmp_path):
     assert base_uri == str(tmp_path)
     assert type(fs_posix).__name__ == "LocalFileSystem"
     assert type(fs_uri).__name__ == "LocalFileSystem"
+
+
+@pytest.mark.parametrize("n_touched", [2, 10])
+def test_repartition_by_bucket_one_wave(spark, n_touched):
+    """The bucket-granular stages run as one wave: the partition count is
+    min(touched buckets, slots), whatever the bytes, and every touched
+    bucket's rows sit in exactly one partition."""
+    from etl_spark.lake.table import repartition_by_bucket
+
+    touched = list(range(n_touched))
+    df = spark.range(0, 50 * n_touched).select(
+        (F.col("id") % n_touched).cast("int").alias("_bucket"), "id"
+    )
+    parted = repartition_by_bucket(df, touched)
+    want = min(n_touched, spark.sparkContext.defaultParallelism)
+    assert parted.rdd.getNumPartitions() == want
+    placed = {
+        (r._bucket, r.pid)
+        for r in parted.select(
+            "_bucket", F.spark_partition_id().alias("pid")
+        ).collect()
+    }
+    pids_of = {}
+    for b, pid in placed:
+        pids_of.setdefault(b, set()).add(pid)
+    assert set(pids_of) == set(touched)
+    assert all(len(p) == 1 for p in pids_of.values())
+
+
+def test_epoch_touching_every_bucket_keeps_one_file_per_bucket(spark, tmp_path):
+    """The layout lake reads depend on: after an epoch that rewrites every
+    bucket (more buckets than slots, so tasks hold several buckets), each
+    pages bucket and each rollup bucket still holds exactly one file."""
+    from etl_spark.pipeline import ingest_epoch
+
+    n_buckets = 8
+    wh = Warehouse.init(str(tmp_path / "wh"), n_buckets=n_buckets)
+
+    def events(epoch, day):
+        return spark.createDataFrame(
+            [
+                (epoch * 1000 + i, epoch, "I", f"https://d{i % 5}.example/{i}",
+                 f"2024-01-{day:02d} {i % 24:02d}:00:00", b"<p>x</p>", None)
+                for i in range(120)
+            ],
+            "seq long, epoch long, op string, url string, warc_ts string, "
+            "html binary, lang string",
+        ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
+
+    ingest_epoch(spark, wh, events(0, 1), 0)
+    ingest_epoch(spark, wh, events(1, 2), 1)
+    pages = wh.pages.snapshot()
+    assert sorted(pages.summary["touched_list"]) == list(range(n_buckets))
+    for table in (wh.pages, wh.rollup):
+        files = table.snapshot().files
+        assert sorted(map(int, files)) == list(range(n_buckets))
+        assert all(len(paths) == 1 for paths in files.values()), files

@@ -175,6 +175,36 @@ def test_lineage_rows_written(spark, tmp_wh):
         assert r.event_lag_seconds is not None and r.event_lag_seconds > 0
 
 
+def test_lineage_flush_exact_longs_on_local_relation(spark, tmp_wh):
+    """Flushed lineage rows cross into the JVM as an Arrow table: a null
+    next to a long above 2^53 reads back exactly (no float64 detour),
+    and the appended DataFrame plans as a LocalRelation, so a flush
+    starts no Python-worker task."""
+    from etl_spark.lineage import LineageLog
+
+    wh = Warehouse.init(tmp_wh, n_buckets=2)
+    appended = []
+    append = wh.lineage.append
+
+    def capture(df, **kw):
+        appended.append(df)
+        return append(df, **kw)
+
+    wh.lineage.append = capture
+    log = LineageLog(wh.lineage)
+    with log.stage(7, "merge") as rec:
+        rec["rows_in"] = None
+        rec["rows_out"] = 2**53 + 1
+    log.flush(spark)
+
+    (row,) = wh.lineage.read(spark).collect()
+    assert (row.epoch, row.stage, row.status) == (7, "merge", "ok")
+    assert row.rows_in is None and row.rows_out == 2**53 + 1
+    (df,) = appended
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "LocalRelation", plan.toString()
+
+
 def test_rollup_commit_is_bucket_granular(spark, tmp_wh):
     """The rollup epoch must rewrite only the touched buckets' partial
     files — untouched buckets carry forward by manifest reference

@@ -125,6 +125,36 @@ def test_null_and_ragged_vectors_null_out_not_nan(spark, _restore_kernel):
     assert npk[4] == pytest.approx(1.0)
 
 
+def test_null_element_nulls_out_like_fold(spark, _restore_kernel):
+    """A null ELEMENT in either vector yields NULL under both kernels
+    (Arrow hands it to numpy as NaN; the kernel must not return that
+    NaN), while clean rows in the same batch still compute."""
+    from pyspark.sql import functions as F
+
+    rows = [
+        (1, [1.0, None, 0.0], [1.0, 0.0, 0.0]),   # null element, left
+        (2, [1.0, 0.0, 0.0], [0.5, 0.5, None]),   # null element, right
+        (3, [1.0, 2.0, 0.0], [2.0, 4.0, 0.0]),    # clean, same length
+    ]
+    df = spark.createDataFrame(
+        rows, "id long, a array<double>, b array<double>"
+    )
+
+    def run():
+        return {
+            r.id: r.c
+            for r in df.select(
+                "id", sim.cosine_cols(F.col("a"), F.col("b")).alias("c")
+            ).collect()
+        }
+
+    fold = _with_kernel("fold", run)
+    npk = _with_kernel("numpy", run)
+    assert fold == npk
+    assert npk[1] is None and npk[2] is None
+    assert npk[3] == pytest.approx(1.0)
+
+
 def test_topk_never_ranks_null_vector_first(spark, _restore_kernel):
     """The regression the NaN bug would cause: a corpus row with a null
     embedding must sort LAST (null), not FIRST (NaN), under either
