@@ -476,14 +476,31 @@ class LakeTable:
             )
         return {"col": col, "files": out}
 
-    def _publish(self, snap: Snapshot) -> bool:
+    def _publish(self, snap: Snapshot, added: dict[str, list[str]]) -> bool:
         """Attempt the atomic publish: holds the commit lock, verifies
         HEAD still equals ``snap.parent``, then writes the manifest and
         swaps HEAD. Returns False (without publishing) if another
-        writer moved HEAD first — the caller rebases and retries."""
+        writer moved HEAD first — the caller rebases and retries.
+
+        ``added`` (bucket -> relative paths) are the files this commit
+        wrote. Each must still exist: an orphan sweep that judged a
+        slow writer's claim abandoned may have deleted them, and a HEAD
+        naming missing files is never acceptable — raise instead."""
         with self._commit_lock():
             if self.head_version() != snap.parent:
                 return False
+            missing = [
+                p
+                for paths in added.values()
+                for p in paths
+                if not os.path.exists(os.path.join(self.root, p))
+            ]
+            if missing:
+                raise CommitConflictError(
+                    f"{len(missing)} data file(s) of this commit are gone "
+                    f"(e.g. {missing[0]}); an orphan sweep removed them "
+                    "mid-commit — re-run the commit"
+                )
             self._write_snapshot(snap)
             self._swap_head(snap.version)
             return True
@@ -787,7 +804,7 @@ class LakeTable:
                     head, files, written_file_stats, event_time_col
                 ),
             )
-            if self._publish(snap):
+            if self._publish(snap, written):
                 return snap
             # Lost the race. Re-read the winner's head and decide:
             new_head = self.snapshot()
@@ -905,7 +922,7 @@ class LakeTable:
                     head, files, written_file_stats, event_time_col
                 ),
             )
-            if self._publish(snap):
+            if self._publish(snap, written):
                 return snap
             head = self.snapshot()
             if (
@@ -940,7 +957,7 @@ class LakeTable:
 
     # -- maintenance ------------------------------------------------------------
     def expire_snapshots(
-        self, keep_last: int = 2, orphan_grace_s: float = 3600.0
+        self, keep_last: int = 2, orphan_grace_s: float = 3 * 86400.0
     ) -> list[int]:
         """GC data directories only reachable from expired snapshots.
         (Iceberg's expire_snapshots analog; keeps time travel shallow.)
@@ -954,9 +971,12 @@ class LakeTable:
         forever. A claim below HEAD with no snapshot json is such an
         orphan; ``orphan_grace_s`` protects a still-in-flight writer
         (its eventual snapshot may reference its claim's data dir by
-        relative path) — only claims older than the grace are swept,
-        and only files unreferenced by every surviving snapshot are
-        deleted (Iceberg's remove_orphan_files age guard)."""
+        relative path) — only claims whose claim file AND data dir have
+        been untouched for longer than the grace are swept, and only
+        files unreferenced by every surviving snapshot are deleted
+        (Iceberg's remove_orphan_files age guard, whose default is
+        also 3 days). A writer slower than the grace fails loudly at
+        publish (see ``_publish``) instead of naming deleted files."""
         versions = self.versions()
         head = self.head_version()
         # keep_last=0 must mean "only what HEAD needs" — a bare
@@ -999,13 +1019,13 @@ class LakeTable:
                 continue
             v = int(entry[1:].split(".", 1)[0])
             claim = os.path.join(snap_dir, entry)
+            data_dir = self._data_dir(v)
             if (
                 v >= head
                 or os.path.exists(self._snap_path(v))
-                or now - os.path.getmtime(claim) < grace_s
+                or now - self._newest_mtime(claim, data_dir) < grace_s
             ):
                 continue
-            data_dir = self._data_dir(v)
             if os.path.isdir(data_dir):
                 for dirpath, _dirs, names in os.walk(data_dir, topdown=False):
                     for name in names:
@@ -1016,6 +1036,20 @@ class LakeTable:
                     if not os.listdir(dirpath):
                         os.rmdir(dirpath)
             os.remove(claim)
+
+    @staticmethod
+    def _newest_mtime(claim: str, data_dir: str) -> float:
+        """Last activity of a claim: the newest mtime among the claim
+        file and everything under its data dir. A file vanishing
+        mid-walk means a writer is active right now."""
+        try:
+            newest = os.path.getmtime(claim)
+            for dirpath, _dirs, names in os.walk(data_dir):
+                for path in [dirpath] + [os.path.join(dirpath, n) for n in names]:
+                    newest = max(newest, os.path.getmtime(path))
+        except FileNotFoundError:
+            return time.time()
+        return newest
 
     def compact_files(
         self, spark: SparkSession, max_files: int = 64, rebucket: bool = False

@@ -55,7 +55,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--to-version", type=int)
     p.add_argument("--checkpoint", help="streaming checkpoint dir")
     p.add_argument("--n-buckets", type=int, default=16)
-    p.add_argument("--strategy", choices=["spj", "classic"], default="spj")
     p.add_argument("--cpus", type=int, default=None)
     return p
 
@@ -82,11 +81,7 @@ def main(argv: list[str] | None = None) -> int:
 
         provider = epoch_provider(spark, args.source)
         stats = ingest_range(
-            spark,
-            wh,
-            provider,
-            range(args.from_epoch, args.to_epoch),
-            strategy=args.strategy,
+            spark, wh, provider, range(args.from_epoch, args.to_epoch)
         )
         for s in stats:
             print(

@@ -35,7 +35,7 @@ def clean_changes(changes: DataFrame) -> DataFrame:
     # arriving with a drifted type (e.g. lang as bigint) must not make
     # the ANSI-mode isin() cast 'Unknown' to a number and explode — the
     # drifted values pass through here and are cast to the table's
-    # authoritative type at merge (align_to_schema).
+    # authoritative type at merge (merge_epoch_spj).
     has_lang = any(
         f.name == "lang" and f.dataType.simpleString() == "string"
         for f in changes.schema.fields

@@ -3,8 +3,8 @@ per-group "most recent / most frequent" voting
 (/root/reference/etl/trajectory/builder.py:378-390) — plus the
 skew-aware two-phase variant (successor of the reference's kd-tree
 data-balanced partitioning, /root/reference/etl/partition_builder/
-02_kd_tree_construction.sql:1-68: both derive a balancing plan from an
-observed key histogram).
+02_kd_tree_construction.sql:1-68: both derive a balancing plan from
+observed key counts).
 
 Scale notes
 -----------
@@ -14,8 +14,9 @@ makes one reducer the straggler. The two-phase form salts the key with
 ``pmod(xxhash64(seq), S)``, picks a winner per (key, salt) with a
 map-side-friendly ``max(struct(...))`` aggregation, then re-aggregates
 winners across salts — the classic partial/final split, so no reducer
-ever sees more than ~1/S of a hot key's rows. Salting is driven by an
-epoch histogram so cold keys skip the extra pass.
+ever sees more than ~1/S of a hot key's rows. Salting is driven by the
+epoch's hottest-key count (:func:`delta_stats`), so an epoch with no
+hot key skips the extra pass.
 """
 
 from __future__ import annotations
@@ -67,71 +68,21 @@ def lww_dedup_window(df: DataFrame, key_cols: list[str], order_cols: list[str]) 
     )
 
 
-def _hot_key_predicate(key_cols: list[str], hot_keys: list[tuple]) -> F.Column:
-    """Map-side membership test for a small driver-known hot-key list
-    (<= top_n from the histogram) — an In/isin predicate, no join.
-
-    Null-safe by construction: the returned predicate is never NULL, so
-    ``filter(pred)`` / ``filter(~pred)`` partition the input exactly.
-    A plain ``isin`` would go three-valued on a NULL key column (the
-    row then vanishes from BOTH branches), and a NULL inside the isin
-    list would null-out the predicate for every non-matching row —
-    on a dirty pre-clean stream (where ``hot_key_histogram`` can
-    legitimately return a ``(None,)`` key) that silently dropped all
-    cold keys."""
-    if len(key_cols) == 1:
-        col = F.col(key_cols[0])
-        vals = [k[0] for k in hot_keys if k[0] is not None]
-        pred = F.coalesce(col.isin(vals), F.lit(False)) if vals else F.lit(False)
-        if any(k[0] is None for k in hot_keys):
-            pred = pred | col.isNull()
-        return pred
-    pred = F.lit(False)
-    for kt in hot_keys:
-        conj = F.lit(True)
-        for c, v in zip(key_cols, kt):
-            conj = conj & F.col(c).eqNullSafe(F.lit(v))
-        pred = pred | conj
-    return pred
-
-
 def salted_lww_dedup(
     df: DataFrame,
     key_cols: list[str],
     order_cols: list[str],
     n_salts: int = 16,
     salt_source: str | None = None,
-    hot_keys: list[tuple] | None = None,
 ) -> DataFrame:
     """Two-phase LWW for hot keys.
 
     Phase 1 groups by (key, salt) — hot keys spread over ``n_salts``
     reducers; phase 2 re-reduces the per-salt winners (n_salts rows per
     key, trivial). ``salt_source``: a column making the salt
-    deterministic (default: first order col), so replays produce
+    deterministic (default: last order col), so replays produce
     identical partitioning.
-
-    ``hot_keys`` (the histogram's identities): when given, ONLY those
-    keys take the two-phase path; everything else keeps the
-    single-shuffle :func:`lww_dedup`. Without the split, phase 2
-    re-shuffles every cold key's per-salt winner structs — payload
-    included — roughly doubling dedup shuffle volume at 10^10 events
-    for the sake of one hot URL. The split reads the delta twice
-    (one scan per branch), which is the right trade: a columnar
-    re-scan is cheap next to a second full-payload shuffle.
     """
-    if hot_keys:
-        pred = _hot_key_predicate(key_cols, hot_keys)
-        # pred is never-NULL (see _hot_key_predicate), so the two
-        # branches partition the input exactly; coalesce is belt and
-        # braces so a future predicate change can't leak rows out of
-        # both branches again.
-        pred = F.coalesce(pred, F.lit(False))
-        hot_side = salted_lww_dedup(
-            df.filter(pred), key_cols, order_cols, n_salts, salt_source
-        )
-        cold_side = lww_dedup(df.filter(~pred), key_cols, order_cols)
-        return hot_side.unionByName(cold_side)
     src = salt_source or order_cols[-1]
     cols = df.columns
     salted = df.withColumn("_salt", F.pmod(F.xxhash64(F.col(src)), F.lit(n_salts)))
@@ -141,54 +92,6 @@ def salted_lww_dedup(
     )
     phase2 = phase1.groupBy(*key_cols).agg(F.max("_w").alias("_w"))
     return phase2.select([F.col(f"_w._row.{c}").alias(c) for c in cols])
-
-
-def hot_key_histogram(
-    df: DataFrame, key_cols: list[str], threshold_rows: int, top_n: int = 64
-) -> list[tuple]:
-    """Per-epoch key histogram -> the hot-key list that drives salting.
-
-    Driver-side result is bounded (top_n); the groupBy count is a
-    partial-aggregated shuffle of (key, long) pairs — cheap relative to
-    the payload. Successor of the reference's density-histogram
-    partition builder (SURVEY.md G14).
-    """
-    rows = (
-        df.groupBy(*key_cols)
-        .count()
-        .filter(F.col("count") >= threshold_rows)
-        .orderBy(F.col("count").desc())
-        .limit(top_n)
-        .collect()
-    )
-    return [tuple(r[c] for c in key_cols) for r in rows]
-
-
-def adaptive_lww_dedup(
-    df: DataFrame,
-    key_cols: list[str],
-    order_cols: list[str],
-    hot_threshold: int = 100_000,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Histogram-driven dedup: salt only when a hot key exists.
-
-    The histogram costs one count-shuffle; at 10^10 events that is the
-    right trade — an unsalted hot key costs hours, the histogram costs
-    seconds. (The per-epoch decision mirrors the reference rebuilding
-    its kd-tree from observed density rather than assuming uniformity.)
-    """
-    hot = hot_key_histogram(df, key_cols, hot_threshold)
-    if hot:
-        # salt ONLY the identified hot keys (the histogram already paid
-        # for their identities); cold keys keep the single-shuffle path.
-        # Keys hotter than the threshold but beyond the histogram's
-        # top_n fall back to the cold path — top_n is the straggler
-        # budget knob, not a correctness boundary.
-        return salted_lww_dedup(
-            df, key_cols, order_cols, n_salts=n_salts, hot_keys=hot
-        )
-    return lww_dedup(df, key_cols, order_cols)
 
 
 class DeltaStats(NamedTuple):
@@ -210,9 +113,8 @@ def delta_stats(
 
     Two-level aggregation — groupBy(bucket, key).count() then
     groupBy(bucket) — so the shuffle carries one long per key and the
-    driver receives at most n_buckets rows. Replaces BOTH the separate
-    hot-key histogram pass and the cached-winners bucket-discovery
-    pass: at 10^10 events caching the delta payload is the wrong move
+    driver receives at most n_buckets rows, and the delta payload is
+    never cached: at 10^10 events caching it is the wrong move
     (columnar-cache build + eviction dwarf a recompute); bounded stats
     + a single streamed full pass is the shape that scales.
     """

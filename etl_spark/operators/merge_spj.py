@@ -1,9 +1,16 @@
-"""Single-shuffle storage-partitioned MERGE — the scale-path upsert.
+"""Single-shuffle storage-partitioned MERGE — the engine's one upsert.
 
-The baseline merge (operators/merge.py) shuffles the epoch payload three
-times: LWW groupBy (hash by key), full-outer join vs current (hash by
-key again), and the write repartition (hash by bucket). This variant
-collapses them into ONE payload shuffle:
+Semantics (per key, LWW on the lexicographic (warc_ts, seq) tuple):
+I/U upsert the row if it is newer-or-equal to the stored row; D
+deletes the key if newer-or-equal; older events lose silently. ``>=``
+(not ``>``) makes a replay of the exact same event converge to the same
+state instead of flip-flopping — idempotence at row grain, on top of
+epoch-grain skip.
+
+A textbook merge shuffles the epoch payload three times: LWW groupBy
+(hash by key), full-outer join vs current (hash by key again), and the
+write repartition (hash by bucket). This one collapses them into ONE
+payload shuffle:
 
     delta.repartition(n, bucket).groupBy(bucket).applyInPandas(merge_bucket)
          -> write
@@ -31,10 +38,10 @@ Inside the grouped-map kernel (one call per bucket, Arrow-batched):
      through a pyarrow FileSystem seam (:func:`_resolve_filesystem`):
      a POSIX root reads locally, a ``s3://``/``hdfs://`` root reads
      via the store's client — no kernel change to leave shared disk;
-  4. row arbitration identical to the JVM merge: delta wins iff no
-     current row or delta.warc_ts >= current.warc_ts; 'D' winners drop
-     the key; untouched current rows carry through (the whole bucket is
-     rewritten, so losers must be re-emitted).
+  4. row arbitration: delta wins iff no current row or it is >= on the
+     (warc_ts, seq) tuple, NULL comparing as -inf on either side; 'D'
+     winners become tombstones; untouched current rows carry through
+     (the whole bucket is rewritten, so losers must be re-emitted).
 
 The output is already partitioned by bucket (the one shuffle), so the
 lake write skips its repartition. Hot keys: when the stats pre-pass
@@ -49,6 +56,7 @@ target scale (thousands of buckets at 100 TB).
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from typing import Iterable
 
 import pandas as pd
@@ -61,13 +69,41 @@ from etl_spark.lake.table import (
     BUCKET_COL,
     DELETED_COL,
     LakeTable,
+    Snapshot,
     bucket_expr,
     repartition_by_bucket,
 )
 from etl_spark.operators.dedup import salted_lww_dedup
-from etl_spark.operators.merge import MergeStats, evolve_for_delta
 
 OP_COL = "op"
+
+
+@dataclass
+class MergeStats:
+    epoch: int
+    skipped: bool
+    touched_buckets: int
+    delta_rows: int
+    version: int
+
+
+def evolve_for_delta(table: LakeTable, delta: DataFrame) -> Snapshot:
+    """Additive schema evolution: any new non-control column appearing
+    in the delta is added to the table schema (metadata-only commit)
+    before the merge — the `lang` mid-stream scenario."""
+    snap = table.snapshot()
+    existing = {f.name for f in snap.schema.fields}
+    control = {OP_COL, "seq", "epoch", BUCKET_COL}
+    added = [
+        f
+        for f in delta.schema.fields
+        if f.name not in existing and f.name not in control
+    ]
+    if added:
+        nullable = [T.StructField(f.name, f.dataType, True) for f in added]
+        snap = table.add_columns(nullable)
+    return snap
+
 
 # Sentinel for null tie-break values (arbitration already treats null
 # as smallest-possible): tie-break columns cross the Arrow boundary as
@@ -181,7 +217,7 @@ def make_bucket_merger(
         # when Arrow delivered int64, i.e. the group had no nulls).
         # na_position='first' matches the JVM max-struct order (nulls
         # smallest), so a null-seq event loses a tied-ts dedup to a
-        # concrete-seq one exactly as on the classic path.
+        # concrete-seq one exactly as in the salted pre-reduce.
         tb_cols = order_cols[1:]
         for c in tb_cols:
             shadow = f"{c}__tb"
@@ -239,10 +275,10 @@ def make_bucket_merger(
         else:
             cur = pd.DataFrame(columns=payload_cols)
 
-        # 4. arbitration (same rule as the JVM merge): delta wins iff no
-        # current row or it is >= on the full lexicographic
-        # (warc_ts, seq) tuple — the stored seq makes equal-ts events in
-        # later epochs arbitrate by global LWW order, not arrival order.
+        # 4. arbitration: delta wins iff no current row or it is >= on
+        # the full lexicographic (warc_ts, seq) tuple — the stored seq
+        # makes equal-ts events in later epochs arbitrate by global LWW
+        # order, not arrival order.
         merged = winners.merge(
             cur[payload_cols] if len(cur) else cur,
             on=key_cols,
@@ -257,20 +293,25 @@ def make_bucket_merger(
         cur_tb = merged.get(f"{tb_col}_cur") if tb_col else None
         if cur_ts is None:
             delta_wins = in_delta
-        elif cur_tb is not None and tb_col in merged.columns:
-            # null seq on EITHER side compares as -inf (classic-path
-            # parity: ties with unknown seq go to the delta, and no
-            # NaN comparison may silently drop a key). Both sides are
-            # nullable Int64 by now, so the comparison is exact integer
-            # order across the full int64 range — no float64 detour.
-            cur_tb_f = _as_exact_int64(cur_tb).fillna(TB_SENTINEL)
-            d_tb = _as_exact_int64(merged[tb_col]).fillna(TB_SENTINEL)
-            newer = (merged[ts_col] > cur_ts) | (
-                (merged[ts_col] == cur_ts) & (d_tb >= cur_tb_f)
-            )
-            delta_wins = in_delta & (~has_cur | newer)
         else:
-            delta_wins = in_delta & (~has_cur | (merged[ts_col] >= cur_ts))
+            # a NULL event time on EITHER side compares as -inf (both
+            # NULL: equal), so a NaT comparison — False both ways —
+            # can never make a concrete-ts update lose to a NULL-ts row
+            d_ts = merged[ts_col]
+            d_null, c_null = d_ts.isna(), cur_ts.isna()
+            ts_gt = ~d_null & (c_null | (d_ts > cur_ts).fillna(False))
+            ts_eq = (d_null & c_null) | (d_ts == cur_ts).fillna(False)
+            if cur_tb is not None and tb_col in merged.columns:
+                # null seq on EITHER side compares as -inf too: ties
+                # with unknown seq go to the delta. Both sides are
+                # nullable Int64 by now, so the comparison is exact
+                # integer order across the full int64 range.
+                cur_tb_f = _as_exact_int64(cur_tb).fillna(TB_SENTINEL)
+                d_tb = _as_exact_int64(merged[tb_col]).fillna(TB_SENTINEL)
+                newer = ts_gt | (ts_eq & (d_tb >= cur_tb_f))
+            else:
+                newer = ts_gt | ts_eq
+            delta_wins = in_delta & (~has_cur | newer)
         if OP_COL in merged.columns:
             is_delete = merged[OP_COL].eq("D")
         else:
@@ -371,7 +412,7 @@ def merge_epoch_spj(
         delta = salted_lww_dedup(delta, key_cols, order_cols, n_salts=n_salts)
 
     # Existing payload columns cast to the table's authoritative types
-    # JVM-side (the classic path's align_to_schema contract): type
+    # JVM-side (the table schema wins for existing columns): type
     # drift in the delta (e.g. lang arriving as bigint) must never
     # reach the Arrow kernel, where a dtype/schema mismatch fails
     # serialization instead of casting.

@@ -3,10 +3,10 @@
 ``mapInPandas`` kernels.
 
 The Spark-side machinery — schema, batch shape, partitioning, UDF
-signatures — is real and tested; the actual media decode is STUBBED
-(``decode_image`` raises NotImplementedError: PIL/ffmpeg are not in
-this container) behind a deterministic fake parser so the pipeline is
-end-to-end runnable and oracle-checkable. This mirrors how the engine
+signatures — is real and tested; the media decode is a deterministic
+fake header parse (``parse_fake_header``), so the engine carries no
+codec dependency and the pipeline is end-to-end runnable and
+oracle-checkable. This mirrors how the engine
 treats html (BinaryType payload + vectorized kernel,
 functions/extract.py) — same slot, different media type.
 
@@ -45,16 +45,6 @@ FRAME_SCHEMA = T.StructType(
         T.StructField("frame_md5", T.StringType()),
     ]
 )
-
-
-def decode_image(payload: bytes):
-    """REAL image decode — intentionally unimplemented in this
-    container (no PIL/libjpeg). The fake parser below stands in; swap
-    this in on a cluster image that ships codecs."""
-    raise NotImplementedError(
-        "media codecs not available in this environment; "
-        "use parse_fake_header (deterministic stand-in)"
-    )
 
 
 def dims_from_digest(h: str) -> tuple[int, int]:

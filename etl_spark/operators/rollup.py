@@ -91,7 +91,7 @@ def rollup_domain_stats(
     The commit replaces exactly those rollup buckets (identity
     bucketing: rollup BUCKET_COL == src_bucket), so untouched partial
     files carry forward by manifest reference — the same bucket-granular
-    copy-on-write ``merge_epoch`` uses for pages. A touched src_bucket
+    copy-on-write ``merge_epoch_spj`` uses for pages. A touched src_bucket
     that ends up with zero pages simply writes no partial file and its
     old entry is dropped from the manifest."""
     if epoch in rollup.applied_epochs():

@@ -3,20 +3,19 @@
 label-partitioned search (the IVF-shaped scale path), and
 random-hyperplane LSH bucketing.
 
-The vector math has two interchangeable physical kernels (see
-``VECTOR_KERNEL``): the compact JVM left-fold
-``F.aggregate(zip_with(...))`` over doubles, and an Arrow-batched
-numpy pandas_udf performing the SAME per-dimension IEEE operation
-sequence (bit-identical outputs, pinned by
-tests/test_vector_kernel_parity.py). Three options were measured
-same-session interleaved at sf0.1:
+The vector math is an Arrow-batched numpy pandas_udf: a left fold in
+index order, one vectorized op per dimension per batch — the same
+IEEE operation sequence as the oracle's ``list_sum(list_transform)``,
+so results are bit-identical to a plain left fold (pinned by
+tests/test_vector_kernel_parity.py against a pure-Python one). Three
+kernels were measured in interleaved runs at sf0.1:
 
 * unrolling the fold into 64-term ``F.get`` chains — REJECTED
   (brute-force 0.97->2.27 s, IVF dedup 9.8->39.3 s): Catalyst planning
   + codegen compile cost scales with expression-tree size and repeats
   per Lloyd job;
-* interpreted fold (CodegenFallback, per-element lambda) — the old
-  default;
+* the compact JVM fold ``F.aggregate(zip_with(...))`` — interpreted
+  per element (CodegenFallback);
 * numpy pandas_udf — WINNER (brute-force 0.583->0.518 s, IVF dedup
   6.40->3.27 s, IVF top-k 2.42->1.44 s medians): one vectorized op per
   dimension per Arrow batch amortizes the Python boundary, and the
@@ -35,7 +34,6 @@ query side broadcasts.
 from __future__ import annotations
 
 import hashlib
-import os
 
 # module-level so pandas_udf type-hint strings (PEP 563 in this
 # module) resolve 'pd.Series' against the function globals
@@ -47,59 +45,34 @@ from pyspark.sql import functions as F
 DIM = 64
 N_PLANES = 16
 
-# Which physical kernel computes the vector math: "fold" = the compact
-# JVM higher-order-function fold (interpreted per element,
-# CodegenFallback), "numpy" = an Arrow-batched pandas_udf doing the
-# SAME left fold vectorized across the batch (one numpy op per
-# dimension — bit-identical IEEE operation order, so the two kernels
-# are interchangeable under the hash-exact oracles; pinned by
-# tests/test_vector_kernel_parity.py). Both were A/B-measured
-# same-session at sf0.1 (bench/BASELINE.md round 5): numpy wins ~2x on
-# the Lloyd/assign path and holds even on join-heavy rerank paths, so
-# it is the default; the env override exists for measurement and for
-# Arrow-less fallback.
-VECTOR_KERNEL = os.environ.get("ETL_SPARK_VECTOR_KERNEL", "numpy")
-
-
 def _as_double(col: F.Column) -> F.Column:
     return col.cast("array<double>")
 
 
 def dot(a: F.Column, b: F.Column) -> F.Column:
-    """Deterministic left-fold dot product (index order)."""
+    """Deterministic left-fold dot product (index order); used only by
+    :func:`lsh_signature`."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
 
 
-def norm(a: F.Column) -> F.Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: F.Column, b: F.Column) -> F.Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def _cosine_np_udf():
-    """Arrow-batched cosine: the numpy twin of :func:`cosine`. The
-    accumulation loops over DIMENSIONS (64 vectorized ops per batch),
-    acc = acc + a_i*b_i in index order — the exact IEEE operation
-    sequence of the JVM fold, so results are bit-identical and the
-    SQL-oracle hash checks hold under either kernel.
+    """Arrow-batched cosine. The accumulation loops over DIMENSIONS
+    (64 vectorized ops per batch), acc = acc + a_i*b_i in index order —
+    the exact IEEE operation sequence of a left fold, so the SQL-oracle
+    hash checks hold.
 
-    Null semantics match the fold exactly: a null vector on either
-    side yields NULL (which sorts LAST under the descending top-k
-    windows — a NaN here would sort FIRST and poison every top-k), and
-    a length-mismatched pair yields NULL too (the fold's
-    ``zip_with`` pads the short side with nulls, nulling the sum).
-    A null ELEMENT on either side yields NULL too (the fold's null
-    product nulls its sum); Arrow hands a null element over as NaN, so
-    such rows are nulled after the math. A NaN element cannot be told
-    from a null one on this side of the boundary and yields NULL as
-    well (the fold gives NaN): NaN embeddings are out of contract.
-    Rows are batched per vector length so ragged inputs never crash
-    ``np.stack``. Zero-length/zero-norm vectors are out of contract
-    (both kernels produce a 0/0)."""
+    Null semantics: a null vector on either side yields NULL (which
+    sorts LAST under the descending top-k windows — a NaN here would
+    sort FIRST and poison every top-k), and a length-mismatched pair
+    yields NULL too. A null ELEMENT on either side yields NULL too;
+    Arrow hands a null element over as NaN, so such rows are nulled
+    after the math. A NaN element cannot be told from a null one on
+    this side of the boundary and yields NULL as well: NaN embeddings
+    are out of contract. Rows are batched per vector length so ragged
+    inputs never crash ``np.stack``. Zero-length/zero-norm vectors are
+    out of contract (a 0/0)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -138,13 +111,9 @@ def _cosine_np_udf():
 
 
 def cosine_cols(a: F.Column, b: F.Column) -> F.Column:
-    """Kernel dispatch for the hot cosine paths. The module flag is
-    read at PLAN-BUILD time, so an A/B run flips it mid-session via
-    ``sim.VECTOR_KERNEL = "fold"`` (the env var is read once at
-    import and only sets the initial value)."""
-    if VECTOR_KERNEL == "numpy":
-        return _cosine_np_udf()(a, b)
-    return cosine(a, b)
+    """Cosine similarity of two array<double> columns, NULL on a null,
+    ragged or null-element pair."""
+    return _cosine_np_udf()(a, b)
 
 
 def cosine_pairs(
@@ -323,10 +292,10 @@ def multiprobe_topk(
 
 
 def _sq_dists_np(E, centroids):
-    """(n, k) squared-L2 distances with the SAME left-fold operation
-    order as :func:`_sq_dist_to_literal` — diff, square, accumulate per
-    dimension index — so cell assignments and probe rankings are
-    bit-identical between kernels."""
+    """(n, k) squared-L2 distances as a left fold — diff, square,
+    accumulate per dimension index — the same operation order as the
+    oracle's list_sum(list_transform), so cell assignments and probe
+    rankings are bit-identical to it."""
     import numpy as np
 
     n, d = E.shape
@@ -341,11 +310,10 @@ def _sq_dists_np(E, centroids):
 
 
 def _assign_np_udf(centroids: list[list[float]], cell_ids: list[int]):
-    """numpy twin of the assign expression: argmin over the distance
-    fold, first-minimum (= lowest cell id among the listed order, which
-    is ascending) tiebreak — matching array_position(array_min). A
-    null or wrong-dimension vector assigns a NULL cell, exactly as the
-    fold does (zip_with against the centroid nulls every distance)."""
+    """Nearest-cell assignment: argmin over the distance fold,
+    first-minimum (= lowest cell id among the listed order, which is
+    ascending) tiebreak. A null or wrong-dimension vector assigns a
+    NULL cell."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -375,11 +343,10 @@ def _assign_np_udf(centroids: list[list[float]], cell_ids: list[int]):
 def _probe_np_udf(
     centroids: list[list[float]], cell_ids: list[int], n_probes: int
 ):
-    """numpy twin of :func:`_probe_cells`: per row, cells sorted by
-    (distance, cell id) — np.lexsort is exactly array_sort's
-    struct(d, cell) order — truncated to n_probes. A null or
-    wrong-dimension vector probes NOTHING (null list -> explode drops
-    the row), the sane documented behavior for invalid vectors."""
+    """Per row, cells sorted by (distance, cell id) — np.lexsort over
+    (ids, distance) — truncated to n_probes. A null or wrong-dimension
+    vector probes NOTHING (null list -> explode drops the row), the
+    sane documented behavior for invalid vectors."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -410,17 +377,6 @@ def _probe_np_udf(
     return _probe
 
 
-def _sq_dist_to_literal(vec: F.Column, centroid: list[float]) -> F.Column:
-    """Σ_i (v[i]-c[i])^2 as a deterministic left fold (index order) —
-    the same operation order as the oracle's list_sum(list_transform)."""
-    c = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(vec, c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _probe_cells(
     vec: F.Column,
     centroids: list[list[float]],
@@ -432,20 +388,7 @@ def _probe_cells(
     (squared-L2 fold in index order, ties to the lowest cell id) shared
     by multiprobe search and IVF dedup; a tweak here diverges both
     against their oracles together, never one silently."""
-    if VECTOR_KERNEL == "numpy":
-        return _probe_np_udf(centroids, cell_ids, n_probes)(vec)
-    probe_structs = F.array(
-        *[
-            F.struct(
-                _sq_dist_to_literal(vec, c).alias("d"),
-                F.lit(int(cid)).alias("cell"),
-            )
-            for cid, c in zip(cell_ids, centroids)
-        ]
-    )
-    return F.transform(
-        F.slice(F.array_sort(probe_structs), 1, n_probes), lambda s: s["cell"]
-    )
+    return _probe_np_udf(centroids, cell_ids, n_probes)(vec)
 
 
 def kmeans_cells(
@@ -515,20 +458,10 @@ def kmeans_cells(
     ]
 
     def assign(frame: DataFrame) -> DataFrame:
-        if VECTOR_KERNEL == "numpy":
-            kernel = _assign_np_udf(
-                [c for _, c in centroids], [cid for cid, _ in centroids]
-            )
-            return frame.withColumn("cell", kernel(F.col("e")))
-        dists = F.array(
-            *[_sq_dist_to_literal(F.col("e"), c) for _, c in centroids]
+        kernel = _assign_np_udf(
+            [c for _, c in centroids], [cid for cid, _ in centroids]
         )
-        cells = F.array(*[F.lit(cid) for cid, _ in centroids])
-        # first position of the minimum -> lowest cell id wins ties
-        return frame.withColumn(
-            "cell",
-            F.element_at(cells, F.array_position(dists, F.array_min(dists)).cast("int")),
-        )
+        return frame.withColumn("cell", kernel(F.col("e")))
 
     for _ in range(iters):
         assigned = assign(train)

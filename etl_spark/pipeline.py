@@ -1,5 +1,6 @@
-"""The end-to-end ingest pipeline: tail -> clean -> dedup -> extract ->
-merge -> rollup -> lineage, one epoch per call.
+"""The end-to-end ingest pipeline: tail -> clean -> stats -> merge
+(dedup -> extract -> arbitrate, one grouped-map pass) -> rollup ->
+lineage, one epoch per call.
 
 This is the Spark re-expression of the reference's per-day load
 (/root/reference/main.py:98-147: ensure file -> clean -> build
@@ -7,8 +8,8 @@ trajectories -> load dims+facts -> rollups -> audit -> commit), with
 each stage a DataFrame transformation and one atomic snapshot commit
 per epoch instead of one SQL transaction per day.
 
-Stage ordering is a scale decision: dedup BEFORE extract so the
-Arrow kernel decodes each surviving key once (losers at 10^10 events
+Stage ordering is a scale decision: the merge kernel dedups BEFORE it
+extracts, so each surviving key is decoded once (losers at 10^10 events
 would otherwise dominate CPU), mirroring the reference's own
 clean-before-build ordering (cheap filters first).
 """
@@ -22,18 +23,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_spark import schema as S
-from etl_spark.functions.extract import with_extracted_text
 from etl_spark.lake.table import BUCKET_COL, LakeTable
 from etl_spark.lineage import LineageLog
 from etl_spark.operators.clean import clean_changes
-from etl_spark.operators.dedup import (
-    delta_stats,
-    hot_key_histogram,
-    lww_dedup,
-    salted_lww_dedup,
-)
-from etl_spark.operators.merge import merge_epoch, MergeStats
-from etl_spark.operators.merge_spj import merge_epoch_spj
+from etl_spark.operators.dedup import delta_stats
+from etl_spark.operators.merge_spj import MergeStats, merge_epoch_spj
 from etl_spark.operators.rollup import rollup_domain_stats
 
 PAGES = "pages"
@@ -92,7 +86,6 @@ def ingest_epoch(
     hot_threshold: int = 100_000,
     with_lineage: bool = True,
     with_rollup: bool = True,
-    strategy: str = "spj",
 ) -> MergeStats:
     """Apply one epoch of change events, exactly once.
 
@@ -101,10 +94,6 @@ def ingest_epoch(
     the epoch — re-running any prefix or suffix of epochs converges to
     the same table state (north rule).
     """
-    if strategy not in ("spj", "classic"):
-        raise ValueError(
-            f"unknown merge strategy {strategy!r}: expected 'spj' or 'classic'"
-        )
     log = LineageLog(wh.lineage if with_lineage else None)
 
     if epoch in wh.pages.applied_epochs():
@@ -139,9 +128,8 @@ def ingest_epoch(
             cleaned = clean_changes(delta)
 
         # Light stats pre-pass (one aggregation, <= n_buckets rows to the
-        # driver): touched buckets + key count + hottest-key size. Replaces
-        # the per-stage histogram collect AND the cached-winners discovery —
-        # the epoch payload is streamed exactly once (the merge write).
+        # driver): touched buckets + key count + hottest-key size, so the
+        # epoch payload is streamed exactly once (the merge write).
         snap = wh.pages.snapshot()
         with log.stage(epoch, "stats") as rec:
             st = delta_stats(
@@ -150,50 +138,19 @@ def ingest_epoch(
             touched, n_keys, max_key_n = st.touched, st.n_keys, st.max_key_n
             rec["rows_out"] = n_keys
 
-        hot = max_key_n >= hot_threshold
-        if strategy == "spj":
-            # single-shuffle grouped-map merge: dedup + extract + current-
-            # side read + arbitration all inside one bucket-partitioned pass
-            with log.stage(epoch, "merge") as rec:
-                stats = merge_epoch_spj(
-                    spark,
-                    wh.pages,
-                    cleaned,
-                    epoch,
-                    touched_buckets=touched,
-                    delta_rows=n_keys,
-                    hot=hot,
-                )
-                rec["rows_out"] = stats.delta_rows
-        else:
-            with log.stage(epoch, "dedup") as rec:
-                if hot:
-                    # one extra (key, count) shuffle for the hot-key
-                    # identities so ONLY those keys pay the two-phase
-                    # salt; cold keys keep the single-shuffle path
-                    hot_keys = hot_key_histogram(
-                        cleaned, ["url"], hot_threshold
-                    )
-                    winners = salted_lww_dedup(
-                        cleaned, ["url"], ["warc_ts", "seq"], hot_keys=hot_keys
-                    )
-                else:
-                    winners = lww_dedup(cleaned, ["url"], ["warc_ts", "seq"])
-
-            with log.stage(epoch, "extract") as rec:
-                extracted = with_extracted_text(winners)
-
-            with log.stage(epoch, "merge") as rec:
-                stats = merge_epoch(
-                    spark,
-                    wh.pages,
-                    extracted,
-                    epoch,
-                    pre_deduped=True,
-                    touched_buckets=touched,
-                    delta_rows=n_keys,
-                )
-                rec["rows_out"] = stats.delta_rows
+        # single-shuffle grouped-map merge: dedup + extract + current-side
+        # read + arbitration all inside one bucket-partitioned pass
+        with log.stage(epoch, "merge") as rec:
+            stats = merge_epoch_spj(
+                spark,
+                wh.pages,
+                cleaned,
+                epoch,
+                touched_buckets=touched,
+                delta_rows=n_keys,
+                hot=max_key_n >= hot_threshold,
+            )
+            rec["rows_out"] = stats.delta_rows
 
         if with_rollup:
             with log.stage(epoch, "rollup") as rec:

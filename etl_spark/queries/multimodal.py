@@ -1,7 +1,7 @@
 """Multimodal-column queries: binary payloads + Arrow-batched
 mapInPandas kernels (operators/multimodal.py). The "image decode" is a
-deterministic fake-header parse (real codecs aren't in this container —
-decode_image raises NotImplementedError by design); the Spark plumbing
+deterministic fake-header parse (the engine carries no codec
+dependency); the Spark plumbing
 (BinaryType columns, mapInPandas batch shape, 1->N frame fan-out,
 typed output schemas) is real and oracle-checked via md5 arithmetic.
 """

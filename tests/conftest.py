@@ -22,3 +22,11 @@ def tmp_wh(tmp_path):
     root = str(tmp_path / "wh")
     yield root
     shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.fixture(params=["spj"])
+def merge_path(request):
+    """Names the merge path a table-state test drives, as its ``[spj]``
+    id. The SPJ grouped-map merge (operators/merge_spj.py) is the only
+    merge the engine has, so there is one value."""
+    return request.param

@@ -1,6 +1,7 @@
 """Round-4 hardening: the optimistic-concurrency commit guard, the
-manifest-pruned tombstone GC, lineage-table schema self-evolution, and
-the null-safe hot-key routing contract.
+manifest-pruned tombstone GC, lineage-table schema self-evolution, null
+keys in the salted dedup, and the merge kernel's tie-break column type
+contract.
 
 The commit races are made deterministic by intercepting the atomic
 publish step: the first publisher is pre-empted by a full competing
@@ -42,11 +43,11 @@ def _race_once(monkeypatch, competing):
     orig = LakeTable._publish
     state = {"armed": True}
 
-    def pre_empted(self, snap):
+    def pre_empted(self, snap, added):
         if state["armed"]:
             state["armed"] = False  # the competitor publishes normally
             competing()
-        return orig(self, snap)
+        return orig(self, snap, added)
 
     monkeypatch.setattr(LakeTable, "_publish", pre_empted)
 
@@ -186,15 +187,14 @@ def _cdc(spark, rows):
     )
 
 
-@pytest.mark.parametrize("strategy", ["classic", "spj"])
-def test_merge_records_tombstone_stats(spark, tmp_path, strategy):
-    wh = Warehouse.init(str(tmp_path / f"wh_{strategy}"), n_buckets=2)
+def test_merge_records_tombstone_stats(spark, tmp_path, merge_path):
+    wh = Warehouse.init(str(tmp_path / f"wh_{merge_path}"), n_buckets=2)
     e0 = _cdc(spark, [
         (1, 0, "I", "https://x.example/a", "2024-01-01 00:00:00", b"<p>a</p>", None),
         (2, 0, "D", "https://x.example/a", "2024-01-02 00:00:00", None, None),
         (3, 0, "I", "https://x.example/b", "2024-01-03 00:00:00", b"<p>b</p>", None),
     ])
-    ingest_epoch(spark, wh, e0, 0, strategy=strategy, with_rollup=False)
+    ingest_epoch(spark, wh, e0, 0, with_rollup=False)
     stats = wh.pages.snapshot().tombstone_stats
     assert stats.get("col") == "warc_ts"
     buckets = stats["buckets"]
@@ -299,71 +299,22 @@ def test_lineage_table_evolves_on_flush(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Null-safe hot-key routing (ADVICE #1)
+# Null keys in the salted dedup (ADVICE #1)
 # ---------------------------------------------------------------------------
 
 
-def _dirty(spark):
-    return spark.createDataFrame(
-        [
-            ("u1", 1, "a"),
-            ("u1", 2, "b"),
-            ("u2", 1, "c"),
-            (None, 1, "d"),
-            (None, 3, "e"),
-        ],
-        "url string, seq long, payload string",
-    )
-
-
-def test_salted_dedup_null_key_rows_route_to_cold(spark):
-    """A NULL key must not vanish from both branches of the hot/cold
-    split: salted+hot_keys output == plain lww_dedup output."""
-    from etl_spark.operators.dedup import lww_dedup, salted_lww_dedup
-
-    df = _dirty(spark)
-    plain = {
-        (r.url, r.seq, r.payload)
-        for r in lww_dedup(df, ["url"], ["seq"]).collect()
-    }
-    routed = {
-        (r.url, r.seq, r.payload)
-        for r in salted_lww_dedup(
-            df, ["url"], ["seq"], hot_keys=[("u1",)]
-        ).collect()
-    }
-    assert routed == plain
-    assert (None, 3, "e") in routed  # the null-key group's winner
-
-
-def test_salted_dedup_null_in_hot_key_list(spark):
-    """hot_key_histogram can legitimately return a (None,) key on a
-    dirty stream; it must route to the hot branch without nulling the
-    predicate for every cold key (the reproduced 3-keys-in-1-out bug)."""
-    from etl_spark.operators.dedup import lww_dedup, salted_lww_dedup
-
-    df = _dirty(spark)
-    plain = {
-        (r.url, r.seq) for r in lww_dedup(df, ["url"], ["seq"]).collect()
-    }
-    for hot in ([(None,)], [("u1",), (None,)]):
-        routed = {
-            (r.url, r.seq)
-            for r in salted_lww_dedup(
-                df, ["url"], ["seq"], hot_keys=hot
-            ).collect()
-        }
-        assert routed == plain, hot
-
-
 def test_salted_dedup_multicol_null_safe(spark):
+    """Multi-column keys with NULL parts (and a NULL salt source) keep
+    one winner per key group: salted output == plain lww_dedup output."""
     from etl_spark.operators.dedup import lww_dedup, salted_lww_dedup
 
     df = spark.createDataFrame(
         [
             ("u1", "en", 1),
             ("u1", None, 2),
+            ("u1", None, 4),
             (None, None, 3),
+            (None, None, None),
         ],
         "url string, lang string, seq long",
     )
@@ -371,25 +322,14 @@ def test_salted_dedup_multicol_null_safe(spark):
         (r.url, r.lang, r.seq)
         for r in lww_dedup(df, ["url", "lang"], ["seq"]).collect()
     }
-    routed = {
+    salted = {
         (r.url, r.lang, r.seq)
         for r in salted_lww_dedup(
-            df, ["url", "lang"], ["seq"], hot_keys=[("u1", None)]
+            df, ["url", "lang"], ["seq"], n_salts=4
         ).collect()
     }
-    assert routed == plain
-
-
-def test_adaptive_dedup_dirty_stream_preserves_all_keys(spark):
-    """The end-to-end ADVICE repro: adaptive dedup with a hot threshold
-    of 1 (everything 'hot', histogram includes the null key) must keep
-    every key group."""
-    from etl_spark.operators.dedup import adaptive_lww_dedup
-
-    out = adaptive_lww_dedup(
-        _dirty(spark), ["url"], ["seq"], hot_threshold=1
-    )
-    assert out.count() == 3
+    assert salted == plain
+    assert salted == {("u1", "en", 1), ("u1", None, 4), (None, None, 3)}
 
 
 # ---------------------------------------------------------------------------

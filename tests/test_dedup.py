@@ -9,8 +9,6 @@ import pytest
 from pyspark.sql import types as T
 
 from etl_spark.operators.dedup import (
-    adaptive_lww_dedup,
-    hot_key_histogram,
     lww_dedup,
     lww_dedup_window,
     salted_lww_dedup,
@@ -52,9 +50,8 @@ EXPECTED = {("u1", "new"), ("u2", "winner"), ("u3", "dup-wins")}
         lww_dedup,
         lww_dedup_window,
         lambda df, k, o: salted_lww_dedup(df, k, o, n_salts=4),
-        lambda df, k, o: adaptive_lww_dedup(df, k, o, hot_threshold=2),
     ],
-    ids=["agg", "window", "salted", "adaptive"],
+    ids=["agg", "window", "salted"],
 )
 def test_lww_variants_agree(spark, fn):
     out = fn(_changes(spark), ["url"], ["warc_ts", "seq"])
@@ -76,13 +73,6 @@ def test_salted_equals_plain_on_skewed_data(spark):
     # winner = max ts (minute 59), max seq among those
     want_seq = max(i for i in range(500) if i % 60 == 59)
     assert ("hot", f"p{want_seq}") in plain
-
-
-def test_hot_key_histogram(spark):
-    rows = [("hot", TS(1), i, "x") for i in range(50)] + [("cold", TS(1), 99, "y")]
-    df = spark.createDataFrame(rows, SCHEMA)
-    hot = hot_key_histogram(df, ["url"], threshold_rows=10)
-    assert hot == [("hot",)]
 
 
 # ---------------------------------------------------------------------------
@@ -449,32 +439,6 @@ def test_ivf_dedup_pairs_forwards_dim(spark):
     for r in pairs:
         assert r.a_id % 2 == r.b_id % 2  # never across blobs
         assert r.cosine >= 0.99
-
-
-def test_salted_hot_key_split_equals_unsplit(spark):
-    """hot_keys routing is a pure execution-plan choice: winners must be
-    identical whether every key is salted, only the hot key is salted
-    (cold keys on the single-shuffle path), or nothing is salted."""
-    df = _changes(spark)
-    want = {
-        (r.url, r.payload)
-        for r in lww_dedup(df, ["url"], ["warc_ts", "seq"]).collect()
-    }
-    split = {
-        (r.url, r.payload)
-        for r in salted_lww_dedup(
-            df, ["url"], ["warc_ts", "seq"], n_salts=4, hot_keys=[("u1",)]
-        ).collect()
-    }
-    assert split == want
-    # a hot_keys list naming NO present key degenerates to plain lww
-    none_hot = {
-        (r.url, r.payload)
-        for r in salted_lww_dedup(
-            df, ["url"], ["warc_ts", "seq"], n_salts=4, hot_keys=[("absent",)]
-        ).collect()
-    }
-    assert none_hot == want
 
 
 def test_jaccard_cap_recounts_denominator(spark):

@@ -1,8 +1,8 @@
 """Regression pins for review findings on the maintenance/merge paths:
 
 1. a null delta-side seq in an equal-timestamp arbitration must never
-   make delta_wins NULL (which dropped BOTH rows from the classic
-   merge — silent data loss on the public, clean-bypassing API);
+   make the delta lose or drop the key (silent data loss on the public,
+   clean-bypassing merge API);
 2. compact_files on the identity-bucketed rollup table must preserve
    the manifest layout its bucket-granular epoch commits depend on;
 3. a rollup table written in a pre-identity (hash-bucketed) layout
@@ -16,7 +16,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_spark.lake.table import BUCKET_COL, bucket_expr
-from etl_spark.operators.merge import merge_epoch
 from etl_spark.operators.merge_spj import merge_epoch_spj
 from etl_spark.operators.rollup import (
     compute_partials,
@@ -39,22 +38,18 @@ def _df(spark, rows):
     )
 
 
-@pytest.mark.parametrize("strategy", ["classic", "spj"])
-def test_null_seq_equal_ts_never_drops_the_key(spark, tmp_path, strategy):
+def test_null_seq_equal_ts_never_drops_the_key(spark, tmp_path, merge_path):
     """Direct merge API (clean() is bypassed): equal warc_ts, delta seq
     NULL vs stored seq 5 -> the null side compares as -inf, the stored
     row survives, and the key never vanishes."""
-    wh = Warehouse.init(str(tmp_path / f"wh_{strategy}"), n_buckets=2)
+    wh = Warehouse.init(str(tmp_path / f"wh_{merge_path}"), n_buckets=2)
     url = "https://n.example/tie"
     ts = "2024-01-01 00:00:00"
     e0 = _df(spark, [(5, 0, "I", url, ts, b"<p>stored</p>", None)])
-    ingest_epoch(spark, wh, e0, 0, strategy=strategy, with_rollup=False)
+    ingest_epoch(spark, wh, e0, 0, with_rollup=False)
 
     null_seq = _df(spark, [(None, 1, "U", url, ts, b"<p>null-seq</p>", None)])
-    if strategy == "classic":
-        merge_epoch(spark, wh.pages, null_seq, 1, pre_deduped=True)
-    else:
-        merge_epoch_spj(spark, wh.pages, null_seq, 1)
+    merge_epoch_spj(spark, wh.pages, null_seq, 1)
 
     rows = wh.pages.read(spark).collect()
     assert len(rows) == 1, "key vanished: NULL arbitration dropped both rows"
@@ -194,27 +189,17 @@ def test_rebucket_crash_window_full_refreshes_rollup(spark, tmp_path):
     assert wh.rollup.snapshot().summary.get("layout") == layout_stamp(16)
 
 
-def test_unknown_strategy_rejected(spark, tmp_path):
-    """A typo'd strategy must fail loudly, not silently run classic."""
-    wh = Warehouse.init(str(tmp_path / "wh"), n_buckets=2)
-    delta = _df(spark, [(1, 0, "I", "https://s.example/x",
-                         "2024-01-01 00:00:00", b"<p>x</p>", None)])
-    with pytest.raises(ValueError, match="strategy"):
-        ingest_epoch(spark, wh, delta, 0, strategy="SPJ")
-
-
-@pytest.mark.parametrize("strategy", ["classic", "spj"])
-def test_empty_epoch_rollup_is_metadata_only(spark, tmp_path, strategy):
+def test_empty_epoch_rollup_is_metadata_only(spark, tmp_path, merge_path):
     """An epoch whose delta cleans down to zero rows must not trigger a
     full rollup rebuild: both commits are metadata-only (epoch recorded,
     every data file carried forward by reference)."""
-    wh = Warehouse.init(str(tmp_path / f"wh_{strategy}"), n_buckets=8)
+    wh = Warehouse.init(str(tmp_path / f"wh_{merge_path}"), n_buckets=8)
     prov = epoch_provider(spark, SF_DIR, evolve_epoch=2)
-    ingest_epoch(spark, wh, prov, 0, strategy=strategy)
+    ingest_epoch(spark, wh, prov, 0)
     pages_files = wh.pages.snapshot().files
     rollup_files = wh.rollup.snapshot().files
     empty = _df(spark, [])
-    ingest_epoch(spark, wh, lambda e: empty, 1, strategy=strategy)
+    ingest_epoch(spark, wh, lambda e: empty, 1)
     assert 1 in wh.pages.applied_epochs()
     assert 1 in wh.rollup.applied_epochs()
     assert wh.pages.snapshot().files == pages_files
@@ -246,11 +231,16 @@ def test_merge_null_primary_order_col_never_drops_key(spark, tmp_path):
         ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
 
     # stored row with NULL ts; a concrete-ts delta must beat it
-    merge_epoch(spark, t, delta([("a", None, 1, "old", "I")]), 0, pre_deduped=True)
-    merge_epoch(spark, t, delta([("a", "2024-01-01 00:00:00", 2, "new", "U")]), 1, pre_deduped=True)
+    merge_epoch_spj(spark, t, delta([("a", None, 1, "old", "I")]), 0)
+    merge_epoch_spj(spark, t, delta([("a", "2024-01-01 00:00:00", 2, "new", "U")]), 1)
     rows = {r.k: r.v for r in t.read(spark).collect()}
     assert rows == {"a": "new"}
     # and the reverse: a NULL-ts delta loses but never erases the key
-    merge_epoch(spark, t, delta([("a", None, 3, "late-null", "U")]), 2, pre_deduped=True)
+    merge_epoch_spj(spark, t, delta([("a", None, 3, "late-null", "U")]), 2)
     rows = {r.k: (r.v, r.seq) for r in t.read(spark).collect()}
     assert rows == {"a": ("new", 2)}
+    # both sides NULL: equal ts, so the higher seq wins the tie
+    merge_epoch_spj(spark, t, delta([("b", None, 4, "b-old", "I")]), 3)
+    merge_epoch_spj(spark, t, delta([("b", None, 5, "b-new", "U")]), 4)
+    rows = {r.k: r.v for r in t.read(spark).collect()}
+    assert rows == {"a": "new", "b": "b-new"}

@@ -1,7 +1,7 @@
-"""The single-shuffle SPJ merge must be observationally identical to
-the classic multi-shuffle merge: same final table state on the full
-fixture change log (I/U/D, LWW dups, stale late events, schema
-evolution), same delete semantics when a bucket empties."""
+"""The single-shuffle SPJ merge, epoch by epoch, must reach the state
+of a one-shot JVM last-writer-wins fold over the whole fixture change
+log (I/U/D, LWW dups, stale late events, schema evolution), and keep
+its delete semantics when a bucket empties."""
 
 from __future__ import annotations
 
@@ -22,17 +22,27 @@ def _state(spark, wh):
     )
 
 
-def test_spj_equals_classic(spark, tmp_path):
-    states = {}
-    for strategy in ("classic", "spj"):
-        wh = Warehouse.init(str(tmp_path / f"wh_{strategy}"))
-        prov = epoch_provider(spark, SF_DIR, evolve_epoch=2)
-        ingest_range(
-            spark, wh, prov, range(3), strategy=strategy, with_rollup=False
-        )
-        states[strategy] = _state(spark, wh)
-    assert states["spj"] == states["classic"]
-    assert len(states["spj"]) > 0
+def test_spj_equals_one_shot_fold(spark, tmp_path):
+    """Three SPJ epochs == lww_dedup over the cleaned log in one pass
+    (the cdc_lww_winners fold), D winners removed, text extracted."""
+    from etl_spark.functions.extract import with_extracted_text
+    from etl_spark.operators.clean import clean_changes
+    from etl_spark.operators.dedup import lww_dedup
+    from etl_spark.sources.changelog import changes_from_documents
+
+    wh = Warehouse.init(str(tmp_path / "wh"))
+    prov = epoch_provider(spark, SF_DIR, evolve_epoch=2)
+    ingest_range(spark, wh, prov, range(3), with_rollup=False)
+
+    log = changes_from_documents(spark, SF_DIR, evolve_epoch=2)
+    winners = lww_dedup(clean_changes(log), ["url"], ["warc_ts", "seq"])
+    fold = with_extracted_text(winners.filter(F.col("op") != "D")).collect()
+    expected = sorted(
+        (r.url, r.warc_ts, bytes(r.html) if r.html else None, r.text, r.lang)
+        for r in fold
+    )
+    assert _state(spark, wh) == expected
+    assert len(expected) > 0
 
 
 def test_spj_delete_empties_bucket(spark, tmp_path):
@@ -60,9 +70,9 @@ def test_spj_delete_empties_bucket(spark, tmp_path):
 
     from etl_spark.pipeline import ingest_epoch
 
-    ingest_epoch(spark, wh, lambda e: ins, 0, with_rollup=False, strategy="spj")
+    ingest_epoch(spark, wh, lambda e: ins, 0, with_rollup=False)
     assert wh.pages.row_count(spark) == 2
-    ingest_epoch(spark, wh, lambda e: dels, 1, with_rollup=False, strategy="spj")
+    ingest_epoch(spark, wh, lambda e: dels, 1, with_rollup=False)
     assert wh.pages.row_count(spark) == 0
     # delete markers retained (hidden) so late older events cannot resurrect
     tombs = wh.pages.read(spark, include_deleted=True).collect()
@@ -91,15 +101,14 @@ def test_spj_hot_path_matches(spark, tmp_path):
     assert _state(spark, wh_hot) == _state(spark, wh_cold)
 
 
-@pytest.mark.parametrize("strategy", ["classic", "spj"])
-def test_equal_ts_cross_epoch_arbitrates_by_seq(spark, tmp_path, strategy):
+def test_equal_ts_cross_epoch_arbitrates_by_seq(spark, tmp_path, merge_path):
     """An equal-timestamp event arriving in a LATER epoch with a LOWER
     seq must lose to the stored row — the global LWW order is the
     lexicographic (warc_ts, seq) tuple, not arrival order. The stored
     seq column exists precisely for this."""
     from etl_spark.pipeline import ingest_epoch
 
-    wh = Warehouse.init(str(tmp_path / f"wh_{strategy}"), n_buckets=2)
+    wh = Warehouse.init(str(tmp_path / f"wh_{merge_path}"), n_buckets=2)
     ts = "2024-01-01 00:00:00"
     schema = (
         "seq long, epoch long, op string, url string, warc_ts string, "
@@ -118,13 +127,13 @@ def test_equal_ts_cross_epoch_arbitrates_by_seq(spark, tmp_path, strategy):
         [(12, 2, "U", url, ts, b"<p>winner seq12</p>", None)], schema
     ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
 
-    ingest_epoch(spark, wh, e0, 0, strategy=strategy, with_rollup=False)
-    ingest_epoch(spark, wh, e1, 1, strategy=strategy, with_rollup=False)
+    ingest_epoch(spark, wh, e0, 0, with_rollup=False)
+    ingest_epoch(spark, wh, e1, 1, with_rollup=False)
     row = wh.pages.read(spark).collect()[0]
     assert row.text == "winner seq10"
     assert row.seq == 10
 
-    ingest_epoch(spark, wh, e2, 2, strategy=strategy, with_rollup=False)
+    ingest_epoch(spark, wh, e2, 2, with_rollup=False)
     row = wh.pages.read(spark).collect()[0]
     assert row.text == "winner seq12"
     assert row.seq == 12

@@ -161,7 +161,7 @@ def test_lineage_rows_written(spark, tmp_wh):
     wh = _ingest_all(spark, tmp_wh)
     lin = wh.lineage.read(spark)
     stages = {r.stage for r in lin.select("stage").distinct().collect()}
-    # SPJ strategy: dedup + extract run inside the grouped-map merge
+    # dedup + extract run inside the grouped-map merge stage
     assert {"clean", "stats", "merge", "rollup", "metrics"} <= stages
     assert lin.filter(F.col("epoch") == 0).count() >= 4
     # the per-epoch throughput/lag row (north rule: "throughput/lag

@@ -42,11 +42,11 @@ def _race_once(monkeypatch, competing):
     orig = LakeTable._publish
     state = {"armed": True}
 
-    def pre_empted(self, snap):
+    def pre_empted(self, snap, added):
         if state["armed"]:
             state["armed"] = False
             competing()
-        return orig(self, snap)
+        return orig(self, snap, added)
 
     monkeypatch.setattr(LakeTable, "_publish", pre_empted)
 
@@ -194,6 +194,82 @@ def test_expire_snapshots_keeps_rebased_losers_data(spark, tmp_path, monkeypatch
 
 
 # ---------------------------------------------------------------------------
+# Orphan sweep vs a slow writer: a claim is aged by its newest activity,
+# and a publish whose data files were swept fails instead of landing.
+# ---------------------------------------------------------------------------
+
+
+def test_orphan_sweep_mid_commit_fails_the_commit_loudly(
+    spark, tmp_path, monkeypatch
+):
+    """A writer slower than the grace: while it computes write stats, a
+    concurrent commit moves HEAD past its claim and an orphan sweep
+    deletes its data files. Its rebased publish must raise, never
+    leave a snapshot naming missing files; a re-run then lands."""
+    from pyspark.sql import functions as F
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.StringType(), True),
+            T.StructField("warc_ts", T.TimestampType(), True),
+        ]
+    )
+    t = LakeTable.create(str(tmp_path / "t"), schema, ["k"], n_buckets=2)
+    df = (
+        spark.createDataFrame([("a", "2024-01-01 00:00:00")], "k string, ts string")
+        .select("k", F.to_timestamp("ts").alias("warc_ts"))
+        .withColumn("_bucket", bucket_expr(["k"], 2))
+    )
+    orig = LakeTable._scan_write_stats
+    state = {"armed": True}
+
+    def slow_stats(self, *args):
+        out = orig(self, *args)
+        if state["armed"]:
+            state["armed"] = False
+            t.commit(None, summary={"operation": "concurrent"})
+            t.expire_snapshots(keep_last=10, orphan_grace_s=0)
+        return out
+
+    monkeypatch.setattr(LakeTable, "_scan_write_stats", slow_stats)
+    with pytest.raises(CommitConflictError, match="orphan sweep"):
+        t.commit(df, touched_buckets=[0, 1], event_time_col="warc_ts")
+    for v in t.versions():
+        for paths in t.snapshot(v).files.values():
+            for p in paths:
+                assert os.path.exists(os.path.join(t.root, p)), (v, p)
+
+    monkeypatch.setattr(LakeTable, "_scan_write_stats", orig)
+    t.commit(df, touched_buckets=[0, 1], event_time_col="warc_ts")
+    assert [r.k for r in t.read(spark).collect()] == ["a"]
+
+
+def test_orphan_sweep_ages_claim_by_its_data_dir(tmp_path):
+    """An old claim whose data dir is still being written is not
+    abandoned: the sweep ages it by the newest mtime among the claim
+    and its data files, and sweeps it once both are past the grace."""
+    t = _mk_table(tmp_path)
+    claim = t._snap_path(1) + ".claim"
+    open(claim, "w").close()
+    data_file = os.path.join(t._data_dir(1), "_pdir=0", "part-0.parquet")
+    os.makedirs(os.path.dirname(data_file))
+    open(data_file, "w").close()
+    t.commit(None, summary={"operation": "noise"})  # HEAD moves past v1
+    assert t.head_version() > 1
+
+    old = os.path.getmtime(claim) - 7200
+    os.utime(claim, (old, old))
+    t.expire_snapshots(keep_last=10, orphan_grace_s=3600)
+    assert os.path.exists(claim) and os.path.exists(data_file)
+
+    for path in (data_file, os.path.dirname(data_file), t._data_dir(1)):
+        os.utime(path, (old, old))
+    t.expire_snapshots(keep_last=10, orphan_grace_s=3600)
+    assert not os.path.exists(claim) and not os.path.exists(data_file)
+
+
+
+# ---------------------------------------------------------------------------
 # ADVICE low #2: LineageLog.metrics must not fold prior metrics rows
 # into the seconds sum, and zero-duration throughput is a defined 0.0.
 # ---------------------------------------------------------------------------
@@ -315,13 +391,13 @@ def test_rollup_full_refresh_retries_lost_race(spark, tmp_path, monkeypatch):
     orig = LakeTable._publish
     state = {"armed": True}
 
-    def pre_empted(self, snap):
+    def pre_empted(self, snap, added):
         if state["armed"] and self.root == wh.rollup.root and snap.summary.get(
             "operation"
         ) == "rollup":
             state["armed"] = False
             competing()
-        return orig(self, snap)
+        return orig(self, snap, added)
 
     monkeypatch.setattr(LakeTable, "_publish", pre_empted)
     ingest_epoch(spark, wh, delta, 0)  # must not raise

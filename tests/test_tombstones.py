@@ -12,7 +12,6 @@ marker makes final state a pure function of the event set.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from etl_spark.pipeline import Warehouse, ingest_epoch
@@ -47,7 +46,7 @@ EVENTS = [
 ]
 
 
-def _run_split(spark, root, split, strategy):
+def _run_split(spark, root, split):
     """Ingest EVENTS as epochs given by contiguous ``split`` boundaries."""
     wh = Warehouse.init(root, n_buckets=2)
     lo = 0
@@ -56,18 +55,15 @@ def _run_split(spark, root, split, strategy):
             (seq, e, op, url, ts, html, None)
             for seq, op, url, ts, html in EVENTS[lo:hi]
         ]
-        ingest_epoch(
-            spark, wh, _df(spark, chunk), e, strategy=strategy, with_rollup=False
-        )
+        ingest_epoch(spark, wh, _df(spark, chunk), e, with_rollup=False)
         lo = hi
     return wh
 
 
-@pytest.mark.parametrize("strategy", ["classic", "spj"])
-def test_late_event_after_delete_does_not_resurrect(spark, tmp_path, strategy):
+def test_late_event_after_delete_does_not_resurrect(spark, tmp_path, merge_path):
     """The minimal divergence case: [I, D] applied, then the late I
     arrives alone in the next epoch. The stored tombstone must win."""
-    wh = Warehouse.init(str(tmp_path / f"wh_{strategy}"), n_buckets=2)
+    wh = Warehouse.init(str(tmp_path / f"wh_{merge_path}"), n_buckets=2)
     url = "https://x.example/a"
     e0 = _df(spark, [
         (1, 0, "I", url, "2024-01-02 00:00:00", b"<p>v1</p>", None),
@@ -76,33 +72,29 @@ def test_late_event_after_delete_does_not_resurrect(spark, tmp_path, strategy):
     e1 = _df(spark, [
         (3, 1, "I", url, "2024-01-01 00:00:00", b"<p>late</p>", None),
     ])
-    ingest_epoch(spark, wh, e0, 0, strategy=strategy, with_rollup=False)
-    ingest_epoch(spark, wh, e1, 1, strategy=strategy, with_rollup=False)
+    ingest_epoch(spark, wh, e0, 0, with_rollup=False)
+    ingest_epoch(spark, wh, e1, 1, with_rollup=False)
     assert wh.pages.row_count(spark) == 0  # still deleted
     # the marker carries the delete's order tuple, not the late event's
     tomb = wh.pages.read(spark, include_deleted=True).collect()[0]
     assert tomb._deleted and tomb.seq == 2
 
 
-@pytest.mark.parametrize("strategy", ["classic", "spj"])
-def test_final_state_invariant_across_epoch_splits(spark, tmp_path, strategy):
+def test_final_state_invariant_across_epoch_splits(spark, tmp_path, merge_path):
     """Every contiguous split of the ordered change log into epochs
     (including the boundary falling exactly between D and the late I)
     converges to the same visible state."""
     splits = [(), (2,), (3,), (1, 3), (1, 2, 3)]
     states = []
     for i, split in enumerate(splits):
-        wh = _run_split(
-            spark, str(tmp_path / f"wh_{strategy}_{i}"), split, strategy
-        )
+        wh = _run_split(spark, str(tmp_path / f"wh_{merge_path}_{i}"), split)
         states.append(_visible(spark, wh))
     assert all(s == states[0] for s in states[1:])
     # and the converged state is the global LWW fold: only /b lives
     assert [u for u, _, _ in states[0]] == ["https://x.example/b"]
 
 
-@pytest.mark.parametrize("strategy", ["classic", "spj"])
-def test_expire_tombstones_mid_stream_gc_boundary(spark, tmp_path, strategy):
+def test_expire_tombstones_mid_stream_gc_boundary(spark, tmp_path, merge_path):
     """The GC/correctness boundary, end to end: expire_tombstones runs
     BETWEEN epochs with horizon H. A marker with warc_ts >= H survives
     GC, so a late event older than that marker still loses; a genuinely
@@ -112,7 +104,7 @@ def test_expire_tombstones_mid_stream_gc_boundary(spark, tmp_path, strategy):
     The maintenance op itself must land in the lineage audit trail."""
     from etl_spark.pipeline import expire_warehouse_tombstones
 
-    wh = Warehouse.init(str(tmp_path / f"wh_{strategy}"), n_buckets=2)
+    wh = Warehouse.init(str(tmp_path / f"wh_{merge_path}"), n_buckets=2)
     a, b = "https://x.example/a", "https://x.example/b"
     e0 = _df(spark, [
         (1, 0, "I", a, "2024-01-01 00:00:00", b"<p>a v1</p>", None),
@@ -120,7 +112,7 @@ def test_expire_tombstones_mid_stream_gc_boundary(spark, tmp_path, strategy):
         (3, 0, "I", b, "2024-01-01 00:00:00", b"<p>b v1</p>", None),
         (4, 0, "D", b, "2024-01-02 00:00:00", None, None),  # < H: expired
     ])
-    ingest_epoch(spark, wh, e0, 0, strategy=strategy, with_rollup=False)
+    ingest_epoch(spark, wh, e0, 0, with_rollup=False)
 
     expire_warehouse_tombstones(spark, wh, "2024-01-03 00:00:00")
     tombs = {
@@ -138,13 +130,13 @@ def test_expire_tombstones_mid_stream_gc_boundary(spark, tmp_path, strategy):
         # newer than /b's (expired) marker -> must win
         (6, 1, "I", b, "2024-01-06 00:00:00", b"<p>b back</p>", None),
     ])
-    ingest_epoch(spark, wh, e1, 1, strategy=strategy, with_rollup=False)
+    ingest_epoch(spark, wh, e1, 1, with_rollup=False)
     vis = {r.url: r.text for r in wh.pages.read(spark).collect()}
     assert vis == {b: "b back"}
 
     # replay bookkeeping untouched by the GC commit: epoch 0 still skips
     assert ingest_epoch(
-        spark, wh, e0, 0, strategy=strategy, with_rollup=False
+        spark, wh, e0, 0, with_rollup=False
     ).skipped
 
     # the maintenance op is audited (north rule K8 covers maintenance)
@@ -187,16 +179,15 @@ def test_maintenance_ops_write_lineage_rows(spark, tmp_path):
     assert len(row) == 1 and row[0].rows_in == before
 
 
-@pytest.mark.parametrize("strategy", ["classic", "spj"])
-def test_newer_insert_resurrects_after_delete(spark, tmp_path, strategy):
+def test_newer_insert_resurrects_after_delete(spark, tmp_path, merge_path):
     """A genuinely NEWER insert after a delete must win over the
     tombstone (resurrection by newer data is correct LWW)."""
-    wh = Warehouse.init(str(tmp_path / f"wh_{strategy}"), n_buckets=2)
+    wh = Warehouse.init(str(tmp_path / f"wh_{merge_path}"), n_buckets=2)
     url = "https://x.example/a"
     e0 = _df(spark, [(1, 0, "D", url, "2024-01-02 00:00:00", None, None)])
     e1 = _df(spark, [(2, 1, "I", url, "2024-01-03 00:00:00", b"<p>back</p>", None)])
-    ingest_epoch(spark, wh, e0, 0, strategy=strategy, with_rollup=False)
-    ingest_epoch(spark, wh, e1, 1, strategy=strategy, with_rollup=False)
+    ingest_epoch(spark, wh, e0, 0, with_rollup=False)
+    ingest_epoch(spark, wh, e1, 1, with_rollup=False)
     rows = wh.pages.read(spark).collect()
     assert len(rows) == 1 and rows[0].text == "back"
     # the tombstone was replaced, not duplicated
