@@ -171,17 +171,27 @@ def shuffle_exchanges(plan: str) -> list[str]:
     return out
 
 
+def plan_tree(plan: str) -> list[str]:
+    """Node names of a formatted plan's tree, root first."""
+    tree = plan.split("\n\n", 1)[0]
+    return re.findall(r"^[\s+\-:|]*([A-Za-z][\w ]*?) \(\d+\)$", tree, re.M)
+
+
 def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
     """Plans of one ingest epoch's bucket-granular stages, captured at
     their commits, and the shape failures found in them. The SPJ merge
     must sit on exactly one explicit-count hash shuffle on ``_bucket``
     (a byte-sized shuffle would let AQE collapse a small epoch into one
-    task); the per-epoch rollup must run on at most one shuffle, counting
-    the one the write adds unless the commit is told its input is
-    already bucket-partitioned, and that shuffle must be on ``_bucket``
-    (its partials stay in their bucket's partition through the write)."""
+    task), below the grouped-map kernel that writes its own files: the
+    kernel job's root is FlatMapGroupsInPandas, with no write shuffle
+    or write stage above it. The per-epoch rollup must run on at most
+    one shuffle, counting the one the write adds unless the commit is
+    told its input is already bucket-partitioned, and that shuffle must
+    be on ``_bucket`` (its partials stay in their bucket's partition
+    through the write)."""
     from pyspark.sql import functions as F
 
+    from etl_spark.lake.table import BucketFileWrite
     from etl_spark.pipeline import Warehouse, ingest_epoch
 
     wh = Warehouse.init(os.path.join(root, "wh_shape"), n_buckets=8)
@@ -189,7 +199,15 @@ def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
     write_shuffles: dict[str, int] = {}
     for name, table in (("merge", wh.pages), ("rollup", wh.rollup)):
         def capture(df, _commit=table.commit, _name=name, **kw):
-            if df is not None:
+            if isinstance(df, BucketFileWrite):
+                def build(version, _build=df.build):
+                    job = _build(version)
+                    plans[_name] = formatted_plan(job)
+                    return job
+
+                df = BucketFileWrite(build)
+                write_shuffles[_name] = 0
+            elif df is not None:
                 plans[_name] = formatted_plan(df)
                 write_shuffles[_name] = (
                     0 if kw.get("already_bucket_partitioned") else 1
@@ -212,14 +230,15 @@ def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
     merge = plans.get("merge", "")
     ex = shuffle_exchanges(merge)
     if (
-        "FlatMapGroupsInPandas" not in merge
-        or write_shuffles["merge"]
+        plan_tree(merge)[:2] != ["AdaptiveSparkPlan", "FlatMapGroupsInPandas"]
+        or write_shuffles.get("merge", 1)
         or len(ex) != 1
         or not re.match(by_bucket + ", REPARTITION_BY_NUM", ex[0])
     ):
         failures.append(
-            "ingest_stage_shape: SPJ merge must run FlatMapGroupsInPandas on "
-            f"one REPARTITION_BY_NUM hash Exchange on _bucket; got {ex}"
+            "ingest_stage_shape: SPJ merge must run FlatMapGroupsInPandas as "
+            "the job's root on one REPARTITION_BY_NUM hash Exchange on "
+            f"_bucket; got {plan_tree(merge)[:2]} on {ex}"
             f" (+{write_shuffles.get('merge')} at the write)"
         )
     ex = shuffle_exchanges(plans.get("rollup", ""))

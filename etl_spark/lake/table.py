@@ -41,7 +41,8 @@ Scale design (100 TB, 1000 executors)
 * Manifests are O(n_buckets x files-per-bucket) JSON — thousands of
   entries, driver-side trivial (same shape as an Iceberg manifest list).
 * Files are clustered on the event-time column at write
-  (sortWithinPartitions) and the manifest records per-file [min, max]
+  (sortWithinPartitions, or the sort in ``write_bucket_file`` for the
+  SPJ merge's self-written files) and the manifest records per-file [min, max]
   event-time bounds, so a time-range read prunes to a slice of each
   bucket instead of scanning it whole — the successor of the
   reference's SP-GiST/stbox window indexes
@@ -66,7 +67,7 @@ import urllib.parse
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Iterable
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -112,6 +113,76 @@ def repartition_by_bucket(df: DataFrame, touched: list[int]) -> DataFrame:
     stay ``already_bucket_partitioned`` (one file per bucket)."""
     n = min(len(touched), df.sparkSession.sparkContext.defaultParallelism)
     return df.repartition(n, F.col(BUCKET_COL))
+
+
+def _resolve_filesystem(root: str):
+    """Filesystem seam for executor-side data-file IO (the SPJ merge's
+    current-side read and its bucket-file write). A POSIX root uses
+    pyarrow's LocalFileSystem (the sandbox / shared-NFS case); a URI
+    root (``s3://…``, ``hdfs://…``, ``file://…``) resolves through
+    ``FileSystem.from_uri`` — pointing the warehouse at an object store
+    changes the root string, not the kernel (the Iceberg-SPJ analog:
+    data files are fetched by path via the store's client, never
+    through the driver)."""
+    from pyarrow import fs as pafs
+
+    if "://" in root:
+        filesystem, base = pafs.FileSystem.from_uri(root)
+        return filesystem, base
+    return pafs.LocalFileSystem(), root
+
+
+def arrow_schema(schema: T.StructType):
+    """The Arrow layout executor-side IO reads and writes the table in:
+    Spark's own type mapping with timestamps as ``timestamp[us,
+    tz=UTC]`` instants, every field nullable (Spark reads files with
+    its read schema made nullable anyway)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.schema(
+        [f.with_nullable(True) for f in to_arrow_schema(schema, timestamp_utc=True)]
+    )
+
+
+def _event_time_field(
+    schema: T.StructType, event_time_col: str | None
+) -> T.StructField | None:
+    """The event-time field stats are recorded on, or None when the
+    column is absent or not temporal (no bounds can be recorded)."""
+    f = next((f for f in schema.fields if f.name == event_time_col), None)
+    if f is None or not isinstance(f.dataType, (T.TimestampType, T.DateType)):
+        return None
+    return f
+
+
+# One row per data file a self-writing kernel wrote (``write_bucket_file``):
+# where it is, its size, and the stats a commit records for it.
+BUCKET_FILE_SCHEMA = T.StructType(
+    [
+        T.StructField(BUCKET_COL, T.IntegerType(), False),
+        T.StructField("path", T.StringType(), False),
+        T.StructField("rows", T.LongType(), False),
+        T.StructField("bytes", T.LongType(), False),
+        T.StructField("ts_min", T.StringType(), True),
+        T.StructField("ts_max", T.StringType(), True),
+        T.StructField("n_dead", T.LongType(), False),
+        T.StructField("dead_min", T.StringType(), True),
+    ]
+)
+
+
+@dataclass
+class BucketFileWrite:
+    """Commit input whose tasks write their own bucket files.
+
+    ``build(version)`` returns a DataFrame of ``BUCKET_FILE_SCHEMA`` rows
+    whose tasks write each bucket through ``LakeTable.write_bucket_file``
+    under ``version``, the id the commit claims before building it.
+    The commit collects the rows instead of running the Spark writer
+    and the ``_scan_write_stats`` re-scan, then publishes as usual."""
+
+    build: Callable[[int], DataFrame]
 
 
 @dataclass
@@ -351,14 +422,8 @@ class LakeTable:
         ``input_file_name()``, mapped back to manifest-relative paths
         driver-side)."""
         rel_paths = [p for plist in written.values() for p in plist]
-        et_field = next(
-            (f for f in schema.fields if f.name == event_time_col), None
-        )
-        if (
-            et_field is None
-            or not isinstance(et_field.dataType, (T.TimestampType, T.DateType))
-            or not rel_paths
-        ):
+        et_field = _event_time_field(schema, event_time_col)
+        if et_field is None or not rel_paths:
             return None, None
         has_tomb = any(f.name == DELETED_COL for f in schema.fields)
         fields = [T.StructField(event_time_col, et_field.dataType, True)]
@@ -709,9 +774,148 @@ class LakeTable:
             )
         return files
 
+    @staticmethod
+    def read_bucket_files(root: str, paths: list[str], schema: T.StructType):
+        """Read data files (relative to ``root``, through the filesystem
+        seam) as ONE ``pyarrow.Table`` in the table's write layout (see
+        :func:`arrow_schema`). Each file is cast to that layout before
+        the concat: the Spark writer stores timestamps as INT96, which
+        read back as naive ``timestamp[ns]`` holding UTC wall time,
+        ``write_bucket_file`` stores ``timestamp[us, tz=UTC]``, and files
+        older than an additive schema change lack its columns (read as
+        nulls) — ``concat_tables`` refuses to mix any of these as is."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        target = arrow_schema(schema)
+        filesystem, base = _resolve_filesystem(root)
+        tables = [target.empty_table()]
+        for p in paths:
+            # use_threads=False: parallelism comes from Spark tasks;
+            # Arrow's default per-call pool (cpu_count threads in EVERY
+            # worker process) oversubscribes the box.
+            got = pq.read_table(
+                f"{base}/{p}", filesystem=filesystem, use_threads=False
+            )
+            tables.append(
+                pa.Table.from_arrays(
+                    [
+                        got[f.name].cast(f.type)
+                        if f.name in got.column_names
+                        else pa.nulls(got.num_rows, f.type)
+                        for f in target
+                    ],
+                    schema=target,
+                )
+            )
+        return pa.concat_tables(tables)
+
+    @staticmethod
+    def write_bucket_file(
+        root: str, version: int, bucket: int, data, event_time_col: str | None
+    ) -> dict:
+        """Write one bucket's rows (a ``pyarrow.Table`` in
+        ``arrow_schema(schema + _bucket)`` layout) as the single file
+        ``data/v<version>/_pb=<bucket>/part-<bucket>.parquet`` and return
+        its ``BUCKET_FILE_SCHEMA`` row — the self-writing twin of
+        ``_write_data`` + ``_scan_write_stats`` for a grouped-map kernel
+        that already holds the bucket in memory.
+
+        Rows are clustered on ``event_time_col`` (nulls first, as
+        ``sortWithinPartitions``); bounds are recorded when it is a
+        timestamp or date column. The name is a function of (version,
+        bucket) and the bytes land via tmp + rename through the
+        filesystem seam, so a retried task replaces its own file and a
+        reader never sees a partial one. The stats are exact and carry
+        ``_scan_write_stats``' semantics: min/max ignore nulls and
+        timestamps render as the naive local time PySpark's ``collect``
+        gives (``TimestampType.fromInternal``)."""
+        import datetime as dt
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        def iso(scalar):
+            if not scalar.is_valid:
+                return None
+            if pa.types.is_timestamp(scalar.type):
+                us = scalar.cast(pa.timestamp("us", tz="UTC")).value
+                return (
+                    dt.datetime.fromtimestamp(us // 1_000_000)
+                    .replace(microsecond=us % 1_000_000)
+                    .isoformat()
+                )
+            return scalar.as_py().isoformat()
+
+        if event_time_col in data.column_names:
+            data = data.take(
+                pc.sort_indices(
+                    data, [(event_time_col, "ascending")], null_placement="at_start"
+                )
+            )
+        rel = (
+            f"data/v{version:06d}/{_PARTITION_DIR_COL}={bucket}/"
+            f"part-{bucket:05d}.parquet"
+        )
+        buf = pa.BufferOutputStream()
+        pq.write_table(data, buf)
+        body = buf.getvalue()
+        filesystem, base = _resolve_filesystem(root)
+        final = f"{base}/{rel}"
+        tmp = f"{final}.tmp-{uuid.uuid4().hex}"
+        filesystem.create_dir(final.rsplit("/", 1)[0], recursive=True)
+        with filesystem.open_output_stream(tmp) as out:
+            out.write(body)
+        filesystem.move(tmp, final)
+
+        row = {
+            BUCKET_COL: bucket,
+            "path": rel,
+            "rows": data.num_rows,
+            "bytes": body.size,
+            "ts_min": None,
+            "ts_max": None,
+            "n_dead": 0,
+            "dead_min": None,
+        }
+        ts = data[event_time_col] if event_time_col in data.column_names else None
+        if ts is not None and (
+            pa.types.is_timestamp(ts.type) or pa.types.is_date(ts.type)
+        ):
+            mm = pc.min_max(ts)
+            row["ts_min"], row["ts_max"] = iso(mm["min"]), iso(mm["max"])
+            if DELETED_COL in data.column_names:
+                dead = pc.fill_null(data[DELETED_COL], False)
+                row["n_dead"] = pc.sum(dead.cast(pa.int64())).as_py() or 0
+                row["dead_min"] = iso(pc.min(pc.filter(ts, dead)))
+        return row
+
+    @staticmethod
+    def _written_from_rows(
+        rows, schema: T.StructType, event_time_col: str | None
+    ) -> tuple[dict[str, list[str]], dict | None, dict | None, int]:
+        """Fold the ``BUCKET_FILE_SCHEMA`` rows of a :class:`BucketFileWrite`
+        — one row per bucket, as the kernel writes one file per bucket —
+        into what a DataFrame commit gets from ``_write_data`` plus
+        ``_scan_write_stats``: bucket -> paths, per-bucket tombstone
+        stats, per-file bounds (both None where ``_scan_write_stats``
+        would record none), and the bytes written."""
+        written = {str(r[BUCKET_COL]): [r["path"]] for r in rows}
+        n_bytes = sum(int(r["bytes"]) for r in rows)
+        if _event_time_field(schema, event_time_col) is None or not rows:
+            return written, None, None, n_bytes
+        file_stats = {r["path"]: [r["ts_min"], r["ts_max"]] for r in rows}
+        if not any(f.name == DELETED_COL for f in schema.fields):
+            return written, None, file_stats, n_bytes
+        bucket_stats = {
+            str(r[BUCKET_COL]): [int(r["n_dead"]), r["dead_min"]] for r in rows
+        }
+        return written, bucket_stats, file_stats, n_bytes
+
     def commit(
         self,
-        new_data: DataFrame | None,
+        new_data: DataFrame | BucketFileWrite | None,
         *,
         touched_buckets: Iterable[int] | None = None,
         schema: T.StructType | None = None,
@@ -739,6 +943,13 @@ class LakeTable:
         tombstone state is marked unknown. ``max_records_per_file``
         splits a big bucket into several time-consecutive files
         (tighter pruning; Iceberg's target-file-size knob).
+
+        A :class:`BucketFileWrite` runs after the version claim and
+        supplies the written files and their stats itself (the SPJ
+        merge); its files and bytes land in the summary as
+        ``files_added``/``bytes_written``. Everything from the publish
+        on — rebase, conflict checks, the missing-file check — is the
+        same for both kinds of input.
         """
         head = self.snapshot()
         if applied_epoch is not None and applied_epoch in head.applied_epochs:
@@ -748,7 +959,23 @@ class LakeTable:
         base_n_buckets = head.n_buckets
         base_key_cols = list(head.key_cols)
         version = self._claim_version()
-        if new_data is not None:
+        written: dict[str, list[str]] = {}
+        written_stats, written_file_stats = None, None
+        if isinstance(new_data, BucketFileWrite):
+            written, written_stats, written_file_stats, n_bytes = (
+                self._written_from_rows(
+                    new_data.build(version).collect(),
+                    schema or head.schema,
+                    event_time_col,
+                )
+            )
+            # Spark's task output metrics never see these pyarrow writes
+            summary = {
+                **(summary or {}),
+                "files_added": sum(len(p) for p in written.values()),
+                "bytes_written": n_bytes,
+            }
+        elif new_data is not None:
             written = self._write_data(
                 new_data,
                 version,
@@ -756,16 +983,13 @@ class LakeTable:
                 sort_col=event_time_col,
                 max_records_per_file=max_records_per_file,
             )
-        else:
-            written = {}
-        written_stats, written_file_stats = None, None
-        if new_data is not None and event_time_col is not None and written:
-            written_stats, written_file_stats = self._scan_write_stats(
-                new_data.sparkSession,
-                written,
-                event_time_col,
-                schema or head.schema,
-            )
+            if event_time_col is not None and written:
+                written_stats, written_file_stats = self._scan_write_stats(
+                    new_data.sparkSession,
+                    written,
+                    event_time_col,
+                    schema or head.schema,
+                )
         # Optimistic-concurrency publish loop (the Iceberg commit
         # protocol shape): data files are written once above; the
         # metadata (files dict, epochs, parent) is rebuilt against the

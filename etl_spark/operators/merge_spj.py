@@ -13,7 +13,7 @@ write repartition (hash by bucket). This one collapses them into ONE
 payload shuffle:
 
     delta.repartition(n, bucket).groupBy(bucket).applyInPandas(merge_bucket)
-         -> write
+         -> collect one file row per bucket -> publish
 
 The kernel's partition count is ``n = min(touched buckets, slots)``
 (``lake.table.repartition_by_bucket``), fixed by the epoch's touched
@@ -35,19 +35,30 @@ Inside the grouped-map kernel (one call per bucket, Arrow-batched):
      (the manifest's file list rides the closure) — a hand-rolled
      storage-partitioned join: current rows never cross a shuffle,
      exactly what Iceberg SPJ gives co-bucketed tables. The read goes
-     through a pyarrow FileSystem seam (:func:`_resolve_filesystem`):
+     through a pyarrow FileSystem seam (``lake.table._resolve_filesystem``):
      a POSIX root reads locally, a ``s3://``/``hdfs://`` root reads
-     via the store's client — no kernel change to leave shared disk;
+     via the store's client — no kernel change to leave shared disk.
+     Every file is cast to one Arrow layout first (Spark-written INT96
+     and kernel-written UTC-micros timestamps, files that predate a
+     column), and both sides' timestamps become UTC instants;
   4. row arbitration: delta wins iff no current row or it is >= on the
      (warc_ts, seq) tuple, NULL comparing as -inf on either side; 'D'
      winners become tombstones; untouched current rows carry through
-     (the whole bucket is rewritten, so losers must be re-emitted).
+     (the whole bucket is rewritten, so losers must be re-emitted);
+  5. write + stats: the bucket, sorted on event time, becomes one
+     parquet file ``data/v<claim>/_pb=<bucket>/part-<bucket>.parquet``
+     (``LakeTable.write_bucket_file``: deterministic name, tmp +
+     rename through the same seam), and the kernel returns ONE row —
+     path, rows, bytes, [min, max] event time, tombstone count and
+     earliest tombstone time — computed from the arrays it holds.
 
-The output is already partitioned by bucket (the one shuffle), so the
-lake write skips its repartition. Hot keys: when the stats pre-pass
-sees a key above threshold, a JVM salted pre-reduce runs BEFORE the
-grouped map so no pandas group ever materializes a hot key's full row
-set.
+The kernel runs inside ``LakeTable.commit`` (a :class:`BucketFileWrite`):
+the commit claims the version, runs the kernel job, and publishes the
+collected rows through the usual protocol. No bucket crosses back to
+the JVM, and there is no Spark write job and no stats re-scan. Hot
+keys: when the stats pre-pass sees a key above threshold, a JVM salted
+pre-reduce runs BEFORE the grouped map so no pandas group ever
+materializes a hot key's full row set.
 
 Memory contract: one call holds one bucket's delta winners + current
 rows. n_buckets is the knob — size it so bucket ~ O(100 MB) at the
@@ -67,9 +78,12 @@ from pyspark.sql import types as T
 from etl_spark.functions.extract import extract_text_series
 from etl_spark.lake.table import (
     BUCKET_COL,
+    BUCKET_FILE_SCHEMA,
     DELETED_COL,
+    BucketFileWrite,
     LakeTable,
     Snapshot,
+    arrow_schema,
     bucket_expr,
     repartition_by_bucket,
 )
@@ -145,7 +159,7 @@ def _arrow_safe(pdf: pd.DataFrame, schema: T.StructType) -> pd.DataFrame:
         if c not in pdf.columns:
             pdf[c] = None
         if isinstance(f.dataType, T.TimestampType):
-            pdf[c] = pd.to_datetime(pdf[c])
+            pdf[c] = pd.to_datetime(pdf[c], utc=True)
         elif isinstance(f.dataType, T.LongType):
             # outer-join NaNs turn int64 into float64; nullable Int64
             # round-trips to Arrow int64-with-nulls losslessly (and an
@@ -161,51 +175,61 @@ def _arrow_safe(pdf: pd.DataFrame, schema: T.StructType) -> pd.DataFrame:
     return pdf
 
 
-def _resolve_filesystem(root: str):
-    """Filesystem seam for the kernel's executor-local current-side
-    read. A POSIX root uses pyarrow's LocalFileSystem (the sandbox /
-    shared-NFS case); a URI root (``s3://…``, ``hdfs://…``,
-    ``file://…``) resolves through ``FileSystem.from_uri`` — pointing
-    the warehouse at an object store changes the root string, not the
-    kernel (the Iceberg-SPJ analog: data files are fetched by path via
-    the store's client, never through the driver)."""
-    from pyarrow import fs as pafs
-
-    if "://" in root:
-        filesystem, base = pafs.FileSystem.from_uri(root)
-        return filesystem, base
-    return pafs.LocalFileSystem(), root
-
-
 def make_bucket_merger(
     root: str,
+    version: int,
     files_by_bucket,
     schema: T.StructType,
     key_cols: list[str],
     order_cols: list[str],
     extracted: bool,
+    session_tz: str,
 ):
-    """Build the grouped-map kernel.
+    """Build the grouped-map kernel: it merges one bucket, writes the
+    result as ``data/v<version>/_pb=<bucket>/`` (``LakeTable.
+    write_bucket_file``) and returns that file's ``BUCKET_FILE_SCHEMA``
+    row — one small row per bucket crosses back to the JVM, never the
+    bucket itself.
 
     ``files_by_bucket`` is either a plain dict (tests) or a Spark
     Broadcast of one (the pipeline path): a torrent-distributed
     broadcast ships the manifest to each executor ONCE instead of
     serializing it into every task closure — the difference between
     O(tasks x manifest) and O(executors x manifest) bytes when the
-    table has millions of bucket-file entries."""
+    table has millions of bucket-file entries.
+
+    ``session_tz`` is the driver's ``spark.sql.session.timeZone``: Spark
+    hands the kernel timestamps as naive wall times in that zone, while
+    stored files hold UTC instants. The kernel turns both sides into
+    UTC instants (Spark's own rule for the naive side: an ambiguous
+    wall time is read as standard time) and arbitrates and writes
+    ``timestamp[us, tz=UTC]`` — so a bucket rewrite never shifts the
+    rows it carries through, whatever the session zone."""
     payload_cols = [f.name for f in schema.fields]
     out_cols = payload_cols + [BUCKET_COL]
     ts_col = order_cols[0]
+    ts_cols = [f.name for f in schema.fields if isinstance(f.dataType, T.TimestampType)]
+    write_schema = arrow_schema(
+        T.StructType(schema.fields + [T.StructField(BUCKET_COL, T.IntegerType())])
+    )
 
     def merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+        import pyarrow as pa
+
         files_map = (
             files_by_bucket.value
             if hasattr(files_by_bucket, "value")
             else files_by_bucket
         )
         if pdf.empty:
-            return pd.DataFrame(columns=out_cols)
+            return pd.DataFrame(columns=BUCKET_FILE_SCHEMA.fieldNames())
         bucket = int(pdf[BUCKET_COL].iloc[0])
+        for c in ts_cols:
+            if c in pdf.columns:
+                t = pd.to_datetime(pdf[c])
+                if t.dt.tz is None:
+                    t = t.dt.tz_localize(session_tz, ambiguous=False)
+                pdf[c] = t.dt.tz_convert("UTC")
 
         # 1. LWW winners (keep-last over the ascending order tuple).
         # Tie-break columns are restored to exact nullable Int64 from
@@ -244,43 +268,23 @@ def make_bucket_merger(
                 winners[c] = None
 
         # 3. executor-local read of the bucket's current rows (through
-        # the filesystem seam: POSIX root or object-store URI).
-        paths = files_map.get(str(bucket), [])
-        if paths:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            filesystem, base = _resolve_filesystem(root)
-            # use_threads=False everywhere: parallelism comes from Spark
-            # tasks; Arrow's default per-call thread pool (cpu_count
-            # threads in EVERY worker process) oversubscribes the box
-            # by n_workers x n_cpus and serializes the stage.
-            tables = [
-                pq.read_table(
-                    f"{base}/{p}", filesystem=filesystem, use_threads=False
-                )
-                for p in paths
-            ]
-            # int64 -> nullable Int64 at the Arrow boundary: the default
-            # conversion renders int64-with-nulls as float64, which is
-            # already lossy above 2^53 before any downstream cast.
-            cur = pa.concat_tables(tables, promote_options="default").to_pandas(
-                use_threads=False,
-                types_mapper={pa.int64(): pd.Int64Dtype()}.get,
-            )
-            # old files may predate later-added columns
-            for c in payload_cols:
-                if c not in cur.columns:
-                    cur[c] = None
-        else:
-            cur = pd.DataFrame(columns=payload_cols)
+        # the filesystem seam: POSIX root or object-store URI), every
+        # file cast to one layout: timestamps as UTC instants, columns
+        # an older file lacks as nulls. int64 -> nullable Int64 at the
+        # Arrow boundary: the default conversion renders
+        # int64-with-nulls as float64, already lossy above 2^53.
+        cur = LakeTable.read_bucket_files(
+            root, files_map.get(str(bucket), []), schema
+        ).to_pandas(
+            use_threads=False, types_mapper={pa.int64(): pd.Int64Dtype()}.get
+        )
 
         # 4. arbitration: delta wins iff no current row or it is >= on
         # the full lexicographic (warc_ts, seq) tuple — the stored seq
         # makes equal-ts events in later epochs arbitrate by global LWW
         # order, not arrival order.
         merged = winners.merge(
-            cur[payload_cols] if len(cur) else cur,
+            cur,
             on=key_cols,
             how="outer",
             suffixes=("", "_cur"),
@@ -343,12 +347,18 @@ def make_bucket_merger(
                 if cc in cur_view.columns:
                     cur_view[c] = cur_view[cc]
             parts.append(cur_view[payload_cols])
-        if parts:
-            out = pd.concat(parts, ignore_index=True)
-        else:
-            out = pd.DataFrame(columns=payload_cols)
+        if not parts:
+            return pd.DataFrame(columns=BUCKET_FILE_SCHEMA.fieldNames())
+        # 5. write the bucket's one file and hand back its stats row.
+        out = pd.concat(parts, ignore_index=True)
         out[BUCKET_COL] = bucket
-        return _arrow_safe(out, schema)[out_cols]
+        data = pa.Table.from_pandas(
+            _arrow_safe(out, schema)[out_cols],
+            schema=write_schema,
+            preserve_index=False,
+        )
+        row = LakeTable.write_bucket_file(root, version, bucket, data, ts_col)
+        return pd.DataFrame([row])
 
     return merge_bucket
 
@@ -444,30 +454,34 @@ def merge_epoch_spj(
                 f"{c}__tb",
                 F.coalesce(F.col(c).try_cast("long"), F.lit(TB_SENTINEL)),
             )
-    bucketed = delta.withColumn(BUCKET_COL, bucket_expr(key_cols, snap.n_buckets))
-    out_schema = T.StructType(
-        schema.fields + [T.StructField(BUCKET_COL, T.IntegerType(), False)]
+    bucketed = repartition_by_bucket(
+        delta.withColumn(BUCKET_COL, bucket_expr(key_cols, snap.n_buckets)),
+        touched,
     )
-    touched_files = {b: snap.files.get(str(b), []) for b in map(str, touched)}
-    kernel = make_bucket_merger(
-        table.root,
-        spark.sparkContext.broadcast(touched_files),
-        schema,
-        key_cols,
-        order_cols,
-        extracted,
+    touched_files = spark.sparkContext.broadcast(
+        {b: snap.files.get(str(b), []) for b in map(str, touched)}
     )
-    merged = (
-        repartition_by_bucket(bucketed, touched)
-        .groupBy(BUCKET_COL)
-        .applyInPandas(kernel, out_schema)
-    )
+    session_tz = spark.conf.get("spark.sql.session.timeZone")
+
+    def kernel_job(version: int) -> DataFrame:
+        kernel = make_bucket_merger(
+            table.root,
+            version,
+            touched_files,
+            schema,
+            key_cols,
+            order_cols,
+            extracted,
+            session_tz,
+        )
+        return bucketed.groupBy(BUCKET_COL).applyInPandas(
+            kernel, BUCKET_FILE_SCHEMA
+        )
 
     new_snap = table.commit(
-        merged,
+        BucketFileWrite(kernel_job),
         touched_buckets=touched,
         applied_epoch=epoch,
-        already_bucket_partitioned=True,
         # the LWW order column is the stream's event time: recording
         # per-bucket tombstone stats here is what lets expire_tombstones
         # prune its GC discovery scan to prunable buckets

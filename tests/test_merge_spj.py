@@ -214,16 +214,16 @@ def test_as_exact_int64_object_dtype_no_float_detour():
 
 
 def test_kernel_reads_current_side_through_fs_seam(spark, tmp_path):
-    """The executor-local current-side read goes through the pyarrow
-    FileSystem seam: a file:// URI root (stand-in for any object-store
-    URI) must produce the same merge output as the plain POSIX root."""
+    """The executor-local current-side read and the bucket-file write go
+    through the pyarrow FileSystem seam: a file:// URI root (stand-in
+    for any object-store URI) must produce the same merge output as the
+    plain POSIX root."""
     import pandas as pd
+    import pyarrow.parquet as pq
     from pyspark.sql import types as T
 
-    from etl_spark.operators.merge_spj import (
-        _resolve_filesystem,
-        make_bucket_merger,
-    )
+    from etl_spark.lake.table import _resolve_filesystem
+    from etl_spark.operators.merge_spj import make_bucket_merger
 
     schema = T.StructType(
         [
@@ -254,19 +254,22 @@ def test_kernel_reads_current_side_through_fs_seam(spark, tmp_path):
         }
     )
     outs = {}
-    for label, root in (
-        ("posix", str(tmp_path)),
-        ("uri", "file://" + str(tmp_path)),
+    for version, (label, root) in enumerate(
+        (("posix", str(tmp_path)), ("uri", "file://" + str(tmp_path))), 1
     ):
         kernel = make_bucket_merger(
             root,
+            version,
             {"0": ["data/cur.parquet"]},
             schema,
             ["url"],
             ["warc_ts"],
             extracted=True,
+            session_tz="UTC",
         )
-        out = kernel(delta.copy())
+        row = kernel(delta.copy()).iloc[0]
+        out = pq.read_table(tmp_path / row["path"]).to_pandas()
+        assert row["rows"] == len(out)
         outs[label] = sorted(
             zip(out["url"], out["note"], out["_bucket"])
         )
