@@ -177,6 +177,18 @@ def plan_tree(plan: str) -> list[str]:
     return re.findall(r"^[\s+\-:|]*([A-Za-z][\w ]*?) \(\d+\)$", tree, re.M)
 
 
+def _jobs_in(spark, group: str, fn, *args, **kwargs):
+    """Run ``fn`` under a job group; return its result and the number
+    of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn(*args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
     """Plans of one ingest epoch's bucket-granular stages, captured at
     their commits, and the shape failures found in them. The SPJ merge
@@ -184,48 +196,85 @@ def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
     (a byte-sized shuffle would let AQE collapse a small epoch into one
     task), below the grouped-map kernel that writes its own files: the
     kernel job's root is FlatMapGroupsInPandas, with no write shuffle
-    or write stage above it. The per-epoch rollup must run on at most
-    one shuffle, counting the one the write adds unless the commit is
-    told its input is already bucket-partitioned, and that shuffle must
-    be on ``_bucket`` (its partials stay in their bucket's partition
-    through the write)."""
+    or write stage above it. An epoch whose rollup takes the kernel's
+    partial files, and its lineage flush, must start no Spark job. The
+    fallback rollup — an epoch touching a bucket whose stored file
+    lacks ``_domain`` — must run on at most one shuffle, counting the
+    one the write adds unless the commit is told its input is already
+    bucket-partitioned, and that shuffle must be on ``_bucket`` (its
+    partials stay in their bucket's partition through the write)."""
+    import dataclasses
+
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
+    from etl_spark import lineage, pipeline
     from etl_spark.lake.table import BucketFileWrite
-    from etl_spark.pipeline import Warehouse, ingest_epoch
+    from etl_spark.operators.rollup import DOMAIN_COL
 
-    wh = Warehouse.init(os.path.join(root, "wh_shape"), n_buckets=8)
+    wh = pipeline.Warehouse.init(os.path.join(root, "wh_shape"), n_buckets=8)
     plans: dict[str, str] = {}
     write_shuffles: dict[str, int] = {}
     for name, table in (("merge", wh.pages), ("rollup", wh.rollup)):
         def capture(df, _commit=table.commit, _name=name, **kw):
-            if isinstance(df, BucketFileWrite):
+            if isinstance(df, BucketFileWrite) and df.version is None:
                 def build(version, _build=df.build):
                     job = _build(version)
-                    plans[_name] = formatted_plan(job)
+                    plans.setdefault(_name, formatted_plan(job))
                     return job
 
-                df = BucketFileWrite(build)
-                write_shuffles[_name] = 0
-            elif df is not None:
-                plans[_name] = formatted_plan(df)
-                write_shuffles[_name] = (
-                    0 if kw.get("already_bucket_partitioned") else 1
+                df = dataclasses.replace(df, build=build)
+                write_shuffles.setdefault(_name, 0)
+            elif df is not None and not isinstance(df, BucketFileWrite):
+                plans.setdefault(_name, formatted_plan(df))
+                write_shuffles.setdefault(
+                    _name, 0 if kw.get("already_bucket_partitioned") else 1
                 )
             return _commit(df, **kw)
 
         table.commit = capture
-    ev = spark.createDataFrame(
-        [
-            (i, 0, "I", f"https://d{i % 3}.example/{i}", "2024-01-01 00:00:00",
-             b"<p>x</p>", None)
-            for i in range(64)
-        ],
-        "seq long, epoch long, op string, url string, warc_ts string, html binary, lang string",
-    ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
-    ingest_epoch(spark, wh, ev, 0, with_lineage=False)
+
+    def events(epoch):
+        return spark.createDataFrame(
+            [
+                (100 * epoch + i, epoch, "I", f"https://d{i % 3}.example/{i}",
+                 f"2024-01-0{epoch + 1} 00:00:00", b"<p>x</p>", None)
+                for i in range(64)
+            ],
+            "seq long, epoch long, op string, url string, warc_ts string, "
+            "html binary, lang string",
+        ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
+
+    jobs: dict[str, int] = {}
+    originals = (pipeline.rollup_domain_stats, lineage.LineageLog.flush)
+
+    def counted(name, fn):
+        def run(*args, **kwargs):
+            out, n = _jobs_in(spark, f"audit_{name}", fn, *args, **kwargs)
+            jobs[name] = jobs.get(name, 0) + n
+            return out
+
+        return run
+
+    pipeline.rollup_domain_stats = counted("rollup", originals[0])
+    lineage.LineageLog.flush = counted("lineage", originals[1])
+    try:
+        pipeline.ingest_epoch(spark, wh, events(0), 0)
+    finally:
+        pipeline.rollup_domain_stats, lineage.LineageLog.flush = originals
+
+    # a bucket file written before the hidden column existed: drop it
+    # from one stored file, so the next epoch's rollup falls back
+    path = os.path.join(wh.pages.root, wh.pages.snapshot().files["0"][0])
+    pq.write_table(pq.read_table(path).drop_columns([DOMAIN_COL]), path)
+    pipeline.ingest_epoch(spark, wh, events(1), 1, with_lineage=False)
 
     failures = []
+    if jobs != {"rollup": 0, "lineage": 0}:
+        failures.append(
+            "ingest_stage_shape: an epoch's kernel-partials rollup and its "
+            f"lineage flush must start no Spark job; got {jobs}"
+        )
     by_bucket = r"hashpartitioning\(_bucket#\d+, \d+\)"
     merge = plans.get("merge", "")
     ex = shuffle_exchanges(merge)
@@ -247,8 +296,9 @@ def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
         re.match(by_bucket, e) for e in ex
     ):
         failures.append(
-            "ingest_stage_shape: per-epoch rollup must run on <= 1 Exchange, "
-            f"on _bucket; got {ex} (+{write_shuffles.get('rollup')} at the write)"
+            "ingest_stage_shape: the fallback per-epoch rollup must run on "
+            f"<= 1 Exchange, on _bucket; got {ex} "
+            f"(+{write_shuffles.get('rollup')} at the write)"
         )
     return plans, failures
 

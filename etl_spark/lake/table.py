@@ -59,6 +59,7 @@ Scale design (100 TB, 1000 executors)
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import shutil
@@ -68,6 +69,7 @@ import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable, Iterable
+from zoneinfo import ZoneInfo
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -156,6 +158,52 @@ def _event_time_field(
     return f
 
 
+def _utc_iso(us: int) -> str:
+    """A timestamp (microseconds since the epoch) as the manifest records
+    it: an ISO UTC instant, whatever the session or process zone."""
+    epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+    return (epoch + dt.timedelta(microseconds=us)).isoformat()
+
+
+def _instants(x: dt.datetime, tz: str | None) -> tuple[dt.datetime, dt.datetime]:
+    """Earliest and latest UTC instant ``x`` can denote. An aware
+    datetime is exact; a naive one is a wall time in ``tz`` (None: the
+    process zone), which a DST change can make ambiguous or skip, so
+    both readings count and a caller prunes only on what holds for
+    either."""
+    if x.tzinfo is not None:
+        at = x.astimezone(dt.timezone.utc)
+        return at, at
+    zone = ZoneInfo(tz) if tz else None
+    readings = [
+        (x.replace(fold=f, tzinfo=zone) if zone else x.replace(fold=f).astimezone())
+        .astimezone(dt.timezone.utc)
+        for f in (0, 1)
+    ]
+    return min(readings), max(readings)
+
+
+def _bound_instants(x, session_tz: str) -> tuple[dt.datetime, dt.datetime]:
+    """A caller's time bound as Spark reads it in a filter: a string
+    casts in the session zone (or by its own offset), a naive datetime
+    literal converts in the process zone (PySpark's rule), a date is
+    its session-zone midnight. ValueError on a junk string."""
+    if isinstance(x, str):
+        return _instants(dt.datetime.fromisoformat(x), session_tz)
+    if isinstance(x, dt.datetime):
+        return _instants(x, None)
+    return _instants(dt.datetime.combine(x, dt.time()), session_tz)
+
+
+def _recorded_instants(s: str, session_tz: str) -> tuple[dt.datetime, dt.datetime]:
+    """A recorded bound: a UTC instant, a date (compared as its
+    session-zone midnight), or — in manifests written before bounds
+    were instants — a naive process-zone wall time."""
+    if "T" not in s:
+        return _instants(dt.datetime.fromisoformat(s), session_tz)
+    return _instants(dt.datetime.fromisoformat(s), None)
+
+
 # One row per data file a self-writing kernel wrote (``write_bucket_file``):
 # where it is, its size, and the stats a commit records for it.
 BUCKET_FILE_SCHEMA = T.StructType(
@@ -174,15 +222,30 @@ BUCKET_FILE_SCHEMA = T.StructType(
 
 @dataclass
 class BucketFileWrite:
-    """Commit input whose tasks write their own bucket files.
+    """Commit input whose files are written by the caller's own code.
 
-    ``build(version)`` returns a DataFrame of ``BUCKET_FILE_SCHEMA`` rows
-    whose tasks write each bucket through ``LakeTable.write_bucket_file``
-    under ``version``, the id the commit claims before building it.
-    The commit collects the rows instead of running the Spark writer
-    and the ``_scan_write_stats`` re-scan, then publishes as usual."""
+    ``build(version)`` writes each bucket through
+    ``LakeTable.write_bucket_file`` under ``version`` and returns its
+    ``BUCKET_FILE_SCHEMA`` rows: a DataFrame whose tasks do the writing
+    (collected by the commit), or the rows themselves when the driver
+    wrote the files. ``version`` is the id the commit claims before
+    building, unless the caller claimed it already (files written
+    before the commit started, e.g. rollup partials written by the
+    merge kernel). ``collected``, when given, receives every collected
+    row, extra columns included, before the publish. The commit skips
+    the Spark writer and the ``_scan_write_stats`` re-scan, then
+    publishes as usual."""
 
-    build: Callable[[int], DataFrame]
+    build: Callable[[int], DataFrame | list]
+    version: int | None = None
+    collected: Callable[[list], None] | None = None
+
+    def rows(self, version: int) -> list:
+        out = self.build(version)
+        rows = out.collect() if isinstance(out, DataFrame) else list(out)
+        if self.collected is not None:
+            self.collected(rows)
+        return rows
 
 
 @dataclass
@@ -213,8 +276,18 @@ class Snapshot:
     # ``read(time_range=...)`` skips files whose bounds fall outside
     # the window. [null, null] = the file holds ONLY null-event-time
     # rows (prunable by ANY range predicate, which excludes nulls); a
-    # file with no entry is UNKNOWN and always read.
+    # file with no entry is UNKNOWN and always read. Bounds are ISO UTC
+    # instants (manifests written before that hold naive process-zone
+    # wall times, still read as such).
     file_stats: dict = field(default_factory=dict)
+    # Hidden derived columns: {name: Spark SQL expression over the
+    # row}. Every data file a writer produces carries them next to
+    # BUCKET_COL, outside the table schema (``read`` never shows them):
+    # the Spark writer evaluates the expression, a self-writing kernel
+    # receives them on its input. A file that lacks one predates its
+    # declaration. The table format stays schema-agnostic; the pipeline
+    # declares the pages table's ``_domain`` here.
+    derived_cols: dict = field(default_factory=dict)
 
     @property
     def schema(self) -> T.StructType:
@@ -234,6 +307,7 @@ class Snapshot:
                 "committed_at": self.committed_at,
                 "tombstone_stats": self.tombstone_stats,
                 "file_stats": self.file_stats,
+                "derived_cols": self.derived_cols,
             },
             indent=1,
         )
@@ -268,6 +342,7 @@ class LakeTable:
         schema: T.StructType,
         key_cols: list[str],
         n_buckets: int = 16,
+        derived_cols: dict | None = None,
     ) -> "LakeTable":
         """Create an empty table (v0). Successor of the reference's DDL
         bootstrap (/root/reference/etl/init/sqlrunner.py:44-57)."""
@@ -286,6 +361,7 @@ class LakeTable:
             applied_epochs=[],
             summary={"operation": "create"},
             committed_at=time.time(),
+            derived_cols=dict(derived_cols or {}),
         )
         table._write_snapshot(snap)
         table._swap_head(0)
@@ -437,13 +513,27 @@ class LakeTable:
             if has_tomb
             else F.lit(False)
         )
+        is_ts = isinstance(et_field.dataType, T.TimestampType)
+
+        def as_recorded(c):
+            # timestamps leave the JVM as exact UTC micros, never as the
+            # process-zone wall time ``collect`` would render
+            return F.unix_micros(c) if is_ts else c
+
+        def render(v):
+            if v is None:
+                return None
+            return _utc_iso(v) if is_ts else v.isoformat()
+
         rows = (
             df.groupBy(F.input_file_name().alias("f"))
             .agg(
-                F.min(event_time_col).alias("mn"),
-                F.max(event_time_col).alias("mx"),
+                as_recorded(F.min(event_time_col)).alias("mn"),
+                as_recorded(F.max(event_time_col)).alias("mx"),
                 F.sum(dead.cast("long")).alias("n_dead"),
-                F.min(F.when(dead, F.col(event_time_col))).alias("dead_mn"),
+                as_recorded(F.min(F.when(dead, F.col(event_time_col)))).alias(
+                    "dead_mn"
+                ),
             )
             .collect()
         )
@@ -452,11 +542,7 @@ class LakeTable:
             path = urllib.parse.unquote(urllib.parse.urlparse(r["f"]).path)
             by_rel[os.path.relpath(path, self.root)] = r
         file_stats = {
-            rel: [
-                r["mn"].isoformat() if r["mn"] is not None else None,
-                r["mx"].isoformat() if r["mx"] is not None else None,
-            ]
-            for rel, r in by_rel.items()
+            rel: [render(r["mn"]), render(r["mx"])] for rel, r in by_rel.items()
         }
         if not has_tomb:
             return None, file_stats
@@ -477,7 +563,7 @@ class LakeTable:
                 dm = r["dead_mn"]
                 if dm is not None and (mn is None or dm < mn):
                     mn = dm
-            bucket_stats[bucket] = [n, mn.isoformat() if mn is not None else None]
+            bucket_stats[bucket] = [n, render(mn)]
         return bucket_stats, file_stats
 
     @staticmethod
@@ -619,7 +705,12 @@ class LakeTable:
         in_range = None
         if time_range is not None:
             in_range = self._time_range_predicate(snap, time_range)
-            paths = self._prune_paths_by_time(snap, paths, time_range)
+            paths = self._prune_paths_by_time(
+                snap,
+                paths,
+                time_range,
+                spark.conf.get("spark.sql.session.timeZone"),
+            )
         if not paths:
             df = spark.createDataFrame([], read_schema)
         else:
@@ -670,34 +761,27 @@ class LakeTable:
 
     @staticmethod
     def _prune_paths_by_time(
-        snap: Snapshot, paths: list[str], time_range: tuple
+        snap: Snapshot, paths: list[str], time_range: tuple, session_tz: str
     ) -> list[str]:
         """Drop files whose recorded [min, max] event-time bounds prove
         no row can satisfy ``lo <= t <= hi``. Files with no recorded
         bounds are kept (unknown is never pruned); [null, null] files
         hold only null event times and are pruned (a range predicate
-        excludes nulls)."""
-        import datetime as dt
-
+        excludes nulls). Bounds and the caller's range compare as UTC
+        instants, the range read the way ``_time_range_predicate``'s
+        filter reads it (strings in ``session_tz``), so a pruned read
+        equals an unpruned one in any session zone."""
         stats = snap.file_stats or {}
         entries = stats.get("files")
         if not entries:
             return paths
-
-        def _parse(x):
-            if x is None or isinstance(x, dt.datetime):
-                return x
-            return dt.datetime.fromisoformat(str(x))
-
         try:
-            lo, hi = (_parse(x) for x in time_range)
+            lo, hi = (
+                _bound_instants(x, session_tz) if x is not None else None
+                for x in time_range
+            )
         except (TypeError, ValueError):
             return paths  # unusable range: correctness over pruning
-        if (lo is not None and lo.tzinfo is not None) or (
-            hi is not None and hi.tzinfo is not None
-        ):
-            # recorded bounds are session-naive; don't guess a tz mapping
-            return paths
         out = []
         for p in paths:
             ent = entries.get(p)
@@ -707,12 +791,12 @@ class LakeTable:
             mn, mx = ent
             if mn is None and mx is None:
                 continue  # only null event times: no range can match
-            mn = dt.datetime.fromisoformat(mn) if mn is not None else None
-            mx = dt.datetime.fromisoformat(mx) if mx is not None else None
-            if lo is not None and mx is not None and mx < lo:
-                continue
-            if hi is not None and mn is not None and mn > hi:
-                continue
+            if lo is not None and mx is not None:
+                if _recorded_instants(mx, session_tz)[1] < lo[0]:
+                    continue
+            if hi is not None and mn is not None:
+                if _recorded_instants(mn, session_tz)[0] > hi[1]:
+                    continue
             out.append(p)
         return out
 
@@ -727,9 +811,13 @@ class LakeTable:
         already_partitioned: bool = False,
         sort_col: str | None = None,
         max_records_per_file: int | None = None,
+        derived_cols: dict | None = None,
     ) -> dict[str, list[str]]:
         """Write ``df`` (must carry BUCKET_COL) under data/v<version>,
         one directory per bucket; returns bucket -> relative file paths.
+        ``derived_cols`` (the snapshot's hidden columns) are evaluated
+        here, so every rewrite carries them and fills them where a
+        legacy input file lacked them.
 
         ``repartition(BUCKET_COL)`` + ``partitionBy`` keeps one shuffle
         and writes each bucket's rows contiguously (at 100 TB this is
@@ -750,6 +838,8 @@ class LakeTable:
         tight parquet min/max for predicate pushdown either way.
         """
         out_dir = self._data_dir(version)
+        for name, sql in (derived_cols or {}).items():
+            df = df.withColumn(name, F.expr(sql))
         with_dir = df.withColumn(_PARTITION_DIR_COL, F.col(BUCKET_COL))
         if not already_partitioned:
             with_dir = with_dir.repartition(F.col(BUCKET_COL))
@@ -778,18 +868,21 @@ class LakeTable:
     def read_bucket_files(root: str, paths: list[str], schema: T.StructType):
         """Read data files (relative to ``root``, through the filesystem
         seam) as ONE ``pyarrow.Table`` in the table's write layout (see
-        :func:`arrow_schema`). Each file is cast to that layout before
-        the concat: the Spark writer stores timestamps as INT96, which
-        read back as naive ``timestamp[ns]`` holding UTC wall time,
+        :func:`arrow_schema`), and the set of ``schema`` columns some
+        file lacked. Each file is cast to that layout before the concat:
+        the Spark writer stores timestamps as INT96, which read back as
+        naive ``timestamp[ns]`` holding UTC wall time,
         ``write_bucket_file`` stores ``timestamp[us, tz=UTC]``, and files
-        older than an additive schema change lack its columns (read as
-        nulls) — ``concat_tables`` refuses to mix any of these as is."""
+        older than an additive schema change (or a derived column's
+        declaration) lack its columns (read as nulls) —
+        ``concat_tables`` refuses to mix any of these as is."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         target = arrow_schema(schema)
         filesystem, base = _resolve_filesystem(root)
         tables = [target.empty_table()]
+        absent: set[str] = set()
         for p in paths:
             # use_threads=False: parallelism comes from Spark tasks;
             # Arrow's default per-call pool (cpu_count threads in EVERY
@@ -797,6 +890,7 @@ class LakeTable:
             got = pq.read_table(
                 f"{base}/{p}", filesystem=filesystem, use_threads=False
             )
+            absent.update(f.name for f in target if f.name not in got.column_names)
             tables.append(
                 pa.Table.from_arrays(
                     [
@@ -808,7 +902,7 @@ class LakeTable:
                     schema=target,
                 )
             )
-        return pa.concat_tables(tables)
+        return pa.concat_tables(tables), absent
 
     @staticmethod
     def write_bucket_file(
@@ -828,10 +922,7 @@ class LakeTable:
         filesystem seam, so a retried task replaces its own file and a
         reader never sees a partial one. The stats are exact and carry
         ``_scan_write_stats``' semantics: min/max ignore nulls and
-        timestamps render as the naive local time PySpark's ``collect``
-        gives (``TimestampType.fromInternal``)."""
-        import datetime as dt
-
+        timestamps render as ISO UTC instants."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
@@ -840,12 +931,7 @@ class LakeTable:
             if not scalar.is_valid:
                 return None
             if pa.types.is_timestamp(scalar.type):
-                us = scalar.cast(pa.timestamp("us", tz="UTC")).value
-                return (
-                    dt.datetime.fromtimestamp(us // 1_000_000)
-                    .replace(microsecond=us % 1_000_000)
-                    .isoformat()
-                )
+                return _utc_iso(scalar.cast(pa.timestamp("us", tz="UTC")).value)
             return scalar.as_py().isoformat()
 
         if event_time_col in data.column_names:
@@ -944,9 +1030,10 @@ class LakeTable:
         splits a big bucket into several time-consecutive files
         (tighter pruning; Iceberg's target-file-size knob).
 
-        A :class:`BucketFileWrite` runs after the version claim and
-        supplies the written files and their stats itself (the SPJ
-        merge); its files and bytes land in the summary as
+        A :class:`BucketFileWrite` runs after the version claim (or
+        brings the version its writer claimed) and supplies the written
+        files and their stats itself (the SPJ merge, the rollup partials
+        it writes); its files and bytes land in the summary as
         ``files_added``/``bytes_written``. Everything from the publish
         on — rebase, conflict checks, the missing-file check — is the
         same for both kinds of input.
@@ -958,13 +1045,16 @@ class LakeTable:
         # onto a head with a DIFFERENT spec is never safe (see below).
         base_n_buckets = head.n_buckets
         base_key_cols = list(head.key_cols)
-        version = self._claim_version()
+        if isinstance(new_data, BucketFileWrite) and new_data.version is not None:
+            version = new_data.version  # claimed by the writer of its files
+        else:
+            version = self._claim_version()
         written: dict[str, list[str]] = {}
         written_stats, written_file_stats = None, None
         if isinstance(new_data, BucketFileWrite):
             written, written_stats, written_file_stats, n_bytes = (
                 self._written_from_rows(
-                    new_data.build(version).collect(),
+                    new_data.rows(version),
                     schema or head.schema,
                     event_time_col,
                 )
@@ -982,6 +1072,7 @@ class LakeTable:
                 already_partitioned=already_bucket_partitioned,
                 sort_col=event_time_col,
                 max_records_per_file=max_records_per_file,
+                derived_cols=head.derived_cols,
             )
             if event_time_col is not None and written:
                 written_stats, written_file_stats = self._scan_write_stats(
@@ -1027,6 +1118,7 @@ class LakeTable:
                 file_stats=self._merge_file_stats(
                     head, files, written_file_stats, event_time_col
                 ),
+                derived_cols=head.derived_cols,
             )
             if self._publish(snap, written):
                 return snap
@@ -1086,7 +1178,7 @@ class LakeTable:
 
     def append(
         self,
-        df: DataFrame,
+        df: DataFrame | BucketFileWrite,
         summary: dict | None = None,
         event_time_col: str | None = None,
         max_records_per_file: int | None = None,
@@ -1099,23 +1191,29 @@ class LakeTable:
         ``compact_files``. ``event_time_col``: cluster the appended
         files on that column and record their per-file [min, max]
         bounds (``read(time_range=...)`` then skips whole appends
-        outside the window — the append-table pruning story)."""
+        outside the window — the append-table pruning story). A
+        :class:`BucketFileWrite` brings files its ``build`` wrote (the
+        driver-side lineage flush), already hashed into the table's
+        buckets; its files extend the lists the same way."""
         head = self.snapshot()
         version = self._claim_version()
-        with_bucket = df.withColumn(
-            BUCKET_COL, bucket_expr(head.key_cols, head.n_buckets)
-        )
-        written = self._write_data(
-            with_bucket,
-            version,
-            sort_col=event_time_col,
-            max_records_per_file=max_records_per_file,
-        )
         written_file_stats = None
-        if event_time_col is not None and written:
-            _, written_file_stats = self._scan_write_stats(
-                df.sparkSession, written, event_time_col, head.schema
+        if isinstance(df, BucketFileWrite):
+            written, _, written_file_stats, _ = self._written_from_rows(
+                df.rows(version), head.schema, event_time_col
             )
+        else:
+            written = self._write_data(
+                df.withColumn(BUCKET_COL, bucket_expr(head.key_cols, head.n_buckets)),
+                version,
+                sort_col=event_time_col,
+                max_records_per_file=max_records_per_file,
+                derived_cols=head.derived_cols,
+            )
+            if event_time_col is not None and written:
+                _, written_file_stats = self._scan_write_stats(
+                    df.sparkSession, written, event_time_col, head.schema
+                )
         # Appends only EXTEND file lists, so a lost commit race always
         # rebases cleanly onto the winner's head (no overlap possible)
         # — UNLESS the winner changed the bucketing spec, in which case
@@ -1145,6 +1243,7 @@ class LakeTable:
                 file_stats=self._merge_file_stats(
                     head, files, written_file_stats, event_time_col
                 ),
+                derived_cols=head.derived_cols,
             )
             if self._publish(snap, written):
                 return snap
@@ -1416,7 +1515,12 @@ class LakeTable:
         snap = self.snapshot()
         if not any(f.name == DELETED_COL for f in snap.schema.fields):
             return snap
-        candidates = self._expirable_candidates(snap, older_than, event_time_col)
+        candidates = self._expirable_candidates(
+            snap,
+            older_than,
+            event_time_col,
+            spark.conf.get("spark.sql.session.timeZone"),
+        )
         if candidates is not None and not candidates:
             return snap  # manifest proves nothing is expirable: no scan
         horizon = F.to_timestamp(F.lit(older_than)) if isinstance(older_than, str) else F.lit(older_than)
@@ -1447,25 +1551,20 @@ class LakeTable:
 
     @staticmethod
     def _expirable_candidates(
-        snap: Snapshot, older_than, event_time_col: str
+        snap: Snapshot, older_than, event_time_col: str, session_tz: str
     ) -> list[int] | None:
         """Buckets that COULD hold an expirable tombstone, per the
         manifest stats: known-min past the horizon, or state unknown.
-        None = no usable stats (or unparseable horizon) -> scan all."""
-        import datetime as dt
-
+        None = no usable stats (or unparseable horizon) -> scan all.
+        The horizon is read the way the GC filter reads it (a string in
+        ``session_tz``) and compared with the recorded mins as UTC
+        instants."""
         stats = snap.tombstone_stats or {}
         if stats.get("col") != event_time_col:
             return None
-        if isinstance(older_than, dt.datetime):
-            horizon_py = older_than
-        else:
-            try:
-                horizon_py = dt.datetime.fromisoformat(str(older_than))
-            except ValueError:
-                return None
-        if horizon_py.tzinfo is not None:
-            # recorded mins are session-naive; don't guess a tz mapping
+        try:
+            horizon = _bound_instants(older_than, session_tz)[1]
+        except (TypeError, ValueError):
             return None
         known = stats.get("buckets", {})
         out = []
@@ -1475,6 +1574,6 @@ class LakeTable:
                 out.append(int(b))  # unknown state: must scan
                 continue
             n, mn = ent
-            if n and mn is not None and dt.datetime.fromisoformat(mn) < horizon_py:
+            if n and mn is not None and _recorded_instants(mn, session_tz)[0] < horizon:
                 out.append(int(b))
         return out

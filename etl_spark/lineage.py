@@ -9,18 +9,31 @@ a DataFrame plan (clean, dedup, extract) records near-zero ``seconds``;
 the compute lands in whichever stage triggers the action (stats, merge).
 ``seconds`` is therefore "wall-clock attributable to actions started in
 this stage", not per-transformation cost; the per-epoch SUM across
-stages is the meaningful latency number."""
+stages is the meaningful latency number.
+
+A flush writes on the driver: a handful of rows per epoch is not worth
+a Spark job. The bucket ids come from ``bucket_expr`` projected over a
+``LocalRelation`` (evaluated by the JVM without a job), and each
+bucket's rows become one file through ``LakeTable.write_bucket_file``,
+published by ``append``."""
 
 from __future__ import annotations
 
 import time
 from contextlib import contextmanager
+from datetime import datetime, timezone
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 import etl_spark
-from etl_spark.lake.table import LakeTable
+from etl_spark.lake.table import (
+    BUCKET_COL,
+    BucketFileWrite,
+    LakeTable,
+    arrow_schema,
+    bucket_expr,
+)
 from etl_spark.schema import LINEAGE_SCHEMA
 
 
@@ -82,12 +95,10 @@ class LineageLog:
         eps = (n_events / seconds) if seconds else 0.0
         lag = None
         if max_event_ts is not None:
-            # the session is pinned UTC (session.py), so the collected
-            # naive datetime is UTC — interpret it explicitly rather
-            # than trusting the driver host's local timezone
-            from datetime import timezone
-
-            lag = now - max_event_ts.replace(tzinfo=timezone.utc).timestamp()
+            # ``collect`` renders a timestamp as a naive wall time in the
+            # driver's process zone, which is exactly what a naive
+            # ``timestamp()`` reads it back in
+            lag = now - max_event_ts.timestamp()
         self.rows.append(
             (
                 epoch,
@@ -113,7 +124,8 @@ class LineageLog:
         # (e.g. ``status`` in 0.2) keeps its old snapshot schema, and
         # LakeTable.read's explicit read-schema would silently drop the
         # new columns forever. Evolve on flush, same as the pages table.
-        have = {f.name for f in self.table.snapshot().schema.fields}
+        snap = self.table.snapshot()
+        have = {f.name for f in snap.schema.fields}
         missing = [
             # forced nullable: pre-evolution files read the column as null
             T.StructField(f.name, f.dataType, True)
@@ -121,25 +133,43 @@ class LineageLog:
             if f.name not in have
         ]
         if missing:
-            self.table.add_columns(missing)
-        # An Arrow table typed from LINEAGE_SCHEMA plans as a
-        # LocalRelation: the append runs on the JVM alone (a list of
-        # tuples becomes a Python RDD, i.e. Python-worker tasks, each
-        # with a fixed start-up cost), and nullable longs stay exact
-        # int64 instead of detouring through float64.
+            snap = self.table.add_columns(missing)
         import pyarrow as pa
-        import pyspark.sql.functions as F
-        from pyspark.sql.pandas.types import to_arrow_schema
+        import pyarrow.compute as pc
 
-        arrow_schema = to_arrow_schema(LINEAGE_SCHEMA)
-        columns = zip(*self.rows)
+        # Arrow arrays typed from the table schema: nullable longs stay
+        # exact int64 (no float64 detour); committed_at is the driver's
+        # clock as a UTC instant
+        committed = datetime.now(timezone.utc)
+        columns = dict(
+            zip(
+                LINEAGE_SCHEMA.fieldNames(),
+                zip(*(r[:-1] + (committed,) for r in self.rows)),
+            )
+        )
+        layout = arrow_schema(snap.schema)
         table = pa.Table.from_arrays(
-            [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
-            schema=arrow_schema,
+            [pa.array(columns.get(f.name, [None] * len(self.rows)), f.type) for f in layout],
+            schema=layout,
         )
-        df = spark.createDataFrame(table, LINEAGE_SCHEMA)
-        self.table.append(
-            df.withColumn("committed_at", F.current_timestamp()),
-            summary={"operation": "lineage"},
+        # bucket ids from bucket_expr itself, projected over a
+        # LocalRelation: the JVM evaluates it without starting a job
+        buckets = spark.createDataFrame(table.select(snap.key_cols)).select(
+            bucket_expr(snap.key_cols, snap.n_buckets)
         )
+        table = table.append_column(
+            pa.field(BUCKET_COL, pa.int32()),
+            pa.array([r[0] for r in buckets.collect()], pa.int32()),
+        )
+        root = self.table.root
+
+        def write(version: int) -> list[dict]:
+            return [
+                LakeTable.write_bucket_file(
+                    root, version, b, table.filter(pc.field(BUCKET_COL) == b), None
+                )
+                for b in sorted(set(table[BUCKET_COL].to_pylist()))
+            ]
+
+        self.table.append(BucketFileWrite(write), summary={"operation": "lineage"})
         self.rows.clear()

@@ -46,6 +46,9 @@ def clean_changes(changes: DataFrame) -> DataFrame:
         & url.isNotNull()
         & url.startswith("https://")
         & (F.length(url) <= MAX_URL_LEN)
+        # java.net.URI must parse it: domain_of raises on an unparsable
+        # url (ANSI parse_url), after the row would already be stored
+        & F.try_parse_url(url, F.lit("PROTOCOL")).isNotNull()
         & F.col("warc_ts").isNotNull()
         & (F.col("warc_ts") >= F.to_timestamp(F.lit(TS_LO)))
         & (F.col("warc_ts") < F.to_timestamp(F.lit(TS_HI)))

@@ -50,12 +50,23 @@ Inside the grouped-map kernel (one call per bucket, Arrow-batched):
      (``LakeTable.write_bucket_file``: deterministic name, tmp +
      rename through the same seam), and the kernel returns ONE row —
      path, rows, bytes, [min, max] event time, tombstone count and
-     earliest tombstone time — computed from the arrays it holds.
+     earliest tombstone time — computed from the arrays it holds;
+  6. rollup partials: when the caller claimed a rollup version, the
+     bucket's live rows are aggregated (``rollup.bucket_partials``) and
+     written as the rollup's ``src_bucket`` file in the same task; its
+     path, rows and bytes ride on the same returned row.
+
+Hidden derived columns (``Snapshot.derived_cols``, the pages table's
+``_domain``) are evaluated in the JVM on the delta before the shuffle
+and carried like payload: the kernel never re-implements them. A
+bucket whose stored files predate such a column is written without
+it, and its partials are reported unknown (``rollup_rows`` null).
 
 The kernel runs inside ``LakeTable.commit`` (a :class:`BucketFileWrite`):
 the commit claims the version, runs the kernel job, and publishes the
-collected rows through the usual protocol. No bucket crosses back to
-the JVM, and there is no Spark write job and no stats re-scan. Hot
+collected rows through the usual protocol; the rollup commit publishes
+the partial files right after. No bucket crosses back to the JVM, and
+there is no Spark write job, no stats re-scan and no rollup job. Hot
 keys: when the stats pre-pass sees a key above threshold, a JVM salted
 pre-reduce runs BEFORE the grouped map so no pandas group ever
 materializes a hot key's full row set.
@@ -88,8 +99,25 @@ from etl_spark.lake.table import (
     repartition_by_bucket,
 )
 from etl_spark.operators.dedup import salted_lww_dedup
+from etl_spark.operators.rollup import (
+    KernelPartials,
+    bucket_partials,
+    claim_kernel_partials,
+)
 
 OP_COL = "op"
+
+# The kernel's row per bucket: the pages file, then the rollup partial
+# file written next to it (all null when no rollup version was claimed;
+# ``rollup_rows`` null = partials unknown, 0 = no live page, no file).
+KERNEL_SCHEMA = T.StructType(
+    BUCKET_FILE_SCHEMA.fields
+    + [
+        T.StructField("rollup_path", T.StringType(), True),
+        T.StructField("rollup_rows", T.LongType(), True),
+        T.StructField("rollup_bytes", T.LongType(), True),
+    ]
+)
 
 
 @dataclass
@@ -99,6 +127,8 @@ class MergeStats:
     touched_buckets: int
     delta_rows: int
     version: int
+    # rollup partial files the kernel wrote (None: none were claimed)
+    partials: KernelPartials | None = None
 
 
 def evolve_for_delta(table: LakeTable, delta: DataFrame) -> Snapshot:
@@ -184,10 +214,12 @@ def make_bucket_merger(
     order_cols: list[str],
     extracted: bool,
     session_tz: str,
+    hidden: list[T.StructField] = (),
+    rollup: tuple[str, int] | None = None,
 ):
     """Build the grouped-map kernel: it merges one bucket, writes the
     result as ``data/v<version>/_pb=<bucket>/`` (``LakeTable.
-    write_bucket_file``) and returns that file's ``BUCKET_FILE_SCHEMA``
+    write_bucket_file``) and returns that file's ``KERNEL_SCHEMA``
     row — one small row per bucket crosses back to the JVM, never the
     bucket itself.
 
@@ -204,15 +236,23 @@ def make_bucket_merger(
     UTC instants (Spark's own rule for the naive side: an ambiguous
     wall time is read as standard time) and arbitrates and writes
     ``timestamp[us, tz=UTC]`` — so a bucket rewrite never shifts the
-    rows it carries through, whatever the session zone."""
+    rows it carries through, whatever the session zone.
+
+    ``hidden``: the table's derived columns, present on the delta and
+    carried into the file when every current file has them.
+    ``rollup`` = (rollup root, claimed rollup version): also write the
+    bucket's rollup partial file there and report it on the row."""
     payload_cols = [f.name for f in schema.fields]
-    out_cols = payload_cols + [BUCKET_COL]
+    hidden_cols = [f.name for f in hidden]
+    carry_cols = payload_cols + hidden_cols
     ts_col = order_cols[0]
     ts_cols = [f.name for f in schema.fields if isinstance(f.dataType, T.TimestampType)]
-    write_schema = arrow_schema(
-        T.StructType(schema.fields + [T.StructField(BUCKET_COL, T.IntegerType())])
-    )
-
+    bucket_field = [T.StructField(BUCKET_COL, T.IntegerType())]
+    with_hidden = T.StructType(schema.fields + list(hidden))
+    # the file layout, with the hidden columns and without (a bucket
+    # whose stored files predate one cannot carry it)
+    full_layout = arrow_schema(T.StructType(with_hidden.fields + bucket_field))
+    bare_layout = arrow_schema(T.StructType(schema.fields + bucket_field))
     def merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         import pyarrow as pa
 
@@ -222,7 +262,7 @@ def make_bucket_merger(
             else files_by_bucket
         )
         if pdf.empty:
-            return pd.DataFrame(columns=BUCKET_FILE_SCHEMA.fieldNames())
+            return pd.DataFrame(columns=KERNEL_SCHEMA.fieldNames())
         bucket = int(pdf[BUCKET_COL].iloc[0])
         for c in ts_cols:
             if c in pdf.columns:
@@ -263,7 +303,7 @@ def make_bucket_merger(
         if not extracted and "html" in winners.columns:
             winners["text"] = extract_text_series(winners["html"])
         # pre-evolution deltas may lack later-added payload columns
-        for c in payload_cols:
+        for c in carry_cols:
             if c not in winners.columns:
                 winners[c] = None
 
@@ -272,10 +312,15 @@ def make_bucket_merger(
         # file cast to one layout: timestamps as UTC instants, columns
         # an older file lacks as nulls. int64 -> nullable Int64 at the
         # Arrow boundary: the default conversion renders
-        # int64-with-nulls as float64, already lossy above 2^53.
-        cur = LakeTable.read_bucket_files(
-            root, files_map.get(str(bucket), []), schema
-        ).to_pandas(
+        # int64-with-nulls as float64, already lossy above 2^53. A
+        # current file without a derived column leaves its value
+        # unknown for this bucket: the column is not written and the
+        # rollup partials are not computed.
+        cur_table, absent = LakeTable.read_bucket_files(
+            root, files_map.get(str(bucket), []), with_hidden
+        )
+        known = not absent.intersection(hidden_cols)
+        cur = cur_table.to_pandas(
             use_threads=False, types_mapper={pa.int64(): pd.Int64Dtype()}.get
         )
 
@@ -331,10 +376,12 @@ def make_bucket_merger(
 
         parts = []
         if keep_delta.any():
-            dv = merged.loc[keep_delta, payload_cols].copy()
+            dv = merged.loc[keep_delta, carry_cols].copy()
             if tombstoning:
                 tomb = is_delete.loc[keep_delta]
-                preserve = set(key_cols) | set(order_cols) | {DELETED_COL}
+                preserve = (
+                    set(key_cols) | set(order_cols) | {DELETED_COL} | set(hidden_cols)
+                )
                 for c in payload_cols:
                     if c not in preserve:
                         dv.loc[tomb, c] = None
@@ -342,25 +389,58 @@ def make_bucket_merger(
             parts.append(dv)
         if keep_cur.any():
             cur_view = merged.loc[keep_cur].copy()
-            for c in payload_cols:
+            for c in carry_cols:
                 cc = f"{c}_cur"
                 if cc in cur_view.columns:
                     cur_view[c] = cur_view[cc]
-            parts.append(cur_view[payload_cols])
+            parts.append(cur_view[carry_cols])
         if not parts:
-            return pd.DataFrame(columns=BUCKET_FILE_SCHEMA.fieldNames())
+            return pd.DataFrame(columns=KERNEL_SCHEMA.fieldNames())
         # 5. write the bucket's one file and hand back its stats row.
         out = pd.concat(parts, ignore_index=True)
         out[BUCKET_COL] = bucket
+        layout = full_layout if known else bare_layout
         data = pa.Table.from_pandas(
-            _arrow_safe(out, schema)[out_cols],
-            schema=write_schema,
+            _arrow_safe(out, schema)[layout.names],
+            schema=layout,
             preserve_index=False,
         )
         row = LakeTable.write_bucket_file(root, version, bucket, data, ts_col)
+        row.update(rollup_path=None, rollup_rows=None, rollup_bytes=None)
+        # 6. the bucket's rollup partials, from the rows just written.
+        if rollup is not None and known:
+            partials = bucket_partials(data, bucket, session_tz)
+            row["rollup_rows"] = partials.num_rows
+            if partials.num_rows:
+                written = LakeTable.write_bucket_file(
+                    rollup[0], rollup[1], bucket, partials, None
+                )
+                row["rollup_path"] = written["path"]
+                row["rollup_bytes"] = written["bytes"]
         return pd.DataFrame([row])
 
     return merge_bucket
+
+
+def _partial_rows(kernel_rows) -> list[dict] | None:
+    """The rollup's ``BUCKET_FILE_SCHEMA`` rows from the kernel's rows,
+    or None when some bucket's partials are unknown."""
+    if any(r["rollup_rows"] is None for r in kernel_rows):
+        return None
+    return [
+        {
+            BUCKET_COL: r[BUCKET_COL],
+            "path": r["rollup_path"],
+            "rows": r["rollup_rows"],
+            "bytes": r["rollup_bytes"],
+            "ts_min": None,
+            "ts_max": None,
+            "n_dead": 0,
+            "dead_min": None,
+        }
+        for r in kernel_rows
+        if r["rollup_path"] is not None
+    ]
 
 
 def merge_epoch_spj(
@@ -374,6 +454,7 @@ def merge_epoch_spj(
     hot: bool = False,
     n_salts: int = 16,
     extracted: bool = False,
+    rollup: LakeTable | None = None,
 ) -> MergeStats:
     """Apply one epoch via the single-shuffle grouped-map merge.
 
@@ -381,6 +462,12 @@ def merge_epoch_spj(
     correctness of deletes: a bucket whose merge output is empty writes
     no files, and only the touched list tells the commit to drop the
     old ones. ``hot``: run the JVM salted pre-reduce first.
+
+    ``rollup``: the warehouse's rollup table. When it can take kernel
+    partials (``rollup.claim_kernel_partials``) a rollup version is
+    claimed before the kernel job, the kernel writes each touched
+    bucket's partial file under it, and the result's ``partials`` hand
+    those files to ``rollup_domain_stats`` to publish.
     """
     order_cols = list(order_cols)
     if epoch in table.applied_epochs():
@@ -454,6 +541,11 @@ def merge_epoch_spj(
                 f"{c}__tb",
                 F.coalesce(F.col(c).try_cast("long"), F.lit(TB_SENTINEL)),
             )
+    # the table's hidden derived columns, evaluated in the JVM here so
+    # the kernel carries them without re-implementing them
+    for name, sql in snap.derived_cols.items():
+        delta = delta.withColumn(name, F.expr(sql))
+    hidden = [delta.schema[name] for name in snap.derived_cols]
     bucketed = repartition_by_bucket(
         delta.withColumn(BUCKET_COL, bucket_expr(key_cols, snap.n_buckets)),
         touched,
@@ -462,6 +554,9 @@ def merge_epoch_spj(
         {b: snap.files.get(str(b), []) for b in map(str, touched)}
     )
     session_tz = spark.conf.get("spark.sql.session.timeZone")
+    rollup_version = (
+        claim_kernel_partials(snap, rollup, epoch) if rollup is not None else None
+    )
 
     def kernel_job(version: int) -> DataFrame:
         kernel = make_bucket_merger(
@@ -473,13 +568,16 @@ def merge_epoch_spj(
             order_cols,
             extracted,
             session_tz,
+            hidden=hidden,
+            rollup=(rollup.root, rollup_version) if rollup_version else None,
         )
-        return bucketed.groupBy(BUCKET_COL).applyInPandas(
-            kernel, BUCKET_FILE_SCHEMA
-        )
+        return bucketed.groupBy(BUCKET_COL).applyInPandas(kernel, KERNEL_SCHEMA)
 
+    # the kernel's rows, when its job ran (an epoch another writer
+    # applied first returns before building it)
+    kernel_rows: list[list] = []
     new_snap = table.commit(
-        BucketFileWrite(kernel_job),
+        BucketFileWrite(kernel_job, collected=kernel_rows.append),
         touched_buckets=touched,
         applied_epoch=epoch,
         # the LWW order column is the stream's event time: recording
@@ -494,10 +592,14 @@ def merge_epoch_spj(
             "touched_list": touched,
         },
     )
+    partials = None
+    if rollup_version is not None and kernel_rows:
+        partials = KernelPartials(rollup_version, _partial_rows(kernel_rows[0]))
     return MergeStats(
         epoch,
         False,
         len(touched),
         delta_rows if delta_rows is not None else -1,
         new_snap.version,
+        partials,
     )

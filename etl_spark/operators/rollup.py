@@ -21,9 +21,24 @@ Purity: partials are a pure function of the pages snapshot (SURVEY.md
 K5 note: "compute-before-write (preferred: make rollups pure)") —
 replaying an epoch regenerates identical partials, so the rollup is
 exactly-once by construction, with the applied-epoch guard on top.
+
+Where partials are computed: the merge kernel already holds each
+touched bucket's final rows in Arrow, so it aggregates them
+(:func:`bucket_partials`) and writes the bucket's partial file in the
+same task, under a rollup version claimed before the kernel job
+(:func:`claim_kernel_partials`). The domain is not re-derived in
+Python: the pages table declares a hidden ``_domain`` column,
+``domain_of(url)`` evaluated in the JVM, and every pages file carries
+it. The epoch's rollup commit then only publishes the returned file
+rows — no Spark job. A touched bucket whose stored files predate the
+column makes the kernel's partials unknown, and that epoch's rollup
+recomputes the touched buckets' partials with Spark, as do the
+crash-window repair and a full refresh.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,11 +47,20 @@ from pyspark.sql import types as T
 from etl_spark.functions.keys import smart_date_id
 from etl_spark.lake.table import (
     BUCKET_COL,
+    DELETED_COL,
+    BucketFileWrite,
     CommitConflictError,
     LakeTable,
+    Snapshot,
+    arrow_schema,
     repartition_by_bucket,
 )
 from etl_spark.operators.clean import domain_of
+
+# The pages table's hidden derived column (``Snapshot.derived_cols``):
+# ``domain_of(url)`` as Spark SQL, evaluated in the JVM by every writer.
+DOMAIN_COL = "_domain"
+DOMAIN_SQL = "parse_url(url, 'HOST')"
 
 # Manifest-layout stamp carried in every rollup commit summary: the
 # bucket-granular replace below is only valid when manifest keys are
@@ -79,12 +103,106 @@ def compute_partials(pages_df: DataFrame) -> DataFrame:
     )
 
 
+@dataclass
+class KernelPartials:
+    """Rollup partial files the merge kernel wrote for one epoch.
+
+    ``version`` is the rollup version claimed before the kernel job;
+    ``rows`` are the ``BUCKET_FILE_SCHEMA`` rows of the files written
+    under it (a touched bucket left with no live page has none), or
+    None when some touched bucket's partials are unknown."""
+
+    version: int
+    rows: list[dict] | None
+
+
+def claim_kernel_partials(
+    pages_snap: Snapshot, rollup: LakeTable, epoch: int
+) -> int | None:
+    """Claim the rollup version the merge kernel writes partial files
+    under, or None when the epoch's rollup cannot take them: the pages
+    table declares no ``_domain``, the epoch's rollup already landed,
+    or the rollup table holds data without the current layout stamp
+    (it needs a full refresh first)."""
+    if DOMAIN_COL not in pages_snap.derived_cols or epoch in rollup.applied_epochs():
+        return None
+    head = rollup.snapshot()
+    if any(head.files.values()) and head.summary.get("layout") != layout_stamp(
+        pages_snap.n_buckets
+    ):
+        return None
+    return rollup._claim_version()
+
+
+PARTIAL_SCHEMA = T.StructType(
+    ROLLUP_SCHEMA.fields + [T.StructField(BUCKET_COL, T.IntegerType())]
+)
+
+
+def bucket_partials(data, bucket: int, session_tz: str):
+    """:func:`compute_partials` over one pages bucket's rows (a
+    ``pyarrow.Table`` carrying ``_domain``), in the rollup's file
+    layout: live rows only, grouped on (domain, day_id) with null
+    domains kept as a group; ``day_id`` is ``smart_date_id`` in the
+    session zone; ``text_chars`` sums code-point lengths (Spark's
+    ``length``), skipping null text."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if DELETED_COL in data.column_names:
+        data = data.filter(pc.invert(pc.fill_null(data[DELETED_COL], False)))
+    local = data["warc_ts"].cast(pa.timestamp("us", tz=session_tz))
+    day_id = pc.fill_null(
+        pc.add(
+            pc.add(
+                pc.multiply(pc.year(local), 10000), pc.multiply(pc.month(local), 100)
+            ),
+            pc.day(local),
+        ),
+        -1,
+    )
+    grouped = (
+        pa.table(
+            {
+                "domain": data[DOMAIN_COL],
+                "day_id": day_id.cast(pa.int32()),
+                "chars": pc.utf8_length(data["text"]).cast(pa.int64()),
+                "ts": data["warc_ts"],
+            }
+        )
+        .group_by(["domain", "day_id"])
+        .aggregate(
+            [
+                ("domain", "count", pc.CountOptions(mode="all")),
+                ("chars", "sum"),
+                ("ts", "max"),
+            ]
+        )
+    )
+    n = grouped.num_rows
+    src = pa.array([bucket] * n, pa.int32())
+    target = arrow_schema(PARTIAL_SCHEMA)
+    return pa.Table.from_arrays(
+        [
+            src,
+            grouped["domain"],
+            grouped["day_id"],
+            grouped["domain_count"],
+            grouped["chars_sum"],
+            grouped["ts_max"].cast(target.field("max_warc_ts").type),
+            src,
+        ],
+        schema=target,
+    )
+
+
 def rollup_domain_stats(
     spark: SparkSession,
     pages: LakeTable,
     rollup: LakeTable,
     epoch: int,
     touched_buckets: list[int] | None = None,
+    partials: KernelPartials | None = None,
 ) -> None:
     """Refresh partials for (only) the buckets the epoch touched.
 
@@ -93,7 +211,13 @@ def rollup_domain_stats(
     files carry forward by manifest reference — the same bucket-granular
     copy-on-write ``merge_epoch_spj`` uses for pages. A touched src_bucket
     that ends up with zero pages simply writes no partial file and its
-    old entry is dropped from the manifest."""
+    old entry is dropped from the manifest.
+
+    ``partials``: the files the merge kernel wrote for this epoch. When
+    they are known they are published as they are, a metadata-only
+    commit under the version claimed for them; otherwise (or with no
+    ``touched_buckets``, or an unstamped table) the partials are
+    recomputed from the pages table with Spark."""
     if epoch in rollup.applied_epochs():
         return
     psnap = pages.snapshot()
@@ -140,6 +264,14 @@ def rollup_domain_stats(
         )
     if not touched_buckets:
         rollup.commit(None, applied_epoch=epoch, summary=summary)
+        return
+    if partials is not None and partials.rows is not None:
+        rollup.commit(
+            BucketFileWrite(lambda _v: partials.rows, version=partials.version),
+            touched_buckets=[int(b) for b in touched_buckets],
+            applied_epoch=epoch,
+            summary=summary,
+        )
         return
     # One explicit shuffle on the pages bucket: the partial aggregate's
     # (src_bucket, domain, day_id) clustering is already satisfied by it

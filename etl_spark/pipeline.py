@@ -1,6 +1,9 @@
 """The end-to-end ingest pipeline: tail -> clean -> stats -> merge
-(dedup -> extract -> arbitrate, one grouped-map pass) -> rollup ->
-lineage, one epoch per call.
+(dedup -> extract -> arbitrate -> write -> rollup partials, one
+grouped-map pass) -> rollup publish -> lineage, one epoch per call.
+An epoch runs two Spark steps, the stats pre-pass and the kernel job;
+the rollup and lineage commits publish files already written (by the
+kernel, and by the driver) without a job of their own.
 
 This is the Spark re-expression of the reference's per-day load
 (/root/reference/main.py:98-147: ensure file -> clean -> build
@@ -48,10 +51,17 @@ class Warehouse:
     def init(root: str, n_buckets: int = 16) -> "Warehouse":
         """Bootstrap DDL — successor of `main.py --init`
         (/root/reference/etl/init_database.py:72-83)."""
+        from etl_spark.operators.rollup import DOMAIN_COL, DOMAIN_SQL, ROLLUP_SCHEMA
+
         pages = LakeTable.create(
-            os.path.join(root, PAGES), S.PAGES_SCHEMA_V0, ["url"], n_buckets
+            os.path.join(root, PAGES),
+            S.PAGES_SCHEMA_V0,
+            ["url"],
+            n_buckets,
+            # every pages file carries domain_of(url): the merge kernel
+            # computes the epoch's rollup partials from it
+            derived_cols={DOMAIN_COL: DOMAIN_SQL},
         )
-        from etl_spark.operators.rollup import ROLLUP_SCHEMA
 
         rollup = LakeTable.create(
             os.path.join(root, ROLLUP),
@@ -149,6 +159,7 @@ def ingest_epoch(
                 touched_buckets=touched,
                 delta_rows=n_keys,
                 hot=max_key_n >= hot_threshold,
+                rollup=wh.rollup if with_rollup else None,
             )
             rec["rows_out"] = stats.delta_rows
 
@@ -158,9 +169,14 @@ def ingest_epoch(
                 # keeps an empty epoch a metadata-only rollup commit (the
                 # head-summary fallback would find no touched_list on a
                 # rows=0 merge and full-refresh for an epoch that changed
-                # nothing).
+                # nothing). The kernel's partial files publish as they are.
                 rollup_domain_stats(
-                    spark, wh.pages, wh.rollup, epoch, touched_buckets=touched
+                    spark,
+                    wh.pages,
+                    wh.rollup,
+                    epoch,
+                    touched_buckets=touched,
+                    partials=stats.partials,
                 )
 
         # per-epoch throughput + event-time lag, from stats already in

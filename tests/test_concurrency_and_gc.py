@@ -204,7 +204,7 @@ def test_merge_records_tombstone_stats(spark, tmp_path, merge_path):
     totals = sum(n for n, _ in buckets.values())
     assert totals == 1
     mins = [m for n, m in buckets.values() if n]
-    assert mins == ["2024-01-02T00:00:00"]
+    assert mins == ["2024-01-02T00:00:00+00:00"]
 
 
 def test_gc_scan_prunes_to_manifest_candidates(spark, tmp_path, monkeypatch):

@@ -255,12 +255,57 @@ def test_prune_helper_edge_cases():
         },
     )
     paths = ["a", "b", "c"]
-    pr = LakeTable._prune_paths_by_time
+
+    def pr(snap, paths, time_range):
+        return LakeTable._prune_paths_by_time(snap, paths, time_range, "UTC")
+
     assert pr(snap, paths, ("2024-01-01", "2024-01-03")) == ["a", "c"]
     assert pr(snap, paths, (None, "2024-01-15")) == ["a", "c"]
     assert pr(snap, paths, ("2024-03-01", None)) == ["c"]
-    # tz-aware range: no pruning (bounds are session-naive)
-    aware = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
-    assert pr(snap, paths, (aware, None)) == paths
+    # a tz-aware range compares as the instant it names
+    aware = dt.datetime(2024, 1, 20, tzinfo=dt.timezone.utc)
+    assert pr(snap, paths, (aware, None)) == ["b", "c"]
     # junk range: no pruning
     assert pr(snap, paths, ("not-a-ts", None)) == paths
+
+
+def test_time_range_pruning_under_non_utc_session(spark, tmp_path):
+    """Four rows at 15:00 UTC, session zone New York: the window
+    09:00-11:00 (session wall time, i.e. 14:00-16:00 UTC) holds them
+    all, so the pruned read must return what the unpruned BETWEEN
+    returns. A horizon past the tombstones' instants finds their bucket
+    a GC candidate, whatever zone it is written in."""
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        t = LakeTable.create(str(tmp_path / "t"), SCHEMA, key_cols=["k"], n_buckets=1)
+        at = dt.datetime(2024, 1, 1, 15, tzinfo=dt.timezone.utc)
+        t.commit(
+            spark.createDataFrame([(f"k{i}", at, i) for i in range(4)], SCHEMA)
+            .withColumn("_bucket", F.lit(0)),
+            overwrite_all=True,
+            event_time_col="ts",
+        )
+        lo, hi = "2024-01-01 09:00:00", "2024-01-01 11:00:00"
+        unpruned = t.read(spark).filter(
+            F.col("ts").between(F.to_timestamp(F.lit(lo)), F.to_timestamp(F.lit(hi)))
+        )
+        assert unpruned.count() == 4
+        pruned = t.read(spark, time_range=(lo, hi))
+        assert len(pruned.inputFiles()) == 1 and pruned.count() == 4
+        # a window outside the rows still prunes the file
+        assert t.read(spark, time_range=("2024-01-01 11:00:01", None)).inputFiles() == []
+        (mn, mx), = t.snapshot().file_stats["files"].values()
+        assert mn == mx == "2024-01-01T15:00:00+00:00"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+    snap = t.snapshot()
+    snap.tombstone_stats = {"col": "ts", "buckets": {"0": [1, "2024-01-01T15:00:00+00:00"]}}
+    cands = LakeTable._expirable_candidates
+    past = dt.datetime(2024, 1, 1, 16, tzinfo=dt.timezone.utc)
+    before = dt.datetime(2024, 1, 1, 14, tzinfo=dt.timezone.utc)
+    assert cands(snap, past, "ts", "UTC") == [0]
+    assert cands(snap, before, "ts", "UTC") == []
+    # 10:30 in New York is 15:30 UTC: past the tombstone
+    assert cands(snap, "2024-01-01 10:30:00", "ts", "America/New_York") == [0]
+    assert cands(snap, "2024-01-01 10:30:00", "ts", "UTC") == []

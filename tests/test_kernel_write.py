@@ -352,5 +352,5 @@ def test_kernel_rerun_for_a_bucket_leaves_one_file(tmp_path):
     # clustered on event time
     assert list(got["url"]) == ["https://f.example/b", "https://f.example/a"]
     assert (row["ts_min"], row["ts_max"]) == (
-        "2024-01-01T00:00:00", "2024-01-02T00:00:00"
+        "2024-01-01T00:00:00+00:00", "2024-01-02T00:00:00+00:00"
     )

@@ -176,33 +176,93 @@ def test_lineage_rows_written(spark, tmp_wh):
 
 
 def test_lineage_flush_exact_longs_on_local_relation(spark, tmp_wh):
-    """Flushed lineage rows cross into the JVM as an Arrow table: a null
-    next to a long above 2^53 reads back exactly (no float64 detour),
-    and the appended DataFrame plans as a LocalRelation, so a flush
-    starts no Python-worker task."""
+    """Flushed lineage rows are written on the driver from Arrow arrays:
+    a null next to a long above 2^53 reads back exactly (no float64
+    detour), and the flush — bucket ids, files, publish — starts no
+    Spark job."""
     from etl_spark.lineage import LineageLog
 
     wh = Warehouse.init(tmp_wh, n_buckets=2)
-    appended = []
-    append = wh.lineage.append
-
-    def capture(df, **kw):
-        appended.append(df)
-        return append(df, **kw)
-
-    wh.lineage.append = capture
     log = LineageLog(wh.lineage)
     with log.stage(7, "merge") as rec:
         rec["rows_in"] = None
         rec["rows_out"] = 2**53 + 1
-    log.flush(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("lineage_flush", "flush")
+    try:
+        log.flush(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("lineage_flush") == []
 
     (row,) = wh.lineage.read(spark).collect()
     assert (row.epoch, row.stage, row.status) == (7, "merge", "ok")
     assert row.rows_in is None and row.rows_out == 2**53 + 1
-    (df,) = appended
-    plan = df._jdf.queryExecution().optimizedPlan()
-    assert plan.nodeName() == "LocalRelation", plan.toString()
+    assert row.committed_at is not None
+
+
+def test_lineage_event_lag_under_non_utc_process_zone(spark, tmp_wh):
+    """``collect`` renders the newest event time as a naive wall time in
+    the driver's process zone; the lag must read it back in that zone,
+    not as UTC (which was off by the zone's offset)."""
+    import datetime as dt
+    import os
+    import time
+
+    from etl_spark.lineage import LineageLog
+    from etl_spark.operators.dedup import delta_stats
+
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        newest = dt.datetime.now(dt.timezone.utc) - dt.timedelta(seconds=7)
+        df = spark.createDataFrame(
+            [("https://l.example/1", newest)], "url string, warc_ts timestamp"
+        )
+        st = delta_stats(df, ["url"], 2, ts_col="warc_ts")
+        log = LineageLog(None)
+        log.metrics(0, n_events=st.n_events, max_event_ts=st.max_ts)
+        lag = log.rows[-1][9]
+    finally:
+        if old is None:
+            os.environ.pop("TZ")
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+    assert 6 <= lag < 60, lag
+
+
+def test_unparsable_url_is_cleaned_not_stored(spark, tmp_wh):
+    """``https://a b.com/x`` passes the scheme check but java.net.URI
+    cannot parse it: clean must drop it, or the pages commit stores it
+    and every rollup of its bucket raises INVALID_URL from then on."""
+    wh = Warehouse.init(tmp_wh, n_buckets=2)
+    schema = (
+        "seq long, epoch long, op string, url string, warc_ts string, "
+        "html binary, lang string"
+    )
+
+    def epoch(e, urls):
+        return spark.createDataFrame(
+            [(10 * e + i, e, "I", u, "2024-01-01 00:00:00", b"<p>x</p>", None)
+             for i, u in enumerate(urls)],
+            schema,
+        ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
+
+    ingest_epoch(spark, wh, epoch(0, ["https://ok.example/1"]), 0)
+    ingest_epoch(
+        spark, wh, epoch(1, ["https://a b.com/x", "https://x.com/?q=%zz",
+                             "https://ok.example/2"]), 1,
+    )
+    ingest_epoch(spark, wh, epoch(2, ["https://ok.example/3"]), 2)
+    assert wh.pages.applied_epochs() == wh.rollup.applied_epochs() == {0, 1, 2}
+    assert sorted(r.url for r in wh.pages.read(spark).collect()) == [
+        "https://ok.example/1", "https://ok.example/2", "https://ok.example/3"
+    ]
+    assert [(r.domain, r.n_pages) for r in read_rollup(spark, wh.rollup).collect()] == [
+        ("ok.example", 3)
+    ]
 
 
 def test_rollup_commit_is_bucket_granular(spark, tmp_wh):
