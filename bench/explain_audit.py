@@ -199,13 +199,14 @@ def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
     or write stage above it. An epoch whose rollup takes the kernel's
     partial files, and its lineage flush, must start no Spark job. The
     fallback rollup — an epoch touching a bucket whose stored file
-    lacks ``_domain`` — must run on at most one shuffle, counting the
-    one the write adds unless the commit is told its input is already
-    bucket-partitioned, and that shuffle must be on ``_bucket`` (its
-    partials stay in their bucket's partition through the write)."""
+    lacks ``_domain`` — is a DataFrame commit, whose writer job is a
+    FlatMapGroupsInArrow grouped on ``_bucket``: it must sit on exactly
+    one hash Exchange, on ``_bucket`` (the partial aggregate and the
+    writer's grouping both reuse the explicit bucket shuffle)."""
     import dataclasses
 
     import pyarrow.parquet as pq
+    from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
     from etl_spark import lineage, pipeline
@@ -213,26 +214,29 @@ def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
     from etl_spark.operators.rollup import DOMAIN_COL
 
     wh = pipeline.Warehouse.init(os.path.join(root, "wh_shape"), n_buckets=8)
+    # every commit with data writes through a BucketFileWrite; the
+    # first writer job each table's commit builds is its captured plan
     plans: dict[str, str] = {}
-    write_shuffles: dict[str, int] = {}
+    committing: list[str] = []
     for name, table in (("merge", wh.pages), ("rollup", wh.rollup)):
         def capture(df, _commit=table.commit, _name=name, **kw):
-            if isinstance(df, BucketFileWrite) and df.version is None:
-                def build(version, _build=df.build):
-                    job = _build(version)
-                    plans.setdefault(_name, formatted_plan(job))
-                    return job
-
-                df = dataclasses.replace(df, build=build)
-                write_shuffles.setdefault(_name, 0)
-            elif df is not None and not isinstance(df, BucketFileWrite):
-                plans.setdefault(_name, formatted_plan(df))
-                write_shuffles.setdefault(
-                    _name, 0 if kw.get("already_bucket_partitioned") else 1
-                )
-            return _commit(df, **kw)
+            committing.append(_name)
+            try:
+                return _commit(df, **kw)
+            finally:
+                committing.pop()
 
         table.commit = capture
+    rows = BucketFileWrite.rows
+
+    def captured_rows(write, version):
+        def build(v):
+            job = write.build(v)
+            if isinstance(job, DataFrame) and committing:
+                plans.setdefault(committing[-1], formatted_plan(job))
+            return job
+
+        return rows(dataclasses.replace(write, build=build), version)
 
     def events(epoch):
         return spark.createDataFrame(
@@ -258,16 +262,18 @@ def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
 
     pipeline.rollup_domain_stats = counted("rollup", originals[0])
     lineage.LineageLog.flush = counted("lineage", originals[1])
+    BucketFileWrite.rows = captured_rows
     try:
         pipeline.ingest_epoch(spark, wh, events(0), 0)
+        pipeline.rollup_domain_stats, lineage.LineageLog.flush = originals
+        # a bucket file written before the hidden column existed: drop
+        # it from one stored file, so the next epoch's rollup falls back
+        path = os.path.join(wh.pages.root, wh.pages.snapshot().files["0"][0])
+        pq.write_table(pq.read_table(path).drop_columns([DOMAIN_COL]), path)
+        pipeline.ingest_epoch(spark, wh, events(1), 1, with_lineage=False)
     finally:
         pipeline.rollup_domain_stats, lineage.LineageLog.flush = originals
-
-    # a bucket file written before the hidden column existed: drop it
-    # from one stored file, so the next epoch's rollup falls back
-    path = os.path.join(wh.pages.root, wh.pages.snapshot().files["0"][0])
-    pq.write_table(pq.read_table(path).drop_columns([DOMAIN_COL]), path)
-    pipeline.ingest_epoch(spark, wh, events(1), 1, with_lineage=False)
+        BucketFileWrite.rows = rows
 
     failures = []
     if jobs != {"rollup": 0, "lineage": 0}:
@@ -280,7 +286,6 @@ def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
     ex = shuffle_exchanges(merge)
     if (
         plan_tree(merge)[:2] != ["AdaptiveSparkPlan", "FlatMapGroupsInPandas"]
-        or write_shuffles.get("merge", 1)
         or len(ex) != 1
         or not re.match(by_bucket + ", REPARTITION_BY_NUM", ex[0])
     ):
@@ -288,17 +293,18 @@ def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
             "ingest_stage_shape: SPJ merge must run FlatMapGroupsInPandas as "
             "the job's root on one REPARTITION_BY_NUM hash Exchange on "
             f"_bucket; got {plan_tree(merge)[:2]} on {ex}"
-            f" (+{write_shuffles.get('merge')} at the write)"
         )
-    ex = shuffle_exchanges(plans.get("rollup", ""))
-    n_rollup = len(ex) + write_shuffles.get("rollup", 0)
-    if "rollup" not in plans or n_rollup > 1 or not all(
-        re.match(by_bucket, e) for e in ex
+    rollup = plans.get("rollup", "")
+    ex = shuffle_exchanges(rollup)
+    if (
+        plan_tree(rollup)[:2] != ["AdaptiveSparkPlan", "FlatMapGroupsInArrow"]
+        or len(ex) != 1
+        or not re.match(by_bucket, ex[0])
     ):
         failures.append(
-            "ingest_stage_shape: the fallback per-epoch rollup must run on "
-            f"<= 1 Exchange, on _bucket; got {ex} "
-            f"(+{write_shuffles.get('rollup')} at the write)"
+            "ingest_stage_shape: the fallback per-epoch rollup's writer job "
+            "must run FlatMapGroupsInArrow as its root on exactly one hash "
+            f"Exchange on _bucket; got {plan_tree(rollup)[:2]} on {ex}"
         )
     return plans, failures
 

@@ -24,7 +24,7 @@ It replaces, Spark-natively, the reference's warehouse mechanics:
 Layout::
 
     <root>/
-      data/v<version>/_pb=<bucket>/part-*.parquet
+      data/v<version>/_pb=<bucket>/part-<bucket>.parquet
       _snapshots/v<version>.json      # immutable manifest
       _HEAD                           # atomic pointer: current version
 
@@ -40,13 +40,14 @@ Scale design (100 TB, 1000 executors)
   listing of the whole table, no partition discovery job.
 * Manifests are O(n_buckets x files-per-bucket) JSON — thousands of
   entries, driver-side trivial (same shape as an Iceberg manifest list).
-* Files are clustered on the event-time column at write
-  (sortWithinPartitions, or the sort in ``write_bucket_file`` for the
-  SPJ merge's self-written files) and the manifest records per-file [min, max]
-  event-time bounds, so a time-range read prunes to a slice of each
-  bucket instead of scanning it whole — the successor of the
-  reference's SP-GiST/stbox window indexes
-  (/root/reference/etl/init/sql/31_fact_cell.sql:35).
+* Every data file is written by one function, ``write_bucket_file``:
+  one file per bucket per commit, in one Arrow layout (timestamps as
+  ``timestamp[us, tz=UTC]``), clustered on the event-time column
+  (nulls first), with its manifest stats taken from the arrays it has
+  just written — no commit re-reads its own output. The manifest's
+  per-file [min, max] event-time bounds let a time-range read skip
+  files — the successor of the reference's SP-GiST/stbox window
+  indexes (/root/reference/etl/init/sql/31_fact_cell.sql:35).
 * Commits are optimistic-concurrency guarded (the Iceberg commit
   protocol shape): version ids are claimed atomically (O_EXCL claim
   marker, never reused), the HEAD swap runs under a short O_EXCL lock
@@ -64,7 +65,6 @@ import json
 import os
 import shutil
 import time
-import urllib.parse
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
@@ -111,8 +111,8 @@ def repartition_by_bucket(df: DataFrame, touched: list[int]) -> DataFrame:
     bucket while the other cores idle. An explicit-count repartition is
     never coalesced, and one partition per slot (not per bucket) keeps
     each task's fixed Python-worker cost paid once per core. Every
-    bucket still lands in exactly one partition, so downstream writes
-    stay ``already_bucket_partitioned`` (one file per bucket)."""
+    bucket still lands in exactly one partition, so a commit's
+    ``groupBy(BUCKET_COL)`` write downstream plans no second shuffle."""
     n = min(len(touched), df.sparkSession.sparkContext.defaultParallelism)
     return df.repartition(n, F.col(BUCKET_COL))
 
@@ -204,8 +204,8 @@ def _recorded_instants(s: str, session_tz: str) -> tuple[dt.datetime, dt.datetim
     return _instants(dt.datetime.fromisoformat(s), None)
 
 
-# One row per data file a self-writing kernel wrote (``write_bucket_file``):
-# where it is, its size, and the stats a commit records for it.
+# One row per data file ``write_bucket_file`` wrote: where it is, its
+# size, and the stats a commit records for it.
 BUCKET_FILE_SCHEMA = T.StructType(
     [
         T.StructField(BUCKET_COL, T.IntegerType(), False),
@@ -222,7 +222,7 @@ BUCKET_FILE_SCHEMA = T.StructType(
 
 @dataclass
 class BucketFileWrite:
-    """Commit input whose files are written by the caller's own code.
+    """What every commit with data writes through.
 
     ``build(version)`` writes each bucket through
     ``LakeTable.write_bucket_file`` under ``version`` and returns its
@@ -232,9 +232,11 @@ class BucketFileWrite:
     building, unless the caller claimed it already (files written
     before the commit started, e.g. rollup partials written by the
     merge kernel). ``collected``, when given, receives every collected
-    row, extra columns included, before the publish. The commit skips
-    the Spark writer and the ``_scan_write_stats`` re-scan, then
-    publishes as usual."""
+    row, extra columns included, before the publish.
+
+    A caller brings its own build when it already holds the rows (the
+    merge kernel, the lineage flush); a DataFrame handed to ``commit``
+    or ``append`` becomes :meth:`LakeTable._frame_write`'s build."""
 
     build: Callable[[int], DataFrame | list]
     version: int | None = None
@@ -272,7 +274,7 @@ class Snapshot:
     # /root/reference/etl/init/sql/31_fact_cell.sql:35):
     # {"col": <event-time col>, "files": {rel_path: [min-iso-or-null,
     # max-iso-or-null]}}. Written files are clustered on the event-time
-    # column (sortWithinPartitions at commit), so the bounds are tight;
+    # column (``write_bucket_file`` sorts them), so the bounds are tight;
     # ``read(time_range=...)`` skips files whose bounds fall outside
     # the window. [null, null] = the file holds ONLY null-event-time
     # rows (prunable by ANY range predicate, which excludes nulls); a
@@ -283,10 +285,10 @@ class Snapshot:
     # Hidden derived columns: {name: Spark SQL expression over the
     # row}. Every data file a writer produces carries them next to
     # BUCKET_COL, outside the table schema (``read`` never shows them):
-    # the Spark writer evaluates the expression, a self-writing kernel
-    # receives them on its input. A file that lacks one predates its
-    # declaration. The table format stays schema-agnostic; the pipeline
-    # declares the pages table's ``_domain`` here.
+    # a DataFrame commit evaluates the expression before its write, the
+    # merge kernel receives them on its input. A file that lacks one
+    # predates its declaration. The table format stays schema-agnostic;
+    # the pipeline declares the pages table's ``_domain`` here.
     derived_cols: dict = field(default_factory=dict)
 
     @property
@@ -475,96 +477,6 @@ class LakeTable:
             yield
         finally:
             os.unlink(path)
-
-    def _scan_write_stats(
-        self,
-        spark: SparkSession,
-        written: dict[str, list[str]],
-        event_time_col: str,
-        schema: T.StructType,
-    ) -> tuple[dict[str, list] | None, dict[str, list] | None]:
-        """ONE column-pruned scan over the just-written files producing
-        both manifest stat families:
-
-        * per-bucket ``[tombstone count, min tombstone event time]``
-          (lets expire_tombstones prune its discovery scan) — None when
-          the table carries no tombstone column;
-        * per-file ``[min event time, max event time]`` (lets
-          ``read(time_range=...)`` skip files) — None when the event
-          column is missing or non-temporal.
-
-        Sized by the epoch's write, not the table; the driver result is
-        bounded by the number of files written (per-file grouping via
-        ``input_file_name()``, mapped back to manifest-relative paths
-        driver-side)."""
-        rel_paths = [p for plist in written.values() for p in plist]
-        et_field = _event_time_field(schema, event_time_col)
-        if et_field is None or not rel_paths:
-            return None, None
-        has_tomb = any(f.name == DELETED_COL for f in schema.fields)
-        fields = [T.StructField(event_time_col, et_field.dataType, True)]
-        if has_tomb:
-            fields.append(T.StructField(DELETED_COL, T.BooleanType(), True))
-        df = spark.read.schema(T.StructType(fields)).parquet(
-            *[os.path.join(self.root, p) for p in rel_paths]
-        )
-        dead = (
-            F.coalesce(F.col(DELETED_COL), F.lit(False))
-            if has_tomb
-            else F.lit(False)
-        )
-        is_ts = isinstance(et_field.dataType, T.TimestampType)
-
-        def as_recorded(c):
-            # timestamps leave the JVM as exact UTC micros, never as the
-            # process-zone wall time ``collect`` would render
-            return F.unix_micros(c) if is_ts else c
-
-        def render(v):
-            if v is None:
-                return None
-            return _utc_iso(v) if is_ts else v.isoformat()
-
-        rows = (
-            df.groupBy(F.input_file_name().alias("f"))
-            .agg(
-                as_recorded(F.min(event_time_col)).alias("mn"),
-                as_recorded(F.max(event_time_col)).alias("mx"),
-                F.sum(dead.cast("long")).alias("n_dead"),
-                as_recorded(F.min(F.when(dead, F.col(event_time_col)))).alias(
-                    "dead_mn"
-                ),
-            )
-            .collect()
-        )
-        by_rel = {}
-        for r in rows:
-            path = urllib.parse.unquote(urllib.parse.urlparse(r["f"]).path)
-            by_rel[os.path.relpath(path, self.root)] = r
-        file_stats = {
-            rel: [render(r["mn"]), render(r["mx"])] for rel, r in by_rel.items()
-        }
-        if not has_tomb:
-            return None, file_stats
-        bucket_stats: dict[str, list] = {}
-        for bucket, paths in written.items():
-            n, mn = 0, None
-            # A path the URI->relpath mapping failed to recover (e.g. a
-            # root reached through a symlink) must leave this bucket
-            # UNKNOWN — recording [0, None] would claim "known clean"
-            # and permanently exclude the bucket from tombstone-GC
-            # discovery. (Empty data files never exist: partitionBy
-            # writes no file for an empty partition.)
-            if any(p not in by_rel for p in paths):
-                continue
-            for p in paths:
-                r = by_rel[p]
-                n += int(r["n_dead"] or 0)
-                dm = r["dead_mn"]
-                if dm is not None and (mn is None or dm < mn):
-                    mn = dm
-            bucket_stats[bucket] = [n, render(mn)]
-        return bucket_stats, file_stats
 
     @staticmethod
     def _merge_tombstone_stats(
@@ -804,75 +716,17 @@ class LakeTable:
         return self.read(spark).count()
 
     # -- write --------------------------------------------------------------
-    def _write_data(
-        self,
-        df: DataFrame,
-        version: int,
-        already_partitioned: bool = False,
-        sort_col: str | None = None,
-        max_records_per_file: int | None = None,
-        derived_cols: dict | None = None,
-    ) -> dict[str, list[str]]:
-        """Write ``df`` (must carry BUCKET_COL) under data/v<version>,
-        one directory per bucket; returns bucket -> relative file paths.
-        ``derived_cols`` (the snapshot's hidden columns) are evaluated
-        here, so every rewrite carries them and fills them where a
-        legacy input file lacked them.
-
-        ``repartition(BUCKET_COL)`` + ``partitionBy`` keeps one shuffle
-        and writes each bucket's rows contiguously (at 100 TB this is
-        the same write shape Iceberg's fanout writer produces). The
-        bucket column is stored both physically (for file-list reads)
-        and as the partition dir (for humans / external tools).
-        ``already_partitioned``: the producer guarantees each bucket's
-        rows live in one task partition (e.g. the grouped-map SPJ
-        merge) — skip the extra shuffle.
-
-        ``sort_col``: cluster each bucket's rows on this column before
-        writing (``sortWithinPartitions`` — per-task sort, no shuffle;
-        SURVEY §4.2 item 4's "(domain, warc_ts) clustering"). Paired
-        with ``max_records_per_file`` (Iceberg's target-file-size
-        analog) a big bucket splits into consecutive event-time chunks,
-        so the manifest's per-file bounds prune time-range reads to a
-        slice of the bucket — and row groups inside each file carry
-        tight parquet min/max for predicate pushdown either way.
-        """
-        out_dir = self._data_dir(version)
-        for name, sql in (derived_cols or {}).items():
-            df = df.withColumn(name, F.expr(sql))
-        with_dir = df.withColumn(_PARTITION_DIR_COL, F.col(BUCKET_COL))
-        if not already_partitioned:
-            with_dir = with_dir.repartition(F.col(BUCKET_COL))
-        if sort_col is not None and sort_col in df.columns:
-            with_dir = with_dir.sortWithinPartitions(
-                _PARTITION_DIR_COL, sort_col
-            )
-        writer = with_dir.write.mode("overwrite")
-        if max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-        writer.partitionBy(_PARTITION_DIR_COL).parquet(out_dir)
-        files: dict[str, list[str]] = {}
-        for entry in os.listdir(out_dir):
-            if not entry.startswith(f"{_PARTITION_DIR_COL}="):
-                continue
-            bucket = entry.split("=", 1)[1]
-            rel_dir = os.path.relpath(os.path.join(out_dir, entry), self.root)
-            files[bucket] = sorted(
-                os.path.join(rel_dir, f)
-                for f in os.listdir(os.path.join(out_dir, entry))
-                if f.endswith(".parquet")
-            )
-        return files
-
     @staticmethod
     def read_bucket_files(root: str, paths: list[str], schema: T.StructType):
         """Read data files (relative to ``root``, through the filesystem
         seam) as ONE ``pyarrow.Table`` in the table's write layout (see
         :func:`arrow_schema`), and the set of ``schema`` columns some
         file lacked. Each file is cast to that layout before the concat:
-        the Spark writer stores timestamps as INT96, which read back as
-        naive ``timestamp[ns]`` holding UTC wall time,
-        ``write_bucket_file`` stores ``timestamp[us, tz=UTC]``, and files
+        files written by Spark's parquet writer (tables written before
+        every commit went through ``write_bucket_file``) store timestamps
+        as INT96, which read back as naive ``timestamp[ns]`` holding UTC
+        wall time, ``write_bucket_file`` stores ``timestamp[us,
+        tz=UTC]``, and files
         older than an additive schema change (or a derived column's
         declaration) lack its columns (read as nulls) —
         ``concat_tables`` refuses to mix any of these as is."""
@@ -911,18 +765,19 @@ class LakeTable:
         """Write one bucket's rows (a ``pyarrow.Table`` in
         ``arrow_schema(schema + _bucket)`` layout) as the single file
         ``data/v<version>/_pb=<bucket>/part-<bucket>.parquet`` and return
-        its ``BUCKET_FILE_SCHEMA`` row — the self-writing twin of
-        ``_write_data`` + ``_scan_write_stats`` for a grouped-map kernel
-        that already holds the bucket in memory.
+        its ``BUCKET_FILE_SCHEMA`` row. Every data file of every table is
+        written here: by the merge kernel, the lineage flush, and the
+        grouped-map job of a DataFrame commit (:meth:`_frame_write`).
 
-        Rows are clustered on ``event_time_col`` (nulls first, as
-        ``sortWithinPartitions``); bounds are recorded when it is a
-        timestamp or date column. The name is a function of (version,
-        bucket) and the bytes land via tmp + rename through the
-        filesystem seam, so a retried task replaces its own file and a
-        reader never sees a partial one. The stats are exact and carry
-        ``_scan_write_stats``' semantics: min/max ignore nulls and
-        timestamps render as ISO UTC instants."""
+        Rows are clustered on ``event_time_col`` (nulls first); bounds
+        are recorded when it is a timestamp or date column. The name is
+        a function of (version, bucket) and the bytes land via tmp +
+        rename through the filesystem seam, so a retried task replaces
+        its own file and a reader never sees a partial one. The stats are
+        exact, taken from the arrays just written: min/max ignore nulls,
+        timestamps render as ISO UTC instants, and a file's tombstone
+        count and earliest tombstone time are recorded when the table
+        carries the tombstone column."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
@@ -982,11 +837,12 @@ class LakeTable:
         rows, schema: T.StructType, event_time_col: str | None
     ) -> tuple[dict[str, list[str]], dict | None, dict | None, int]:
         """Fold the ``BUCKET_FILE_SCHEMA`` rows of a :class:`BucketFileWrite`
-        — one row per bucket, as the kernel writes one file per bucket —
-        into what a DataFrame commit gets from ``_write_data`` plus
-        ``_scan_write_stats``: bucket -> paths, per-bucket tombstone
-        stats, per-file bounds (both None where ``_scan_write_stats``
-        would record none), and the bytes written."""
+        — one row per bucket, as every writer writes one file per bucket
+        — into what a commit records: bucket -> paths, per-bucket
+        tombstone stats, per-file bounds, and the bytes written. Both
+        stats are None when ``event_time_col`` is not a temporal column
+        of ``schema``; the tombstone stats also when ``schema`` has no
+        tombstone column."""
         written = {str(r[BUCKET_COL]): [r["path"]] for r in rows}
         n_bytes = sum(int(r["bytes"]) for r in rows)
         if _event_time_field(schema, event_time_col) is None or not rows:
@@ -999,6 +855,46 @@ class LakeTable:
         }
         return written, bucket_stats, file_stats, n_bytes
 
+    def _frame_write(
+        self, df: DataFrame, event_time_col: str | None, derived_cols: dict
+    ) -> BucketFileWrite:
+        """A DataFrame commit input (it must carry BUCKET_COL) as a
+        :class:`BucketFileWrite`: one grouped-map job hands each bucket's
+        rows to ``write_bucket_file`` as one Arrow table and returns the
+        files' stats rows, so a rewrite is a single Spark job with no
+        re-scan of its output. ``derived_cols`` (the snapshot's hidden
+        columns) are evaluated first, so every rewrite carries them and
+        fills them where a legacy input file lacked them.
+
+        ``groupBy(BUCKET_COL)`` shuffles on the bucket unless the input
+        is already hash-partitioned on it (``repartition_by_bucket``),
+        which Catalyst sees, so no second shuffle is planned. A bucket
+        is one group, held in one Python worker's memory, as the merge
+        kernel holds it. ``applyInArrow`` hands timestamps over as
+        instants in the session zone; the cast to :func:`arrow_schema`
+        makes them UTC without moving them."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        for name, sql in derived_cols.items():
+            df = df.withColumn(name, F.expr(sql))
+        root = self.root
+        layout = arrow_schema(df.schema)
+        row_layout = to_arrow_schema(BUCKET_FILE_SCHEMA)
+
+        def build(version: int) -> DataFrame:
+            def write(data):
+                import pyarrow as pa
+
+                bucket = data[BUCKET_COL][0].as_py()
+                row = LakeTable.write_bucket_file(
+                    root, version, bucket, data.cast(layout), event_time_col
+                )
+                return pa.Table.from_pylist([row], schema=row_layout)
+
+            return df.groupBy(BUCKET_COL).applyInArrow(write, BUCKET_FILE_SCHEMA)
+
+        return BucketFileWrite(build)
+
     def commit(
         self,
         new_data: DataFrame | BucketFileWrite | None,
@@ -1008,10 +904,8 @@ class LakeTable:
         applied_epoch: int | None = None,
         summary: dict | None = None,
         overwrite_all: bool = False,
-        already_bucket_partitioned: bool = False,
         n_buckets: int | None = None,
         event_time_col: str | None = None,
-        max_records_per_file: int | None = None,
     ) -> Snapshot:
         """Write ``new_data`` (with BUCKET_COL) and commit a snapshot.
 
@@ -1020,23 +914,23 @@ class LakeTable:
         copy-on-write). ``overwrite_all`` replaces every bucket.
         Metadata-only commits (schema evolution) pass ``new_data=None``.
         ``event_time_col``: when given, written files are CLUSTERED on
-        that column (per-bucket sortWithinPartitions) and the manifest
-        records their per-file [min, max] bounds — what makes
-        ``read(time_range=...)`` prune — plus, if the table carries the
-        tombstone column, per-bucket tombstone stats so
-        expire_tombstones can prune its discovery scan; without it the
-        written files carry no bounds and the written buckets'
-        tombstone state is marked unknown. ``max_records_per_file``
-        splits a big bucket into several time-consecutive files
-        (tighter pruning; Iceberg's target-file-size knob).
+        that column and the manifest records their per-file [min, max]
+        bounds — what makes ``read(time_range=...)`` prune — plus, if
+        the table carries the tombstone column, per-bucket tombstone
+        stats so expire_tombstones can prune its discovery scan; without
+        it the written files carry no bounds and the written buckets'
+        tombstone state is marked unknown.
 
-        A :class:`BucketFileWrite` runs after the version claim (or
-        brings the version its writer claimed) and supplies the written
-        files and their stats itself (the SPJ merge, the rollup partials
-        it writes); its files and bytes land in the summary as
+        Every kind of input is written the same way: a DataFrame becomes
+        a :class:`BucketFileWrite` (:meth:`_frame_write`, one file per
+        bucket), a caller's own :class:`BucketFileWrite` (the SPJ merge,
+        the rollup partials it writes) brings its build. The build runs
+        after the version claim (or brings the version its writer
+        claimed); its stats rows become the manifest's stats, and its
+        files and bytes land in the summary as
         ``files_added``/``bytes_written``. Everything from the publish
-        on — rebase, conflict checks, the missing-file check — is the
-        same for both kinds of input.
+        on — rebase, conflict checks, the missing-file check — is one
+        path.
         """
         head = self.snapshot()
         if applied_epoch is not None and applied_epoch in head.applied_epochs:
@@ -1045,13 +939,15 @@ class LakeTable:
         # onto a head with a DIFFERENT spec is never safe (see below).
         base_n_buckets = head.n_buckets
         base_key_cols = list(head.key_cols)
-        if isinstance(new_data, BucketFileWrite) and new_data.version is not None:
+        if isinstance(new_data, DataFrame):
+            new_data = self._frame_write(new_data, event_time_col, head.derived_cols)
+        if new_data is not None and new_data.version is not None:
             version = new_data.version  # claimed by the writer of its files
         else:
             version = self._claim_version()
         written: dict[str, list[str]] = {}
         written_stats, written_file_stats = None, None
-        if isinstance(new_data, BucketFileWrite):
+        if new_data is not None:
             written, written_stats, written_file_stats, n_bytes = (
                 self._written_from_rows(
                     new_data.rows(version),
@@ -1065,22 +961,6 @@ class LakeTable:
                 "files_added": sum(len(p) for p in written.values()),
                 "bytes_written": n_bytes,
             }
-        elif new_data is not None:
-            written = self._write_data(
-                new_data,
-                version,
-                already_partitioned=already_bucket_partitioned,
-                sort_col=event_time_col,
-                max_records_per_file=max_records_per_file,
-                derived_cols=head.derived_cols,
-            )
-            if event_time_col is not None and written:
-                written_stats, written_file_stats = self._scan_write_stats(
-                    new_data.sparkSession,
-                    written,
-                    event_time_col,
-                    schema or head.schema,
-                )
         # Optimistic-concurrency publish loop (the Iceberg commit
         # protocol shape): data files are written once above; the
         # metadata (files dict, epochs, parent) is rebuilt against the
@@ -1181,7 +1061,6 @@ class LakeTable:
         df: DataFrame | BucketFileWrite,
         summary: dict | None = None,
         event_time_col: str | None = None,
-        max_records_per_file: int | None = None,
     ) -> Snapshot:
         """Append-only commit (the lineage/audit path): rows hash into
         the table's fixed ``n_buckets`` and the new files EXTEND each
@@ -1192,28 +1071,23 @@ class LakeTable:
         files on that column and record their per-file [min, max]
         bounds (``read(time_range=...)`` then skips whole appends
         outside the window — the append-table pruning story). A
-        :class:`BucketFileWrite` brings files its ``build`` wrote (the
-        driver-side lineage flush), already hashed into the table's
-        buckets; its files extend the lists the same way."""
+        DataFrame is hashed into the table's buckets and written as
+        ``commit`` writes one (:meth:`_frame_write`): one new file per
+        bucket it reaches. A :class:`BucketFileWrite` brings files its
+        ``build`` wrote (the driver-side lineage flush), already hashed
+        into the table's buckets; its files extend the lists the same
+        way."""
         head = self.snapshot()
-        version = self._claim_version()
-        written_file_stats = None
-        if isinstance(df, BucketFileWrite):
-            written, _, written_file_stats, _ = self._written_from_rows(
-                df.rows(version), head.schema, event_time_col
-            )
-        else:
-            written = self._write_data(
+        if isinstance(df, DataFrame):
+            df = self._frame_write(
                 df.withColumn(BUCKET_COL, bucket_expr(head.key_cols, head.n_buckets)),
-                version,
-                sort_col=event_time_col,
-                max_records_per_file=max_records_per_file,
-                derived_cols=head.derived_cols,
+                event_time_col,
+                head.derived_cols,
             )
-            if event_time_col is not None and written:
-                _, written_file_stats = self._scan_write_stats(
-                    df.sparkSession, written, event_time_col, head.schema
-                )
+        version = self._claim_version()
+        written, _, written_file_stats, _ = self._written_from_rows(
+            df.rows(version), head.schema, event_time_col
+        )
         # Appends only EXTEND file lists, so a lost commit race always
         # rebases cleanly onto the winner's head (no overlap possible)
         # — UNLESS the winner changed the bucketing spec, in which case
@@ -1383,7 +1257,9 @@ class LakeTable:
         every scan pays per-file open cost — Iceberg's
         rewrite_data_files analog). The commit is a normal snapshot
         (rollback-able) and a no-op below the threshold, so it can run
-        after every N epochs.
+        after every N epochs. It is one Spark job: the read grouped on
+        the bucket, each bucket written as one file by
+        ``write_bucket_file`` with its stats (see ``commit``).
 
         ``rebucket=False`` (default) preserves each row's EXISTING
         stored bucket — mandatory for tables with a non-default layout
@@ -1419,11 +1295,9 @@ class LakeTable:
                 return self.commit(
                     df,
                     overwrite_all=True,
-                    # NOT already-partitioned: the repartition(BUCKET_COL)
-                    # inside _write_data is what collapses each bucket to
-                    # one file. Recompute tombstone stats under the column
-                    # already on record so the full rewrite doesn't reset
-                    # GC pruning.
+                    # the commit writes one file per bucket; record
+                    # tombstone stats under the column already on record
+                    # so the full rewrite doesn't reset GC pruning
                     event_time_col=(snap.tombstone_stats or {}).get("col")
                     or (snap.file_stats or {}).get("col"),
                     summary={
@@ -1446,10 +1320,12 @@ class LakeTable:
         eventually wrong — buckets outgrow executor memory for the
         grouped-map merge and the touched-list loses pruning power —
         so growth has to be a supported lifecycle operation, not a
-        table rebuild. One shuffle (repartition by the new bucket in
-        _write_data); tombstones ride along (include_deleted), so
-        late-event arbitration survives the migration; applied-epoch
-        bookkeeping is untouched, so replay/resume still works. NOTE:
+        table rebuild. One Spark job with one shuffle (the commit's
+        grouping on the new bucket, each new bucket written as one file
+        by ``write_bucket_file``); tombstones ride along
+        (include_deleted), so late-event arbitration survives the
+        migration; applied-epoch bookkeeping is untouched, so
+        replay/resume still works. NOTE:
         derived tables keyed by this table's bucket ids (the rollup's
         src_bucket partials) must be refreshed afterwards — use
         pipeline.rebucket_warehouse, which does both.

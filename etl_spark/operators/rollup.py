@@ -275,9 +275,9 @@ def rollup_domain_stats(
         return
     # One explicit shuffle on the pages bucket: the partial aggregate's
     # (src_bucket, domain, day_id) clustering is already satisfied by it
-    # (src_bucket IS _bucket), and each src_bucket's partials stay in one
-    # task, so the commit writes them as they are — one file per bucket,
-    # on all cores, with no second shuffle.
+    # (src_bucket IS _bucket), and so is the commit's grouping on
+    # _bucket — one file per bucket, on all cores, with no second
+    # shuffle (bench/explain_audit.py checks the plan).
     fresh = compute_partials(
         repartition_by_bucket(
             pages.read(spark, buckets=touched_buckets, with_bucket=True),
@@ -289,7 +289,6 @@ def rollup_domain_stats(
         touched_buckets=[int(b) for b in touched_buckets],
         applied_epoch=epoch,
         summary=summary,
-        already_bucket_partitioned=True,
     )
 
 

@@ -279,8 +279,8 @@ def cdc_time_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     /root/reference/benchmarks/queries/cell/cell_query.sql:11-14)
     against the lake table's manifest-pruned path: ``read(time_range=)``
     skips files whose per-file [min, max] event-time bounds (recorded
-    at commit next to the sortWithinPartitions clustering) fall outside
-    the window, then the same BETWEEN predicate filters rows. Matching
+    at commit by ``write_bucket_file``, which clusters each file on the
+    event time) fall outside the window, then the same BETWEEN predicate filters rows. Matching
     the full-ingest oracle fold proves pruning never drops a row
     (tests/test_file_pruning.py proves it actually skips files)."""
     import datetime as dt

@@ -1,14 +1,22 @@
-"""The SPJ merge kernel writes its own bucket files: it keeps stored
-timestamps fixed under any session time zone, reads buckets last
-written by the Spark writer, returns the same stats the Spark re-scan
-computes, and leaves a write window that fails loudly or converges."""
+"""Every commit writes its bucket files through ``write_bucket_file``:
+the merge kernel keeps stored timestamps fixed under any session time
+zone and reads buckets in the legacy INT96 layout; the stats a merge,
+an ``expire_tombstones`` and a ``compact_files`` commit record equal a
+Spark aggregate over the same files; no engine path runs Spark's
+parquet writer; and the kernel's write window fails loudly or
+converges."""
 
 from __future__ import annotations
 
+import datetime as dt
 import os
+import urllib.parse
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from etl_spark.lake.table import (
     CommitConflictError,
@@ -62,6 +70,67 @@ def _ingest(spark, wh, rows, epoch):
     )
 
 
+def _to_int96(root, rel):
+    """Rewrite one stored data file in the layout Spark's parquet writer
+    gives it (the layout of tables written before every commit went
+    through ``write_bucket_file``): INT96 timestamps and no Arrow
+    schema, so pyarrow reads them back as naive ``timestamp[ns]``."""
+    path = os.path.join(root, rel)
+    pq.write_table(
+        pq.read_table(path), path,
+        use_deprecated_int96_timestamps=True, store_schema=False,
+    )
+    assert pq.read_schema(path).field("warc_ts").type == pa.timestamp("ns")
+
+
+def _written(snap, parent):
+    """bucket -> files of the buckets ``snap`` wrote over ``parent``."""
+    return {
+        b: ps for b, ps in snap.files.items() if ps != parent.files.get(b)
+    }
+
+
+def _spark_stats(spark, root, written, schema):
+    """The reference for a commit's manifest stats: one Spark aggregate
+    over the written files, grouped by file. Returns (bucket ->
+    [tombstone count, earliest tombstone time], file -> [min, max]
+    event time), times as the manifest renders them (ISO UTC)."""
+    epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+
+    def iso(us):
+        return None if us is None else (epoch + dt.timedelta(microseconds=us)).isoformat()
+
+    paths = [p for ps in written.values() for p in ps]
+    dead = F.coalesce(F.col("_deleted"), F.lit(False))
+    rows = (
+        spark.read.schema(T.StructType([schema["warc_ts"], schema["_deleted"]]))
+        .parquet(*[os.path.join(root, p) for p in paths])
+        .groupBy(F.input_file_name().alias("f"))
+        .agg(
+            F.unix_micros(F.min("warc_ts")).alias("mn"),
+            F.unix_micros(F.max("warc_ts")).alias("mx"),
+            F.sum(dead.cast("long")).alias("n_dead"),
+            F.unix_micros(F.min(F.when(dead, F.col("warc_ts")))).alias("dead_mn"),
+        )
+        .collect()
+    )
+    by_rel = {
+        os.path.relpath(
+            urllib.parse.unquote(urllib.parse.urlparse(r.f).path), root
+        ): r
+        for r in rows
+    }
+    assert set(by_rel) == set(paths)
+    files = {p: [iso(r.mn), iso(r.mx)] for p, r in by_rel.items()}
+    tomb = {}
+    for b, ps in written.items():
+        mins = [by_rel[p].dead_mn for p in ps if by_rel[p].dead_mn is not None]
+        tomb[b] = [
+            sum(int(by_rel[p].n_dead) for p in ps), iso(min(mins, default=None))
+        ]
+    return tomb, files
+
+
 def test_bucket_rewrite_keeps_stored_times_under_non_utc_session(
     spark, tmp_path, session_tz
 ):
@@ -104,10 +173,12 @@ def test_bucket_rewrite_keeps_stored_times_under_non_utc_session(
 
 @pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
 def test_merge_into_spark_written_buckets(spark, tmp_path, session_tz, tz):
-    """Buckets last rewritten by the Spark writer (compact_files,
-    expire_tombstones: INT96 timestamps) and a bucket holding a
-    Spark-written and a kernel-written file side by side all merge: each
-    current-side file is cast to one layout before the concat."""
+    """Buckets whose files are in the legacy layout of Spark's parquet
+    writer (INT96 timestamps, read as naive ``timestamp[ns]``) and a
+    bucket holding a legacy and a ``write_bucket_file`` file side by
+    side all merge: each current-side file is cast to one layout before
+    the concat. Tombstone GC and compaction run first, so the legacy
+    files hold what those rewrites wrote."""
     session_tz(tz)
     wh = Warehouse.init(str(tmp_path / "wh"), n_buckets=2)
     urls = [f"https://b.example/{i}" for i in range(6)]
@@ -117,13 +188,16 @@ def test_merge_into_spark_written_buckets(spark, tmp_path, session_tz, tz):
          for i, u in enumerate(urls)],
         0,
     )
-    # delete one url, then GC its marker: expire_tombstones rewrites
-    # that bucket with the Spark writer
+    # delete one url, then GC its marker (a one-bucket rewrite), then
+    # compact every bucket, then put every stored file in the legacy
+    # layout
     _ingest(spark, wh, [(20, 1, "D", urls[0], "2024-01-02 00:00:00",
                          None, None)], 1)
     wh.pages.expire_tombstones(spark, "2030-01-01 00:00:00", "warc_ts")
-    # compact_files rewrites every bucket with the Spark writer
     wh.pages.compact_files(spark, max_files=0)
+    for ps in wh.pages.snapshot().files.values():
+        for p in ps:
+            _to_int96(wh.pages.root, p)
     bucket = _buckets_of(spark, urls, 2)
     updated = [next(u for u in urls[1:] if bucket[u] == b) for b in (0, 1)]
 
@@ -135,8 +209,9 @@ def test_merge_into_spark_written_buckets(spark, tmp_path, session_tz, tz):
             e,
         )
 
-    update(2, "03")  # both buckets: Spark-written files only
-    # an append adds a Spark-written file next to a kernel-written one
+    update(2, "03")  # both buckets: legacy files only
+    # an append adds a file next to a kernel-written one, in the legacy
+    # layout
     extra = spark.createDataFrame(
         [("https://b.example/extra", 99)], "url string, seq long"
     ).select(
@@ -147,8 +222,10 @@ def test_merge_into_spark_written_buckets(spark, tmp_path, session_tz, tz):
         "seq",
         F.lit(False).alias("_deleted"),
     )
-    wh.pages.append(extra)
-    assert max(len(ps) for ps in wh.pages.snapshot().files.values()) == 2
+    parent = wh.pages.snapshot()
+    appended = _written(wh.pages.append(extra), parent)
+    assert [len(ps) for ps in appended.values()] == [2]
+    _to_int96(wh.pages.root, next(iter(appended.values()))[-1])
     before = {r[0]: r[1:] for r in _rows(spark, wh)}
     update(3, "04")  # one bucket holds both kinds of file
     after = {r[0]: r[1:] for r in _rows(spark, wh)}
@@ -167,61 +244,163 @@ def test_merge_into_spark_written_buckets(spark, tmp_path, session_tz, tz):
 
 @pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
 def test_kernel_stats_equal_spark_rescan(spark, tmp_path, session_tz, tz):
-    """The file_stats and tombstone_stats a merge commit records from
-    the kernel's rows equal _scan_write_stats run over the same files,
-    for a bucket holding tombstones and one without; the summary
-    reports the files and bytes the kernel wrote."""
+    """The file_stats and tombstone_stats that a merge commit, an
+    expire_tombstones commit and a compact_files commit record from
+    ``write_bucket_file``'s rows equal a Spark aggregate over the same
+    files, for buckets holding tombstones and one without; each
+    summary reports the files and bytes written."""
     session_tz(tz)
     wh = Warehouse.init(str(tmp_path / "wh"), n_buckets=2)
     urls = [f"https://c.example/{i}" for i in range(8)]
     bucket = _buckets_of(spark, urls, 2)
-    assert set(bucket.values()) == {0, 1}
+    in_0 = [u for u in urls if bucket[u] == 0]
+    assert len(in_0) >= 3 and len(in_0) < len(urls)
     _ingest(
         spark, wh,
         [(i, 0, "I", u, f"2024-03-0{i % 3 + 1} 0{i}:15:00.25", b"<p>x</p>",
           None) for i, u in enumerate(urls)],
         0,
     )
-    doomed = next(u for u in urls if bucket[u] == 0)
     live = next(u for u in urls if bucket[u] == 1)
+
+    def check(snap, parent):
+        written = _written(snap, parent)
+        want_tomb, want_files = _spark_stats(
+            spark, wh.pages.root, written, snap.schema
+        )
+        got_files = {
+            p: snap.file_stats["files"][p] for ps in written.values() for p in ps
+        }
+        assert got_files == want_files
+        got_tomb = {b: snap.tombstone_stats["buckets"][b] for b in written}
+        assert got_tomb == want_tomb
+        paths = [p for ps in written.values() for p in ps]
+        assert snap.summary["files_added"] == len(paths)
+        assert snap.summary["bytes_written"] == sum(
+            os.path.getsize(os.path.join(wh.pages.root, p)) for p in paths
+        )
+        return got_tomb
+
+    # merge: two markers in bucket 0, an update in bucket 1
+    parent = wh.pages.snapshot()
     _ingest(
         spark, wh,
-        [(50, 1, "D", doomed, "2024-03-05 01:02:03.5", None, None),
-         (51, 1, "U", live, "2024-03-06 00:00:00", b"<p>y</p>", None)],
+        [(50, 1, "D", in_0[0], "2024-03-05 01:02:03.5", None, None),
+         (51, 1, "D", in_0[1], "2024-03-09 04:05:06", None, None),
+         (52, 1, "U", live, "2024-03-06 00:00:00", b"<p>y</p>", None)],
         1,
     )
-    snap = wh.pages.snapshot()
-    written = {b: snap.files[b] for b in ("0", "1")}
-    want_tomb, want_files = wh.pages._scan_write_stats(
-        spark, written, "warc_ts", snap.schema
-    )
-    got_files = {
-        p: snap.file_stats["files"][p] for ps in written.values() for p in ps
-    }
-    assert got_files == want_files
-    got_tomb = {b: snap.tombstone_stats["buckets"][b] for b in written}
-    assert got_tomb == want_tomb
-    assert got_tomb["0"][0] == 1 and got_tomb["1"] == [0, None]
-    paths = [p for ps in written.values() for p in ps]
-    assert snap.summary["files_added"] == len(paths) == 2
-    assert snap.summary["bytes_written"] == sum(
-        os.path.getsize(os.path.join(wh.pages.root, p)) for p in paths
-    )
+    got = check(wh.pages.snapshot(), parent)
+    assert set(got) == {"0", "1"}
+    assert got["0"][0] == 2 and got["1"] == [0, None]
+
+    # tombstone GC rewrites bucket 0 and keeps the later marker
+    parent = wh.pages.snapshot()
+    snap = wh.pages.expire_tombstones(spark, "2024-03-07 00:00:00", "warc_ts")
+    assert snap.summary["operation"] == "expire_tombstones"
+    got = check(snap, parent)
+    assert set(got) == {"0"} and got["0"][0] == 1
+
+    # compaction rewrites every bucket
+    parent = wh.pages.snapshot()
+    snap = wh.pages.compact_files(spark, max_files=0)
+    assert snap.summary["operation"] == "compact_files"
+    got = check(snap, parent)
+    assert set(got) == {"0", "1"}
+    assert got["0"][0] == 1 and got["1"] == [0, None]
 
 
-def test_merge_runs_no_spark_write_and_no_rescan(spark, tmp_path, monkeypatch):
-    """The merge commit neither runs the Spark parquet writer nor
-    re-scans its output for stats."""
+def test_no_engine_path_runs_the_spark_parquet_writer(
+    spark, tmp_path, monkeypatch
+):
+    """Spark's parquet writer is never called: a merge epoch, an epoch
+    whose rollup falls back to Spark (a touched bucket's file lacks
+    ``_domain``), rebucket_warehouse, compact_warehouse,
+    expire_warehouse_tombstones and a DataFrame append all write through
+    ``write_bucket_file``, and each leaves the expected table state."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from etl_spark import pipeline
+    from etl_spark.operators import rollup
+    from etl_spark.operators.rollup import DOMAIN_COL, read_rollup
 
     def forbidden(*_a, **_k):
-        raise AssertionError("merge path must not call this")
+        raise AssertionError("the Spark parquet writer must not run")
 
-    monkeypatch.setattr(LakeTable, "_write_data", forbidden)
-    monkeypatch.setattr(LakeTable, "_scan_write_stats", forbidden)
+    monkeypatch.setattr(DataFrameWriter, "parquet", forbidden)
+    monkeypatch.setattr(DataFrameWriter, "save", forbidden)
+    spark_partials = []
+    orig_partials = rollup.compute_partials
+
+    def counted_partials(df):
+        spark_partials.append(1)
+        return orig_partials(df)
+
+    monkeypatch.setattr(rollup, "compute_partials", counted_partials)
+
     wh = Warehouse.init(str(tmp_path / "wh"), n_buckets=2)
-    _ingest(spark, wh, [(1, 0, "I", "https://d.example/1",
-                         "2024-01-01 00:00:00", b"<p>x</p>", None)], 0)
-    assert [r.text for r in wh.pages.read(spark).collect()] == ["x"]
+    urls = [f"https://{d}.example/{i}" for i, d in enumerate("aabbc")]
+
+    def epoch(e, op, targets):
+        ingest_epoch(
+            spark, wh,
+            _events(spark, [(10 * e + i, e, op, u, f"2024-01-0{e + 1} 00:00:00",
+                             None if op == "D" else f"<p>e{e}</p>".encode(), None)
+                            for i, u in enumerate(targets)]),
+            e,
+        )
+
+    def rollup_rows():
+        return sorted(
+            (r.domain, r.n_pages) for r in read_rollup(spark, wh.rollup).collect()
+        )
+
+    epoch(0, "I", urls)  # merge epoch, kernel partials
+    assert spark_partials == []
+    assert rollup_rows() == [("a.example", 2), ("b.example", 2), ("c.example", 1)]
+
+    # strip the hidden column from one stored file: the next epoch's
+    # rollup recomputes the touched buckets' partials with Spark
+    path = os.path.join(wh.pages.root, wh.pages.snapshot().files["0"][0])
+    pq.write_table(pq.read_table(path).drop_columns([DOMAIN_COL]), path)
+    epoch(1, "U", urls)
+    assert spark_partials == [1]
+    assert rollup_rows() == [("a.example", 2), ("b.example", 2), ("c.example", 1)]
+
+    pipeline.rebucket_warehouse(spark, wh, 4)
+    assert wh.pages.snapshot().n_buckets == 4
+    assert sorted(r.url for r in wh.pages.read(spark).collect()) == sorted(urls)
+    assert rollup_rows() == [("a.example", 2), ("b.example", 2), ("c.example", 1)]
+
+    n_lineage = wh.lineage.read(spark).count()
+    pipeline.compact_warehouse(spark, wh, max_files=0)
+    assert any(
+        wh.lineage.snapshot(v).summary.get("operation") == "compact_files"
+        for v in wh.lineage.versions()
+    )
+    assert wh.lineage.read(spark).count() == n_lineage + 1
+
+    epoch(2, "D", urls[:1])
+    assert wh.pages.read(spark, include_deleted=True).count() == len(urls)
+    pipeline.expire_warehouse_tombstones(spark, wh, "2030-01-01 00:00:00")
+    assert sorted(
+        r.url for r in wh.pages.read(spark, include_deleted=True).collect()
+    ) == sorted(urls[1:])
+
+    extra = spark.createDataFrame(
+        [("https://d.example/x", 99)], "url string, seq long"
+    ).select(
+        "url",
+        F.to_timestamp(F.lit("2024-01-05 00:00:00")).alias("warc_ts"),
+        F.lit(None).cast("binary").alias("html"),
+        F.lit("appended").alias("text"),
+        "seq",
+        F.lit(False).alias("_deleted"),
+    )
+    wh.pages.append(extra)
+    got = {r.url: r.text for r in wh.pages.read(spark).collect()}
+    assert sorted(got) == sorted(urls[1:] + ["https://d.example/x"])
+    assert got["https://d.example/x"] == "appended"
 
 
 def _failing_publish_once(monkeypatch, root, before_publish):

@@ -202,10 +202,11 @@ def test_expire_snapshots_keeps_rebased_losers_data(spark, tmp_path, monkeypatch
 def test_orphan_sweep_mid_commit_fails_the_commit_loudly(
     spark, tmp_path, monkeypatch
 ):
-    """A writer slower than the grace: while it computes write stats, a
-    concurrent commit moves HEAD past its claim and an orphan sweep
-    deletes its data files. Its rebased publish must raise, never
-    leave a snapshot naming missing files; a re-run then lands."""
+    """A writer slower than the grace: between its writer job and its
+    publish, a concurrent commit moves HEAD past its claim and an
+    orphan sweep deletes its data files. Its rebased publish must
+    raise, never leave a snapshot naming missing files; a re-run then
+    lands."""
     from pyspark.sql import functions as F
 
     schema = T.StructType(
@@ -220,18 +221,12 @@ def test_orphan_sweep_mid_commit_fails_the_commit_loudly(
         .select("k", F.to_timestamp("ts").alias("warc_ts"))
         .withColumn("_bucket", bucket_expr(["k"], 2))
     )
-    orig = LakeTable._scan_write_stats
-    state = {"armed": True}
 
-    def slow_stats(self, *args):
-        out = orig(self, *args)
-        if state["armed"]:
-            state["armed"] = False
-            t.commit(None, summary={"operation": "concurrent"})
-            t.expire_snapshots(keep_last=10, orphan_grace_s=0)
-        return out
+    def slow_writer():
+        t.commit(None, summary={"operation": "concurrent"})
+        t.expire_snapshots(keep_last=10, orphan_grace_s=0)
 
-    monkeypatch.setattr(LakeTable, "_scan_write_stats", slow_stats)
+    _race_once(monkeypatch, slow_writer)
     with pytest.raises(CommitConflictError, match="orphan sweep"):
         t.commit(df, touched_buckets=[0, 1], event_time_col="warc_ts")
     for v in t.versions():
@@ -239,7 +234,6 @@ def test_orphan_sweep_mid_commit_fails_the_commit_loudly(
             for p in paths:
                 assert os.path.exists(os.path.join(t.root, p)), (v, p)
 
-    monkeypatch.setattr(LakeTable, "_scan_write_stats", orig)
     t.commit(df, touched_buckets=[0, 1], event_time_col="warc_ts")
     assert [r.k for r in t.read(spark).collect()] == ["a"]
 
@@ -301,108 +295,74 @@ def test_metrics_zero_duration_is_zero_not_none():
 
 
 # ---------------------------------------------------------------------------
-# Round-5 review follow-ups: stats-mapping honesty and the rollup
-# overwrite_all retry loops.
+# Round-5 review follow-ups: the rollup overwrite_all retry loop.
 # ---------------------------------------------------------------------------
-
-
-def test_unmapped_write_stats_leave_bucket_unknown(spark, tmp_path, monkeypatch):
-    """If the input_file_name()->relpath mapping fails for a written
-    file (e.g. a warehouse root reached through a symlink), the bucket
-    must be left UNKNOWN in tombstone_stats — never recorded as
-    [0, None] ("known clean"), which would permanently exclude it from
-    tombstone-GC discovery."""
-    import os
-
-    from pyspark.sql import functions as F, types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), True),
-            T.StructField("warc_ts", T.TimestampType(), True),
-            T.StructField("_deleted", T.BooleanType(), True),
-        ]
-    )
-    t = LakeTable.create(str(tmp_path / "t"), schema, ["url"], n_buckets=1)
-
-    # force every URI->relpath mapping to miss
-    orig = LakeTable._scan_write_stats
-
-    def broken_mapping(self, spark_, written, col, sch):
-        import urllib.parse as up
-
-        real = up.urlparse
-
-        def twisted(u):
-            r = real(u)
-            return r._replace(path="/nonexistent" + r.path)
-
-        monkeypatch.setattr(up, "urlparse", twisted)
-        try:
-            return orig(self, spark_, written, col, sch)
-        finally:
-            monkeypatch.setattr(up, "urlparse", real)
-
-    monkeypatch.setattr(LakeTable, "_scan_write_stats", broken_mapping)
-    df = spark.createDataFrame(
-        [("https://x.example/a", "2020-01-01 00:00:00", True)],
-        "url string, warc_ts string, _deleted boolean",
-    ).withColumn("warc_ts", F.to_timestamp("warc_ts")).withColumn(
-        "_bucket", F.lit(0)
-    )
-    t.commit(df, touched_buckets=[0], event_time_col="warc_ts")
-    stats = t.snapshot().tombstone_stats
-    assert stats.get("buckets", {}).get("0") is None, (
-        "bucket must be unknown, not fabricated-clean"
-    )
-    monkeypatch.setattr(LakeTable, "_scan_write_stats", orig)
-    # unknown state -> GC scans the bucket and finds the marker
-    out = t.expire_tombstones(spark, "2024-01-01 00:00:00", "warc_ts")
-    assert out.summary.get("operation") == "expire_tombstones"
-    assert t.read(spark, include_deleted=True).count() == 0
 
 
 def test_rollup_full_refresh_retries_lost_race(spark, tmp_path, monkeypatch):
     """rollup_domain_stats' full-refresh overwrite_all commit re-derives
     and retries on a lost publish race instead of dying (same contract
-    compact_files got)."""
+    compact_files got). The refresh is forced the way a replay repair
+    meets it: no touched list, and a pages head that is not this
+    epoch's merge (a compaction landed after it)."""
     from pyspark.sql import functions as F
 
+    from etl_spark.operators import rollup
     from etl_spark.pipeline import Warehouse, ingest_epoch
 
     wh = Warehouse.init(str(tmp_path / "wh"), n_buckets=2)
     delta = spark.createDataFrame(
-        [(1, 0, "I", "https://x.example/a", "2024-01-01 00:00:00",
-          b"<p>a</p>", None)],
+        [(i, 0, "I", u, "2024-01-01 00:00:00", b"<p>a</p>", None)
+         for i, u in enumerate(["https://x.example/a", "https://x.example/b",
+                                "https://y.example/a"])],
         "seq long, epoch long, op string, url string, warc_ts string, "
         "html binary, lang string",
     ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
+    ingest_epoch(spark, wh, delta, 0, with_rollup=False, with_lineage=False)
+    wh.pages.compact_files(spark, max_files=0)
+    assert wh.pages.snapshot().summary.get("epoch") is None
 
-    # the epoch's rollup runs the FULL-refresh path (fresh table) and
-    # loses its first publish to a concurrent lineage-style append on
-    # the rollup table
-    from etl_spark.operators.rollup import ROLLUP_SCHEMA  # noqa: F401
+    derived = []
+    orig_partials = rollup.compute_partials
 
-    def competing():
-        snap = wh.rollup.snapshot()
-        empty = spark.createDataFrame([], snap.schema)
-        wh.rollup.append(empty, summary={"operation": "noise"})
+    def counted_partials(df):
+        derived.append(1)
+        return orig_partials(df)
 
+    monkeypatch.setattr(rollup, "compute_partials", counted_partials)
+    commits = []
+    orig_commit = wh.rollup.commit
+
+    def spied_commit(new_data, **kw):
+        commits.append(kw.get("overwrite_all"))
+        return orig_commit(new_data, **kw)
+
+    wh.rollup.commit = spied_commit
+
+    # the refresh's first publish loses to a concurrent append on the
+    # rollup table
     orig = LakeTable._publish
-    state = {"armed": True}
+    published = []
 
     def pre_empted(self, snap, added):
-        if state["armed"] and self.root == wh.rollup.root and snap.summary.get(
-            "operation"
-        ) == "rollup":
-            state["armed"] = False
-            competing()
-        return orig(self, snap, added)
+        if self.root != wh.rollup.root or snap.summary.get("operation") != "rollup":
+            return orig(self, snap, added)
+        if not published:
+            empty = spark.createDataFrame([], self.snapshot().schema)
+            self.append(empty, summary={"operation": "noise"})
+        published.append(orig(self, snap, added))
+        return published[-1]
 
     monkeypatch.setattr(LakeTable, "_publish", pre_empted)
-    ingest_epoch(spark, wh, delta, 0)  # must not raise
-    monkeypatch.setattr(LakeTable, "_publish", orig)
-    from etl_spark.operators.rollup import read_rollup
+    rollup.rollup_domain_stats(spark, wh.pages, wh.rollup, 0)  # must not raise
+    assert commits == [True, True]
+    assert published == [False, True]
+    assert derived == [1, 1]
+    head = wh.rollup.snapshot()
+    assert head.summary["operation"] == "rollup" and head.applied_epochs == [0]
+    assert wh.rollup.snapshot(head.parent).summary["operation"] == "noise"
 
-    got = read_rollup(spark, wh.rollup).collect()
-    assert len(got) == 1 and got[0].n_pages == 1
+    got = sorted(
+        (r.domain, r.n_pages) for r in rollup.read_rollup(spark, wh.rollup).collect()
+    )
+    assert got == [("x.example", 2), ("y.example", 1)]
