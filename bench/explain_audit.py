@@ -196,8 +196,10 @@ def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
     (a byte-sized shuffle would let AQE collapse a small epoch into one
     task), below the grouped-map kernel that writes its own files: the
     kernel job's root is FlatMapGroupsInPandas, with no write shuffle
-    or write stage above it. An epoch whose rollup takes the kernel's
-    partial files, and its lineage flush, must start no Spark job. The
+    or write stage above it. The whole epoch starts 2 Spark jobs, the
+    kernel's shuffle map stage and its grouped map: no stats pre-pass.
+    An epoch whose rollup takes the kernel's partial files, and its
+    lineage flush, must start no Spark job. The
     fallback rollup — an epoch touching a bucket whose stored file
     lacks ``_domain`` — is a DataFrame commit, whose writer job is a
     FlatMapGroupsInArrow grouped on ``_bucket``: it must sit on exactly
@@ -264,7 +266,9 @@ def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
     lineage.LineageLog.flush = counted("lineage", originals[1])
     BucketFileWrite.rows = captured_rows
     try:
-        pipeline.ingest_epoch(spark, wh, events(0), 0)
+        _, epoch_jobs = _jobs_in(
+            spark, "audit_epoch", pipeline.ingest_epoch, spark, wh, events(0), 0
+        )
         pipeline.rollup_domain_stats, lineage.LineageLog.flush = originals
         # a bucket file written before the hidden column existed: drop
         # it from one stored file, so the next epoch's rollup falls back
@@ -276,6 +280,11 @@ def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
         BucketFileWrite.rows = rows
 
     failures = []
+    if epoch_jobs != 2:
+        failures.append(
+            "ingest_stage_shape: an ingest epoch must start 2 Spark jobs "
+            f"(the merge kernel's); got {epoch_jobs}"
+        )
     if jobs != {"rollup": 0, "lineage": 0}:
         failures.append(
             "ingest_stage_shape: an epoch's kernel-partials rollup and its "

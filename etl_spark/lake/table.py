@@ -68,7 +68,7 @@ import time
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Callable, Iterable
+from typing import Callable, Iterable, Sequence
 from zoneinfo import ZoneInfo
 
 from pyspark.sql import DataFrame, SparkSession
@@ -100,9 +100,10 @@ def bucket_expr(key_cols: list[str], n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
 
 
-def repartition_by_bucket(df: DataFrame, touched: list[int]) -> DataFrame:
+def repartition_by_bucket(df: DataFrame, touched: Sequence[int]) -> DataFrame:
     """Hash-partition ``df`` on BUCKET_COL into one wave of tasks:
-    ``min(len(touched), defaultParallelism)`` partitions.
+    ``min(len(touched), defaultParallelism)`` partitions, ``touched``
+    being the buckets ``df`` may hold.
 
     A bucket-granular epoch step (the SPJ merge kernel, the per-epoch
     rollup) costs per bucket, not per delta byte. Left to AQE, its
@@ -209,7 +210,8 @@ def _recorded_instants(s: str, session_tz: str) -> tuple[dt.datetime, dt.datetim
 BUCKET_FILE_SCHEMA = T.StructType(
     [
         T.StructField(BUCKET_COL, T.IntegerType(), False),
-        T.StructField("path", T.StringType(), False),
+        # null: the bucket was left with no rows, and no file was written
+        T.StructField("path", T.StringType(), True),
         T.StructField("rows", T.LongType(), False),
         T.StructField("bytes", T.LongType(), False),
         T.StructField("ts_min", T.StringType(), True),
@@ -232,7 +234,8 @@ class BucketFileWrite:
     building, unless the caller claimed it already (files written
     before the commit started, e.g. rollup partials written by the
     merge kernel). ``collected``, when given, receives every collected
-    row, extra columns included, before the publish.
+    row, extra columns included, before the commit reads its summary
+    (the caller may still add what the rows tell it) and publishes.
 
     A caller brings its own build when it already holds the rows (the
     merge kernel, the lineage flush); a DataFrame handed to ``commit``
@@ -482,14 +485,17 @@ class LakeTable:
     def _merge_tombstone_stats(
         head: Snapshot,
         written: dict[str, list[str]],
-        touched_buckets: Iterable[int] | None,
+        replaced: Iterable[str],
         overwrite_all: bool,
         written_stats: dict[str, list] | None,
         event_time_col: str | None,
     ) -> dict:
         """Next snapshot's tombstone_stats: carry forward untouched
-        buckets, drop replaced buckets (unknown unless recomputed),
-        overlay the just-written buckets' fresh stats."""
+        buckets, drop ``replaced`` buckets (unknown unless recomputed),
+        overlay the just-written buckets' fresh stats. A bucket that is
+        written but not replaced (an append) adds the new files' marker
+        count and earliest marker to what is on record for it; a bucket
+        whose state is unknown stays unknown."""
         head_stats = head.tombstone_stats or {}
         # a caller naming the event-time column adopts it even when the
         # write produced no files (e.g. GC emptied the last marker)
@@ -499,14 +505,26 @@ class LakeTable:
         buckets: dict = {}
         if not overwrite_all and head_stats.get("col") == col:
             buckets.update(head_stats.get("buckets", {}))
-        for b in touched_buckets or []:
-            buckets.pop(str(b), None)
-        if written_stats is not None:
-            buckets.update(written_stats)
-        else:
-            # rewritten without a stats pass -> state unknown, must scan
+        replaced = set(replaced)
+        for b in replaced:
+            buckets.pop(b, None)
+        if written_stats is None:
+            # written without stats -> state unknown, must scan
             for b in written:
                 buckets.pop(b, None)
+            return {"col": col, "buckets": buckets}
+        for b, (n, first) in written_stats.items():
+            if b in replaced or overwrite_all or not head.files.get(b):
+                buckets[b] = [n, first]
+            elif b in buckets:
+                n0, first0 = buckets[b]
+                known = [t for t in (first0, first) if t is not None]
+                buckets[b] = [
+                    n0 + n,
+                    min(known, key=lambda t: _recorded_instants(t, "UTC")[0])
+                    if known
+                    else None,
+                ]
         return {"col": col, "buckets": buckets}
 
     @staticmethod
@@ -839,10 +857,12 @@ class LakeTable:
         """Fold the ``BUCKET_FILE_SCHEMA`` rows of a :class:`BucketFileWrite`
         — one row per bucket, as every writer writes one file per bucket
         — into what a commit records: bucket -> paths, per-bucket
-        tombstone stats, per-file bounds, and the bytes written. Both
+        tombstone stats, per-file bounds, and the bytes written. A row
+        with a null path names a bucket left with no rows: no file. Both
         stats are None when ``event_time_col`` is not a temporal column
         of ``schema``; the tombstone stats also when ``schema`` has no
         tombstone column."""
+        rows = [r for r in rows if r["path"] is not None]
         written = {str(r[BUCKET_COL]): [r["path"]] for r in rows}
         n_bytes = sum(int(r["bytes"]) for r in rows)
         if _event_time_field(schema, event_time_col) is None or not rows:
@@ -906,12 +926,15 @@ class LakeTable:
         overwrite_all: bool = False,
         n_buckets: int | None = None,
         event_time_col: str | None = None,
+        base: Snapshot | None = None,
     ) -> Snapshot:
         """Write ``new_data`` (with BUCKET_COL) and commit a snapshot.
 
         ``touched_buckets``: buckets whose files are replaced by the new
-        data; untouched buckets carry forward (bucket-granular
-        copy-on-write). ``overwrite_all`` replaces every bucket.
+        data, on top of every bucket the write returns a row for (a row
+        with a null path replaces the bucket's files with none); other
+        buckets carry forward (bucket-granular copy-on-write).
+        ``overwrite_all`` replaces every bucket.
         Metadata-only commits (schema evolution) pass ``new_data=None``.
         ``event_time_col``: when given, written files are CLUSTERED on
         that column and the manifest records their per-file [min, max]
@@ -931,8 +954,14 @@ class LakeTable:
         ``files_added``/``bytes_written``. Everything from the publish
         on — rebase, conflict checks, the missing-file check — is one
         path.
+
+        ``base``: the snapshot ``new_data`` was derived from (default:
+        HEAD now). A writer that read the table before building its data
+        (the merge kernel) passes the snapshot it read, so a commit that
+        lands in between and rewrites one of its buckets is a conflict,
+        not a silently overwritten change.
         """
-        head = self.snapshot()
+        head = base if base is not None else self.snapshot()
         if applied_epoch is not None and applied_epoch in head.applied_epochs:
             return head  # exactly-once: epoch already applied
         # The spec the caller bucketed ``new_data`` against; a rebase
@@ -947,12 +976,13 @@ class LakeTable:
             version = self._claim_version()
         written: dict[str, list[str]] = {}
         written_stats, written_file_stats = None, None
+        replaced = {str(b) for b in touched_buckets or []}
         if new_data is not None:
+            rows = new_data.rows(version)
+            replaced.update(str(r[BUCKET_COL]) for r in rows)
             written, written_stats, written_file_stats, n_bytes = (
                 self._written_from_rows(
-                    new_data.rows(version),
-                    schema or head.schema,
-                    event_time_col,
+                    rows, schema or head.schema, event_time_col
                 )
             )
             # Spark's task output metrics never see these pyarrow writes
@@ -971,8 +1001,8 @@ class LakeTable:
                 files = written
             else:
                 files = dict(head.files)
-                for b in touched_buckets or []:
-                    files.pop(str(b), None)
+                for b in replaced:
+                    files.pop(b, None)
                 files.update(written)
             epochs = list(head.applied_epochs)
             if applied_epoch is not None:
@@ -990,7 +1020,7 @@ class LakeTable:
                 tombstone_stats=self._merge_tombstone_stats(
                     head,
                     written,
-                    touched_buckets,
+                    replaced,
                     overwrite_all,
                     written_stats,
                     event_time_col,
@@ -1039,11 +1069,11 @@ class LakeTable:
             # commit is about to replace — its rows were merged
             # against a stale current-side read, so a rebase would
             # silently drop the winner's changes. Fail loudly.
-            clashed = [
-                b
-                for b in (touched_buckets or [])
-                if new_head.files.get(str(b)) != head.files.get(str(b))
-            ]
+            clashed = sorted(
+                int(b)
+                for b in replaced
+                if new_head.files.get(b) != head.files.get(b)
+            )
             if clashed:
                 raise CommitConflictError(
                     f"concurrent commit v{new_head.version} rewrote "
@@ -1085,7 +1115,7 @@ class LakeTable:
                 head.derived_cols,
             )
         version = self._claim_version()
-        written, _, written_file_stats, _ = self._written_from_rows(
+        written, written_stats, written_file_stats, _ = self._written_from_rows(
             df.rows(version), head.schema, event_time_col
         )
         # Appends only EXTEND file lists, so a lost commit race always
@@ -1110,9 +1140,10 @@ class LakeTable:
                 applied_epochs=list(head.applied_epochs),
                 summary=summary or {"operation": "append"},
                 committed_at=time.time(),
-                # appended buckets' tombstone state becomes unknown
+                # the appended files' markers add to each bucket's
+                # recorded tombstone state
                 tombstone_stats=self._merge_tombstone_stats(
-                    head, written, None, False, None, None
+                    head, written, (), False, written_stats, event_time_col
                 ),
                 file_stats=self._merge_file_stats(
                     head, files, written_file_stats, event_time_col

@@ -14,9 +14,12 @@ makes one reducer the straggler. The two-phase form salts the key with
 ``pmod(xxhash64(seq), S)``, picks a winner per (key, salt) with a
 map-side-friendly ``max(struct(...))`` aggregation, then re-aggregates
 winners across salts — the classic partial/final split, so no reducer
-ever sees more than ~1/S of a hot key's rows. Salting is driven by the
-epoch's hottest-key count (:func:`delta_stats`), so an epoch with no
-hot key skips the extra pass.
+ever sees more than ~1/S of a hot key's rows. These are library
+operators over a DataFrame; the ingest merge does not call them: its
+kernel folds last-writer-wins over a bucket's Arrow batches
+(``merge_spj``), which bounds a hot key's memory without a pre-reduce,
+and its rows report the epoch's stats that :func:`delta_stats` computes
+with a pass of its own.
 """
 
 from __future__ import annotations
@@ -97,7 +100,7 @@ def salted_lww_dedup(
 class DeltaStats(NamedTuple):
     touched: list[int]      # bucket ids containing changed keys
     n_keys: int             # distinct keys in the delta
-    max_key_n: int          # hottest key's row count (salting trigger)
+    max_key_n: int          # hottest key's row count
     n_events: int           # total event rows (throughput metric input)
     max_ts: object | None   # newest event time (lag metric input)
 
@@ -105,11 +108,13 @@ class DeltaStats(NamedTuple):
 def delta_stats(
     df, key_cols: list[str], n_buckets: int, ts_col: str | None = None
 ) -> DeltaStats:
-    """One light pre-pass over the cleaned delta: touched buckets,
-    distinct-key count, hottest-key row count — plus, for free on the
-    same aggregation, the event count and (when ``ts_col`` is given)
-    the newest event time, which the lineage metrics row turns into
-    events/sec and end-to-end event-time lag per epoch.
+    """One light pass over a delta: touched buckets, distinct-key
+    count, hottest-key row count — plus, for free on the same
+    aggregation, the event count and (when ``ts_col`` is given) the
+    newest event time. The ingest epoch gets the same numbers from its
+    merge kernel's rows and runs no such pass; ``perfbench/spans.py``
+    still wraps this function by name on this module for its
+    ``dedup.stats`` span, which is why the name is kept here.
 
     Two-level aggregation — groupBy(bucket, key).count() then
     groupBy(bucket) — so the shuffle carries one long per key and the

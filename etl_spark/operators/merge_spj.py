@@ -10,14 +10,14 @@ epoch-grain skip.
 A textbook merge shuffles the epoch payload three times: LWW groupBy
 (hash by key), full-outer join vs current (hash by key again), and the
 write repartition (hash by bucket). This one collapses them into ONE
-payload shuffle:
+payload shuffle, and the epoch into ONE Spark job:
 
     delta.repartition(n, bucket).groupBy(bucket).applyInPandas(merge_bucket)
-         -> collect one file row per bucket -> publish
+         -> collect one row per touched bucket -> publish
 
-The kernel's partition count is ``n = min(touched buckets, slots)``
-(``lake.table.repartition_by_bucket``), fixed by the epoch's touched
-list and ``defaultParallelism`` — never by the delta's size in bytes.
+The kernel's partition count is ``n = min(n_buckets, slots)``
+(``lake.table.repartition_by_bucket``), fixed by the table's bucket
+count and ``defaultParallelism`` — never by the delta's size in bytes.
 The kernel's cost is per bucket (read + rewrite the whole bucket), but
 AQE sizes a shuffle by its bytes: a small epoch's shuffle falls under
 the coalescing floor and a single Python task would rewrite every
@@ -25,14 +25,22 @@ touched bucket while the other cores idle. An explicit count is never
 coalesced, so the epoch runs as one full wave. One partition per slot,
 not one per bucket, because every Python-worker task pays a fixed
 start-up cost (``bench/BASELINE.md``, trickle epoch decomposition).
+Nothing runs before the kernel: the buckets the epoch touches, its
+event and key counts and its newest event time all come back on the
+kernel's rows.
 
-Inside the grouped-map kernel (one call per bucket, Arrow-batched):
-  1. LWW winner per key (vectorized sort + drop_duplicates keep-last —
-     same (warc_ts, seq) total order as the JVM max-struct dedup);
+Inside the grouped-map kernel (one call per bucket, fed the bucket's
+delta Arrow batch by Arrow batch):
+  1. LWW winner per key, folded over the batches: the running winners
+     and the batches since the last fold are concatenated, stably
+     sorted on the order tuple and deduplicated keep-last — the same
+     (warc_ts, seq) total order as the JVM max-struct dedup. A call
+     holds a batch plus at most twice the bucket's distinct keys,
+     however many events a hot key has;
   2. html -> text extraction for winners only (the SAME frozen kernel,
      functions/extract.extract_text_series — byte-identity preserved);
   3. executor-local pyarrow read of the bucket's CURRENT parquet files
-     (the manifest's file list rides the closure) — a hand-rolled
+     (the manifest's file map rides a broadcast) — a hand-rolled
      storage-partitioned join: current rows never cross a shuffle,
      exactly what Iceberg SPJ gives co-bucketed tables. The read goes
      through a pyarrow FileSystem seam (``lake.table._resolve_filesystem``):
@@ -50,7 +58,11 @@ Inside the grouped-map kernel (one call per bucket, Arrow-batched):
      (``LakeTable.write_bucket_file``: deterministic name, tmp +
      rename through the same seam), and the kernel returns ONE row —
      path, rows, bytes, [min, max] event time, tombstone count and
-     earliest tombstone time — computed from the arrays it holds;
+     earliest tombstone time, computed from the arrays it holds, plus
+     the bucket's event count, distinct-key count and newest event
+     time. A bucket left with no rows (deletes on a table without the
+     tombstone column) writes no file and returns its row with a null
+     path;
   6. rollup partials: when the caller claimed a rollup version, the
      bucket's live rows are aggregated (``rollup.bucket_partials``) and
      written as the rollup's ``src_bucket`` file in the same task; its
@@ -63,23 +75,22 @@ bucket whose stored files predate such a column is written without
 it, and its partials are reported unknown (``rollup_rows`` null).
 
 The kernel runs inside ``LakeTable.commit`` (a :class:`BucketFileWrite`):
-the commit claims the version, runs the kernel job, and publishes the
-collected rows through the usual protocol; the rollup commit publishes
-the partial files right after. No bucket crosses back to the JVM, and
-there is no Spark write job, no stats re-scan and no rollup job. Hot
-keys: when the stats pre-pass sees a key above threshold, a JVM salted
-pre-reduce runs BEFORE the grouped map so no pandas group ever
-materializes a hot key's full row set.
+the commit claims the version, runs the kernel job, replaces every
+bucket a row names and publishes against the snapshot the kernel read;
+the rollup commit publishes the partial files right after. No bucket
+crosses back to the JVM, and there is no stats pre-pass, no Spark write
+job, no stats re-scan and no rollup job.
 
-Memory contract: one call holds one bucket's delta winners + current
-rows. n_buckets is the knob — size it so bucket ~ O(100 MB) at the
-target scale (thousands of buckets at 100 TB).
+Memory contract: one call holds one Arrow batch of the bucket's delta,
+at most twice its distinct keys and its current rows. n_buckets is the knob — size
+it so bucket ~ O(100 MB) at the target scale (thousands of buckets at
+100 TB).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from typing import Iterable
+from dataclasses import dataclass, field
+from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -98,7 +109,6 @@ from etl_spark.lake.table import (
     bucket_expr,
     repartition_by_bucket,
 )
-from etl_spark.operators.dedup import salted_lww_dedup
 from etl_spark.operators.rollup import (
     KernelPartials,
     bucket_partials,
@@ -107,15 +117,20 @@ from etl_spark.operators.rollup import (
 
 OP_COL = "op"
 
-# The kernel's row per bucket: the pages file, then the rollup partial
-# file written next to it (all null when no rollup version was claimed;
-# ``rollup_rows`` null = partials unknown, 0 = no live page, no file).
+# The kernel's row per touched bucket: the pages file (path null when
+# no row is left), then the rollup partial file written next to it (all
+# null when no rollup version was claimed; ``rollup_rows`` null =
+# partials unknown, 0 = no live page, no file), then the bucket's share
+# of the epoch's delta: its events, distinct keys and newest event time.
 KERNEL_SCHEMA = T.StructType(
     BUCKET_FILE_SCHEMA.fields
     + [
         T.StructField("rollup_path", T.StringType(), True),
         T.StructField("rollup_rows", T.LongType(), True),
         T.StructField("rollup_bytes", T.LongType(), True),
+        T.StructField("n_events", T.LongType(), False),
+        T.StructField("n_keys", T.LongType(), False),
+        T.StructField("max_event_ts", T.TimestampType(), True),
     ]
 )
 
@@ -125,17 +140,25 @@ class MergeStats:
     epoch: int
     skipped: bool
     touched_buckets: int
+    # distinct keys in the epoch's delta
     delta_rows: int
     version: int
     # rollup partial files the kernel wrote (None: none were claimed)
     partials: KernelPartials | None = None
+    touched_list: list[int] = field(default_factory=list)
+    n_events: int = 0
+    # the delta's newest event time (None: no event carries one)
+    max_event_ts: object = None
 
 
-def evolve_for_delta(table: LakeTable, delta: DataFrame) -> Snapshot:
+def evolve_for_delta(
+    table: LakeTable, delta: DataFrame, head: Snapshot | None = None
+) -> Snapshot:
     """Additive schema evolution: any new non-control column appearing
     in the delta is added to the table schema (metadata-only commit)
-    before the merge — the `lang` mid-stream scenario."""
-    snap = table.snapshot()
+    before the merge — the `lang` mid-stream scenario. ``head``: the
+    table's snapshot when the caller holds it already."""
+    snap = head if head is not None else table.snapshot()
     existing = {f.name for f in snap.schema.fields}
     control = {OP_COL, "seq", "epoch", BUCKET_COL}
     added = [
@@ -219,9 +242,12 @@ def make_bucket_merger(
 ):
     """Build the grouped-map kernel: it merges one bucket, writes the
     result as ``data/v<version>/_pb=<bucket>/`` (``LakeTable.
-    write_bucket_file``) and returns that file's ``KERNEL_SCHEMA``
-    row — one small row per bucket crosses back to the JVM, never the
-    bucket itself.
+    write_bucket_file``) and yields that file's ``KERNEL_SCHEMA`` row —
+    one small row per bucket crosses back to the JVM, never the bucket
+    itself. The kernel takes the bucket's delta as an iterator of
+    pandas batches (the iterator form of ``applyInPandas``) and folds
+    last-writer-wins over them, so a hot key costs no more memory than
+    a batch.
 
     ``files_by_bucket`` is either a plain dict (tests) or a Spark
     Broadcast of one (the pipeline path): a torrent-distributed
@@ -246,6 +272,7 @@ def make_bucket_merger(
     hidden_cols = [f.name for f in hidden]
     carry_cols = payload_cols + hidden_cols
     ts_col = order_cols[0]
+    tb_cols = order_cols[1:]
     ts_cols = [f.name for f in schema.fields if isinstance(f.dataType, T.TimestampType)]
     bucket_field = [T.StructField(BUCKET_COL, T.IntegerType())]
     with_hidden = T.StructType(schema.fields + list(hidden))
@@ -253,36 +280,24 @@ def make_bucket_merger(
     # whose stored files predate one cannot carry it)
     full_layout = arrow_schema(T.StructType(with_hidden.fields + bucket_field))
     bare_layout = arrow_schema(T.StructType(schema.fields + bucket_field))
-    def merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        import pyarrow as pa
 
-        files_map = (
-            files_by_bucket.value
-            if hasattr(files_by_bucket, "value")
-            else files_by_bucket
-        )
-        if pdf.empty:
-            return pd.DataFrame(columns=KERNEL_SCHEMA.fieldNames())
-        bucket = int(pdf[BUCKET_COL].iloc[0])
+    def prepare(pdf: pd.DataFrame) -> pd.DataFrame:
+        """One delta batch in the kernel's types: timestamps as UTC
+        instants, tie-break columns as exact nullable Int64.
+
+        Tie-break columns are restored from their sentinel-filled
+        shadow when the driver shipped one (merge_epoch_spj does): the
+        shadow arrives as exact int64 — the nullable original would
+        arrive as float64, rounded above 2^53 before any pandas-side
+        recovery. Direct-kernel callers without a shadow fall back to
+        the to_numeric cast (exact only when Arrow delivered int64,
+        i.e. the batch had no nulls)."""
         for c in ts_cols:
             if c in pdf.columns:
                 t = pd.to_datetime(pdf[c])
                 if t.dt.tz is None:
                     t = t.dt.tz_localize(session_tz, ambiguous=False)
                 pdf[c] = t.dt.tz_convert("UTC")
-
-        # 1. LWW winners (keep-last over the ascending order tuple).
-        # Tie-break columns are restored to exact nullable Int64 from
-        # their sentinel-filled shadow when the driver shipped one
-        # (merge_epoch_spj does): the shadow arrives as exact int64 —
-        # the nullable original would arrive as float64, rounded above
-        # 2^53 before any pandas-side recovery. Direct-kernel callers
-        # without a shadow fall back to the to_numeric cast (exact only
-        # when Arrow delivered int64, i.e. the group had no nulls).
-        # na_position='first' matches the JVM max-struct order (nulls
-        # smallest), so a null-seq event loses a tied-ts dedup to a
-        # concrete-seq one exactly as in the salted pre-reduce.
-        tb_cols = order_cols[1:]
         for c in tb_cols:
             shadow = f"{c}__tb"
             if shadow in pdf.columns:
@@ -293,11 +308,57 @@ def make_bucket_merger(
                 pdf = pdf.drop(columns=[shadow]).assign(**{c: restored})
             elif c in pdf.columns:
                 pdf = pdf.assign(**{c: _as_exact_int64(pdf[c])})
-        winners = (
-            pdf.sort_values(order_cols, kind="mergesort", na_position="first")
-            .drop_duplicates(key_cols, keep="last")
-            .copy()
+        return pdf
+
+    def merge_bucket(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pyarrow as pa
+
+        files_map = (
+            files_by_bucket.value
+            if hasattr(files_by_bucket, "value")
+            else files_by_bucket
         )
+
+        # 1. LWW winners, folded over the batches: keep-last over the
+        # ascending order tuple of (running winners, then the batches
+        # received since the last fold) — a stable sort keeps arrival
+        # order among full ties, so the fold picks the same winner as
+        # one sort over every event. A fold runs once the pending
+        # batches hold as many rows as the winners: each event is then
+        # sorted a bounded number of times, where folding every batch
+        # re-sorts all winners per batch (about 9x the time of one sort
+        # for a 25-batch bucket of distinct keys), and a call holds at
+        # most twice its distinct keys plus a batch.
+        # na_position='first' matches the JVM max-struct order (nulls
+        # smallest), so a null-seq event loses a tied-ts dedup to a
+        # concrete-seq one.
+        def fold(frames: list[pd.DataFrame]) -> pd.DataFrame:
+            pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
+            return pdf.sort_values(
+                order_cols, kind="mergesort", na_position="first"
+            ).drop_duplicates(key_cols, keep="last")
+
+        winners, pending, n_pending = None, [], 0
+        bucket, n_events, max_ts = None, 0, None
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            bucket = int(pdf[BUCKET_COL].iloc[0])
+            pdf = prepare(pdf)
+            n_events += len(pdf)
+            newest = pdf[ts_col].max() if ts_col in pdf.columns else None
+            if pd.notna(newest) and (max_ts is None or newest > max_ts):
+                max_ts = newest
+            pending.append(pdf)
+            n_pending += len(pdf)
+            if winners is None or n_pending >= len(winners):
+                winners = fold(([] if winners is None else [winners]) + pending)
+                pending, n_pending = [], 0
+        if winners is None:
+            return
+        if pending:
+            winners = fold([winners] + pending)
+        winners = winners.copy()
 
         # 2. extract text for surviving payloads only.
         if not extracted and "html" in winners.columns:
@@ -394,30 +455,49 @@ def make_bucket_merger(
                 if cc in cur_view.columns:
                     cur_view[c] = cur_view[cc]
             parts.append(cur_view[carry_cols])
-        if not parts:
-            return pd.DataFrame(columns=KERNEL_SCHEMA.fieldNames())
-        # 5. write the bucket's one file and hand back its stats row.
-        out = pd.concat(parts, ignore_index=True)
-        out[BUCKET_COL] = bucket
-        layout = full_layout if known else bare_layout
-        data = pa.Table.from_pandas(
-            _arrow_safe(out, schema)[layout.names],
-            schema=layout,
-            preserve_index=False,
-        )
-        row = LakeTable.write_bucket_file(root, version, bucket, data, ts_col)
-        row.update(rollup_path=None, rollup_rows=None, rollup_bytes=None)
-        # 6. the bucket's rollup partials, from the rows just written.
-        if rollup is not None and known:
-            partials = bucket_partials(data, bucket, session_tz)
-            row["rollup_rows"] = partials.num_rows
-            if partials.num_rows:
-                written = LakeTable.write_bucket_file(
-                    rollup[0], rollup[1], bucket, partials, None
-                )
-                row["rollup_path"] = written["path"]
-                row["rollup_bytes"] = written["bytes"]
-        return pd.DataFrame([row])
+
+        # 5. write the bucket's one file (none when no row is left) and
+        # hand back its stats row with the bucket's share of the delta.
+        row = {
+            BUCKET_COL: bucket,
+            "path": None,
+            "rows": 0,
+            "bytes": 0,
+            "ts_min": None,
+            "ts_max": None,
+            "n_dead": 0,
+            "dead_min": None,
+            "rollup_path": None,
+            # an empty bucket's partials are known: there are none
+            "rollup_rows": None if parts or rollup is None else 0,
+            "rollup_bytes": None,
+            "n_events": n_events,
+            "n_keys": len(winners),
+            "max_event_ts": max_ts,
+        }
+        if parts:
+            out = pd.concat(parts, ignore_index=True)
+            out[BUCKET_COL] = bucket
+            layout = full_layout if known else bare_layout
+            data = pa.Table.from_pandas(
+                _arrow_safe(out, schema)[layout.names],
+                schema=layout,
+                preserve_index=False,
+            )
+            row.update(LakeTable.write_bucket_file(root, version, bucket, data, ts_col))
+            # 6. the bucket's rollup partials, from the rows just written.
+            if rollup is not None and known:
+                partials = bucket_partials(data, bucket, session_tz)
+                row["rollup_rows"] = partials.num_rows
+                if partials.num_rows:
+                    written = LakeTable.write_bucket_file(
+                        rollup[0], rollup[1], bucket, partials, None
+                    )
+                    row["rollup_path"] = written["path"]
+                    row["rollup_bytes"] = written["bytes"]
+        out = pd.DataFrame([row])
+        out["max_event_ts"] = pd.to_datetime(out["max_event_ts"], utc=True)
+        yield out
 
     return merge_bucket
 
@@ -449,64 +529,36 @@ def merge_epoch_spj(
     delta: DataFrame,
     epoch: int,
     order_cols: Iterable[str] = ("warc_ts", "seq"),
-    touched_buckets: list[int] | None = None,
-    delta_rows: int | None = None,
-    hot: bool = False,
-    n_salts: int = 16,
     extracted: bool = False,
     rollup: LakeTable | None = None,
+    head: Snapshot | None = None,
 ) -> MergeStats:
-    """Apply one epoch via the single-shuffle grouped-map merge.
+    """Apply one epoch via the single-shuffle grouped-map merge: one
+    Spark job, the kernel's.
 
-    ``touched_buckets`` (from the stats pre-pass) is REQUIRED for
-    correctness of deletes: a bucket whose merge output is empty writes
-    no files, and only the touched list tells the commit to drop the
-    old ones. ``hot``: run the JVM salted pre-reduce first.
+    The kernel returns a row for every bucket the delta touches — with
+    a null path when deletes left the bucket empty — so the commit
+    replaces exactly those buckets, and the rows tell the epoch's
+    touched list, distinct keys, event count and newest event time. The
+    commit publishes against the snapshot the kernel read: a writer
+    that rewrote one of those buckets in between makes it a
+    :class:`CommitConflictError`, never a lost update.
 
     ``rollup``: the warehouse's rollup table. When it can take kernel
     partials (``rollup.claim_kernel_partials``) a rollup version is
     claimed before the kernel job, the kernel writes each touched
     bucket's partial file under it, and the result's ``partials`` hand
-    those files to ``rollup_domain_stats`` to publish.
+    those files to ``rollup_domain_stats`` to publish. ``head``: the
+    table's snapshot when the caller holds it already.
     """
     order_cols = list(order_cols)
-    if epoch in table.applied_epochs():
-        head = table.snapshot()
+    head = head if head is not None else table.snapshot()
+    if epoch in head.applied_epochs:
         return MergeStats(epoch, True, 0, 0, head.version)
 
-    snap = evolve_for_delta(table, delta)
+    snap = evolve_for_delta(table, delta, head)
     key_cols = snap.key_cols
     schema = snap.schema
-
-    if touched_buckets is None:
-        touched_buckets = [
-            int(r[0])
-            for r in delta.select(
-                bucket_expr(key_cols, snap.n_buckets).alias(BUCKET_COL)
-            )
-            .distinct()
-            .collect()
-        ]
-    touched = [int(b) for b in touched_buckets]
-    if not touched:
-        head = table.commit(
-            None,
-            applied_epoch=epoch,
-            summary={
-                "operation": "merge_spj",
-                "epoch": epoch,
-                "rows": 0,
-                # present-but-empty so a rollup (re)run for this epoch
-                # sees "nothing touched" instead of "unknown" (which
-                # would route to a full refresh for a no-op epoch)
-                "touched_list": [],
-            },
-        )
-        return MergeStats(epoch, False, 0, 0, head.version)
-
-    if hot:
-        # bound any pandas group: pre-reduce the hot key across salts
-        delta = salted_lww_dedup(delta, key_cols, order_cols, n_salts=n_salts)
 
     # Existing payload columns cast to the table's authoritative types
     # JVM-side (the table schema wins for existing columns): type
@@ -548,11 +600,9 @@ def merge_epoch_spj(
     hidden = [delta.schema[name] for name in snap.derived_cols]
     bucketed = repartition_by_bucket(
         delta.withColumn(BUCKET_COL, bucket_expr(key_cols, snap.n_buckets)),
-        touched,
+        range(snap.n_buckets),
     )
-    touched_files = spark.sparkContext.broadcast(
-        {b: snap.files.get(str(b), []) for b in map(str, touched)}
-    )
+    files = spark.sparkContext.broadcast(snap.files)
     session_tz = spark.conf.get("spark.sql.session.timeZone")
     rollup_version = (
         claim_kernel_partials(snap, rollup, epoch) if rollup is not None else None
@@ -562,7 +612,7 @@ def merge_epoch_spj(
         kernel = make_bucket_merger(
             table.root,
             version,
-            touched_files,
+            files,
             schema,
             key_cols,
             order_cols,
@@ -574,32 +624,45 @@ def merge_epoch_spj(
         return bucketed.groupBy(BUCKET_COL).applyInPandas(kernel, KERNEL_SCHEMA)
 
     # the kernel's rows, when its job ran (an epoch another writer
-    # applied first returns before building it)
-    kernel_rows: list[list] = []
+    # applied first returns before building it); the commit summary
+    # takes the touched list and key count from them
+    kernel_rows: list = []
+    summary = {"operation": "merge_spj", "epoch": epoch}
+
+    def collected(rows: list) -> None:
+        kernel_rows.extend(rows)
+        touched = sorted(int(r[BUCKET_COL]) for r in rows)
+        summary.update(
+            rows=sum(int(r["n_keys"]) for r in rows),
+            touched_buckets=len(touched),
+            # present even when empty, so a rollup (re)run for this
+            # epoch sees "nothing touched" instead of "unknown" (which
+            # would route to a full refresh for a no-op epoch)
+            touched_list=touched,
+        )
+
     new_snap = table.commit(
-        BucketFileWrite(kernel_job, collected=kernel_rows.append),
-        touched_buckets=touched,
+        BucketFileWrite(kernel_job, collected=collected),
         applied_epoch=epoch,
         # the LWW order column is the stream's event time: recording
         # per-bucket tombstone stats here is what lets expire_tombstones
         # prune its GC discovery scan to prunable buckets
         event_time_col=order_cols[0],
-        summary={
-            "operation": "merge_spj",
-            "epoch": epoch,
-            "rows": delta_rows if delta_rows is not None else -1,
-            "touched_buckets": len(touched),
-            "touched_list": touched,
-        },
+        summary=summary,
+        base=snap,
     )
     partials = None
-    if rollup_version is not None and kernel_rows:
-        partials = KernelPartials(rollup_version, _partial_rows(kernel_rows[0]))
+    if rollup_version is not None:
+        partials = KernelPartials(rollup_version, _partial_rows(kernel_rows))
+    newest = [r["max_event_ts"] for r in kernel_rows if r["max_event_ts"] is not None]
     return MergeStats(
         epoch,
         False,
-        len(touched),
-        delta_rows if delta_rows is not None else -1,
+        summary.get("touched_buckets", 0),
+        summary.get("rows", 0),
         new_snap.version,
         partials,
+        touched_list=summary.get("touched_list", []),
+        n_events=sum(int(r["n_events"]) for r in kernel_rows),
+        max_event_ts=max(newest, default=None),
     )

@@ -262,16 +262,18 @@ def rollup_domain_stats(
         raise CommitConflictError(
             "rollup full refresh lost the commit race 3 times; re-run"
         )
-    if not touched_buckets:
-        rollup.commit(None, applied_epoch=epoch, summary=summary)
-        return
     if partials is not None and partials.rows is not None:
+        # an epoch that touched nothing publishes no file, under the
+        # version claimed for it
         rollup.commit(
             BucketFileWrite(lambda _v: partials.rows, version=partials.version),
             touched_buckets=[int(b) for b in touched_buckets],
             applied_epoch=epoch,
             summary=summary,
         )
+        return
+    if not touched_buckets:
+        rollup.commit(None, applied_epoch=epoch, summary=summary)
         return
     # One explicit shuffle on the pages bucket: the partial aggregate's
     # (src_bucket, domain, day_id) clustering is already satisfied by it

@@ -1,9 +1,10 @@
-"""The end-to-end ingest pipeline: tail -> clean -> stats -> merge
-(dedup -> extract -> arbitrate -> write -> rollup partials, one
-grouped-map pass) -> rollup publish -> lineage, one epoch per call.
-An epoch runs two Spark steps, the stats pre-pass and the kernel job;
-the rollup and lineage commits publish files already written (by the
-kernel, and by the driver) without a job of their own.
+"""The end-to-end ingest pipeline: tail -> clean -> merge (dedup ->
+extract -> arbitrate -> write -> rollup partials, one grouped-map pass)
+-> rollup publish -> lineage, one epoch per call. An epoch runs one
+Spark step, the kernel job: it also reports the epoch's touched
+buckets, key and event counts and newest event time, and the rollup
+and lineage commits publish files already written (by the kernel, and
+by the driver) without a job of their own.
 
 This is the Spark re-expression of the reference's per-day load
 (/root/reference/main.py:98-147: ensure file -> clean -> build
@@ -29,7 +30,11 @@ from etl_spark import schema as S
 from etl_spark.lake.table import BUCKET_COL, LakeTable
 from etl_spark.lineage import LineageLog
 from etl_spark.operators.clean import clean_changes
-from etl_spark.operators.dedup import delta_stats
+
+# Not called here: an epoch's stats come back on the merge kernel's rows.
+# The name stays importable because ``perfbench/spans.py`` wraps
+# ``delta_stats`` on this module by name for its ``dedup.stats`` span.
+from etl_spark.operators.dedup import delta_stats  # noqa: F401
 from etl_spark.operators.merge_spj import MergeStats, merge_epoch_spj
 from etl_spark.operators.rollup import rollup_domain_stats
 
@@ -93,7 +98,6 @@ def ingest_epoch(
     wh: Warehouse,
     changes: DataFrame,
     epoch: int,
-    hot_threshold: int = 100_000,
     with_lineage: bool = True,
     with_rollup: bool = True,
 ) -> MergeStats:
@@ -105,9 +109,11 @@ def ingest_epoch(
     the same table state (north rule).
     """
     log = LineageLog(wh.lineage if with_lineage else None)
+    # the pages head, read once: the merge derives from it and commits
+    # against it
+    head = wh.pages.snapshot()
 
-    if epoch in wh.pages.applied_epochs():
-        head = wh.pages.snapshot()
+    if epoch in head.applied_epochs:
         # Crash-window repair: the pages merge committed but the rollup
         # commit never landed (process died between the two). The pages
         # guard alone would skip the epoch forever and leave the rollup
@@ -137,52 +143,37 @@ def ingest_epoch(
         with log.stage(epoch, "clean") as rec:
             cleaned = clean_changes(delta)
 
-        # Light stats pre-pass (one aggregation, <= n_buckets rows to the
-        # driver): touched buckets + key count + hottest-key size, so the
-        # epoch payload is streamed exactly once (the merge write).
-        snap = wh.pages.snapshot()
-        with log.stage(epoch, "stats") as rec:
-            st = delta_stats(
-                cleaned, snap.key_cols, snap.n_buckets, ts_col="warc_ts"
-            )
-            touched, n_keys, max_key_n = st.touched, st.n_keys, st.max_key_n
-            rec["rows_out"] = n_keys
-
         # single-shuffle grouped-map merge: dedup + extract + current-side
-        # read + arbitration all inside one bucket-partitioned pass
+        # read + arbitration + write all inside one bucket-partitioned
+        # pass, whose rows also carry the epoch's stats
         with log.stage(epoch, "merge") as rec:
             stats = merge_epoch_spj(
                 spark,
                 wh.pages,
                 cleaned,
                 epoch,
-                touched_buckets=touched,
-                delta_rows=n_keys,
-                hot=max_key_n >= hot_threshold,
                 rollup=wh.rollup if with_rollup else None,
+                head=head,
             )
             rec["rows_out"] = stats.delta_rows
 
         if with_rollup:
             with log.stage(epoch, "rollup") as rec:
-                # `touched` is already in hand from delta_stats — passing it
-                # keeps an empty epoch a metadata-only rollup commit (the
-                # head-summary fallback would find no touched_list on a
-                # rows=0 merge and full-refresh for an epoch that changed
-                # nothing). The kernel's partial files publish as they are.
+                # the kernel's touched list keeps an empty epoch a
+                # metadata-only rollup commit, and its partial files
+                # publish as they are
                 rollup_domain_stats(
                     spark,
                     wh.pages,
                     wh.rollup,
                     epoch,
-                    touched_buckets=touched,
+                    touched_buckets=stats.touched_list,
                     partials=stats.partials,
                 )
 
-        # per-epoch throughput + event-time lag, from stats already in
-        # hand (no extra pass over the delta) — flushed with the stage
-        # rows below
-        log.metrics(epoch, n_events=st.n_events, max_event_ts=st.max_ts)
+        # per-epoch throughput + event-time lag, from the kernel's rows
+        # (no extra pass over the delta) — flushed with the stage rows
+        log.metrics(epoch, n_events=stats.n_events, max_event_ts=stats.max_event_ts)
     except BaseException:
         # persist the partial trail (including the failed stage's
         # status row) so an aborted epoch is visible in the audit

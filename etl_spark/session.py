@@ -67,6 +67,11 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # Arrow transfer for every pandas UDF on the extract path.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Python workers fork from a daemon that takes Spark's zip
+        # archives off their path when an installed pyspark of the same
+        # version can stand in: a task then skips re-reading 16 zip
+        # directories (~0.2 s) on start (etl_spark/worker_daemon.py).
+        .config("spark.python.daemon.module", "etl_spark.worker_daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")

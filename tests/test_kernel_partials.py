@@ -2,8 +2,8 @@
 flush writes on the driver: partials equal ``compute_partials`` over
 the same snapshot in any session zone, a bucket whose files predate the
 hidden ``_domain`` column falls back to the Spark rollup, Spark-side
-rewrites carry the column, an epoch runs two Spark steps (5 jobs), and
-every new commit window converges on replay."""
+rewrites carry the column, an epoch runs one Spark step, the kernel's
+(2 jobs), and every new commit window converges on replay."""
 
 from __future__ import annotations
 
@@ -77,9 +77,8 @@ def _apply(spark, wh, delta, epoch):
     touched = sorted(
         {r.b for r in delta.select(bucket_expr(["url"], 4).alias("b")).collect()}
     )
-    stats = merge_epoch_spj(
-        spark, wh.pages, delta, epoch, touched_buckets=touched, rollup=wh.rollup
-    )
+    stats = merge_epoch_spj(spark, wh.pages, delta, epoch, rollup=wh.rollup)
+    assert stats.touched_list == touched
     rollup_domain_stats(
         spark, wh.pages, wh.rollup, epoch, touched_buckets=touched,
         partials=stats.partials,
@@ -174,10 +173,10 @@ def test_bucket_without_domain_falls_back_and_compaction_restores_it(
     assert _stored_partials(spark, wh) == _expected_partials(spark, wh)
 
 
-def test_trickle_epoch_runs_five_jobs(spark, tmp_path):
-    """An update epoch starts 5 Spark jobs — the stats pre-pass (3) and
-    the kernel job (2); the rollup publish and the lineage flush start
-    none."""
+def test_trickle_epoch_runs_two_jobs(spark, tmp_path):
+    """An update epoch starts 2 Spark jobs, the kernel's (its shuffle
+    map stage and the grouped map): no stats pre-pass runs, and the
+    rollup publish and the lineage flush start none."""
     wh = Warehouse.init(str(tmp_path / "wh"), n_buckets=4)
     sc = spark.sparkContext
 
@@ -190,12 +189,12 @@ def test_trickle_epoch_runs_five_jobs(spark, tmp_path):
         )
 
     ingest_epoch(spark, wh, epoch(0), 0)
-    sc.setJobGroup("pin_five_jobs", "one update epoch")
+    sc.setJobGroup("pin_two_jobs", "one update epoch")
     try:
         ingest_epoch(spark, wh, epoch(1), 1)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("pin_five_jobs")) == 5
+    assert len(sc.statusTracker().getJobIdsForGroup("pin_two_jobs")) == 2
     assert 1 in wh.rollup.applied_epochs()
     assert {r.stage for r in wh.lineage.read(spark).filter("epoch = 1").collect()} >= {
         "merge", "rollup", "metrics"

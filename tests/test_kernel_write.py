@@ -522,7 +522,7 @@ def test_kernel_rerun_for_a_bucket_leaves_one_file(tmp_path):
                 "_bucket": [3, 3],
             }
         )
-        row = kernel(delta).iloc[0]
+        row = next(kernel(iter([delta]))).iloc[0]
     bucket_dir = tmp_path / "data" / "v000007" / "_pb=3"
     assert sorted(os.listdir(bucket_dir)) == ["part-00003.parquet"]
     assert row["path"] == "data/v000007/_pb=3/part-00003.parquet"

@@ -87,18 +87,216 @@ def test_spj_delete_empties_bucket(spark, tmp_path):
     assert wh.pages.applied_epochs() == {0, 1}
 
 
-def test_spj_hot_path_matches(spark, tmp_path):
-    """Force the salted pre-reduce (hot flag) and confirm identical
-    winners versus the cold path."""
-    prov = epoch_provider(spark, SF_DIR, evolve_epoch=2)
-    wh_cold = Warehouse.init(str(tmp_path / "cold"))
-    wh_hot = Warehouse.init(str(tmp_path / "hot"))
-    ingest_range(spark, wh_cold, prov, range(3), with_rollup=False)
-    # hot_threshold=1 makes every key "hot" -> salted pre-reduce always on
-    ingest_range(
-        spark, wh_hot, prov, range(3), with_rollup=False, hot_threshold=1
+EVENTS = (
+    "seq long, epoch long, op string, url string, warc_ts string, "
+    "html binary, lang string"
+)
+
+
+def _events(spark, rows):
+    return spark.createDataFrame(rows, EVENTS).withColumn(
+        "warc_ts", F.to_timestamp("warc_ts")
     )
-    assert _state(spark, wh_hot) == _state(spark, wh_cold)
+
+
+def test_spj_fold_matches_across_batch_sizes(spark, tmp_path):
+    """The kernel folds last-writer-wins Arrow batch by batch: one key
+    with 50 events (its winner, a null-seq tie and a late delete spread
+    over the batches) reaches the same state in 2-record batches as in
+    the default batching."""
+    from etl_spark.pipeline import ingest_epoch
+
+    hot = "https://hot.example/k"
+    rows = [
+        (i, 0, "U", hot, f"2024-01-01 00:{(i * 7) % 50:02d}:00",
+         f"<p>v{i}</p>".encode(), None)
+        for i in range(50)
+    ]
+    # the newest event time, 00:49, is event 7 (7 * 7 % 50); a null-seq
+    # event ties it and must lose, a delete older than it must lose too
+    rows += [
+        (None, 0, "U", hot, "2024-01-01 00:49:00", b"<p>null seq</p>", None),
+        (99, 0, "D", hot, "2024-01-01 00:48:00", None, None),
+    ]
+    rows += [
+        (100 + i, 0, "I", f"https://c.example/{i}", "2024-01-01 01:00:00",
+         f"<p>c{i}</p>".encode(), None)
+        for i in range(6)
+    ]
+    states = {}
+    for label, batch in (("default", None), ("batch2", "2")):
+        wh = Warehouse.init(str(tmp_path / label), n_buckets=2)
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        if batch is not None:
+            spark.conf.set(key, batch)
+        try:
+            ingest_epoch(spark, wh, _events(spark, rows), 0, with_rollup=False)
+        finally:
+            spark.conf.unset(key)
+        states[label] = _state(spark, wh)
+    assert states["batch2"] == states["default"]
+    won = [r for r in states["default"] if r[0] == hot]
+    assert [bytes(r[2]) for r in won] == [b"<p>v7</p>"]
+
+
+@pytest.mark.parametrize("batch", [1, 3, 7, 64])
+def test_kernel_fold_equals_one_sort(tmp_path, batch):
+    """The kernel's fold over many batches writes the same bucket as one
+    batch holding every event: a hot key with 100 events, full ties
+    (the later arrival wins) and null seqs, over 30 other keys."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from etl_spark.operators.merge_spj import make_bucket_merger
+
+    schema = T.StructType(
+        [
+            T.StructField("url", T.StringType(), True),
+            T.StructField("warc_ts", T.TimestampType(), True),
+            T.StructField("seq", T.LongType(), True),
+            T.StructField("note", T.StringType(), True),
+        ]
+    )
+    rng = np.random.default_rng(batch)
+    n = 220
+    urls = ["https://h.example/hot"] * 100 + [
+        f"https://k.example/{i % 30}" for i in range(n - 100)
+    ]
+    delta = pd.DataFrame(
+        {
+            "url": rng.permutation(np.array(urls, dtype=object)),
+            "warc_ts": pd.to_datetime(rng.integers(0, 5, n), unit="h"),
+            "seq": pd.array(
+                [None if i % 17 == 0 else int(v) for i, v in enumerate(rng.integers(0, 4, n))],
+                dtype="Int64",
+            ),
+            "note": [f"e{i}" for i in range(n)],
+            "_bucket": 0,
+        }
+    )
+
+    def written(version, batches):
+        kernel = make_bucket_merger(
+            str(tmp_path), version, {}, schema, ["url"], ["warc_ts", "seq"],
+            extracted=True, session_tz="UTC",
+        )
+        row = next(kernel(iter(batches))).iloc[0]
+        assert (row["n_events"], row["n_keys"]) == (n, 31)
+        got = pq.read_table(tmp_path / row["path"]).to_pandas()
+        return sorted(zip(got["url"], got["note"]))
+
+    parts = [delta.iloc[i : i + batch].copy() for i in range(0, n, batch)]
+    assert written(1, parts) == written(2, [delta.copy()])
+
+
+def test_deletes_emptying_a_bucket_drop_its_file(spark, tmp_path):
+    """On a table without the tombstone column, deletes that leave a
+    bucket with no row drop the bucket's file from the snapshot, and
+    the merge still names the bucket in its touched list."""
+    from pyspark.sql import types as T
+
+    from etl_spark.lake.table import LakeTable
+    from etl_spark.operators.merge_spj import merge_epoch_spj
+
+    schema = T.StructType(
+        [
+            T.StructField("url", T.StringType(), True),
+            T.StructField("warc_ts", T.TimestampType(), True),
+            T.StructField("seq", T.LongType(), True),
+            T.StructField("note", T.StringType(), True),
+        ]
+    )
+    table = LakeTable.create(str(tmp_path / "t"), schema, ["url"], 1)
+    ddl = "seq long, op string, url string, warc_ts string, note string"
+
+    def delta(rows):
+        return spark.createDataFrame(rows, ddl).withColumn(
+            "warc_ts", F.to_timestamp("warc_ts")
+        )
+
+    ts0, ts1 = "2024-01-01 00:00:00", "2024-01-02 00:00:00"
+    merge_epoch_spj(
+        spark, table,
+        delta([(1, "I", "https://e.example/1", ts0, "a"),
+               (2, "I", "https://e.example/2", ts0, "b")]),
+        0, extracted=True,
+    )
+    assert list(table.snapshot().files) == ["0"]
+    stats = merge_epoch_spj(
+        spark, table,
+        delta([(3, "D", "https://e.example/1", ts1, None),
+               (4, "D", "https://e.example/2", ts1, None)]),
+        1, extracted=True,
+    )
+    snap = table.snapshot()
+    assert stats.touched_list == [0] and snap.summary["touched_list"] == [0]
+    assert "0" not in snap.files and snap.summary["files_added"] == 0
+    assert table.read(spark).count() == 0
+    assert table.applied_epochs() == {0, 1}
+
+
+def test_empty_delta_touches_nothing(spark, tmp_path):
+    """An epoch whose delta is empty records an empty touched list, and
+    its rollup commit writes no file."""
+    from etl_spark.pipeline import ingest_epoch
+
+    wh = Warehouse.init(str(tmp_path / "wh"), n_buckets=2)
+    ingest_epoch(
+        spark, wh,
+        _events(spark, [(1, 0, "I", "https://z.example/1",
+                         "2024-01-01 00:00:00", b"<p>z</p>", None)]),
+        0,
+    )
+    rollup_before = wh.rollup.snapshot()
+    stats = ingest_epoch(spark, wh, _events(spark, []), 1)
+    assert stats.touched_list == [] and stats.n_events == 0
+    assert wh.pages.snapshot().summary["touched_list"] == []
+    rollup = wh.rollup.snapshot()
+    assert 1 in rollup.applied_epochs
+    assert rollup.files == rollup_before.files
+    assert rollup.summary.get("files_added", 0) == 0
+    assert wh.pages.read(spark).count() == 1
+
+
+def test_merge_commits_against_the_snapshot_its_kernel_read(
+    spark, tmp_path, monkeypatch
+):
+    """A commit that lands between the snapshot the kernel read and the
+    merge's own publish, rewriting the same bucket, is a conflict: the
+    merge raises instead of overwriting it, and its epoch stays
+    unapplied, so a replay applies it on top."""
+    from etl_spark.lake.table import CommitConflictError
+    from etl_spark.operators import merge_spj
+
+    wh = Warehouse.init(str(tmp_path / "wh"), n_buckets=1)
+
+    def one(epoch, url):
+        return _events(
+            spark,
+            [(epoch, epoch, "I", url, "2024-01-01 00:00:00", b"<p>x</p>", None)],
+        )
+
+    orig = merge_spj.repartition_by_bucket
+    armed = [True]
+
+    def racing(df, *args):
+        if armed[0]:
+            armed[0] = False
+            merge_spj.merge_epoch_spj(spark, wh.pages, one(5, "https://r.example/b"), 5)
+        return orig(df, *args)
+
+    monkeypatch.setattr(merge_spj, "repartition_by_bucket", racing)
+    with pytest.raises(CommitConflictError):
+        merge_spj.merge_epoch_spj(spark, wh.pages, one(1, "https://r.example/a"), 1)
+    assert wh.pages.applied_epochs() == {5}
+    assert [r.url for r in wh.pages.read(spark).collect()] == ["https://r.example/b"]
+    merge_spj.merge_epoch_spj(spark, wh.pages, one(1, "https://r.example/a"), 1)
+    assert wh.pages.applied_epochs() == {1, 5}
+    assert sorted(r.url for r in wh.pages.read(spark).collect()) == [
+        "https://r.example/a", "https://r.example/b"
+    ]
 
 
 def test_equal_ts_cross_epoch_arbitrates_by_seq(spark, tmp_path, merge_path):
@@ -267,7 +465,7 @@ def test_kernel_reads_current_side_through_fs_seam(spark, tmp_path):
             extracted=True,
             session_tz="UTC",
         )
-        row = kernel(delta.copy()).iloc[0]
+        row = next(kernel(iter([delta.copy()]))).iloc[0]
         out = pq.read_table(tmp_path / row["path"]).to_pandas()
         assert row["rows"] == len(out)
         outs[label] = sorted(

@@ -161,9 +161,23 @@ def test_lineage_rows_written(spark, tmp_wh):
     wh = _ingest_all(spark, tmp_wh)
     lin = wh.lineage.read(spark)
     stages = {r.stage for r in lin.select("stage").distinct().collect()}
-    # dedup + extract run inside the grouped-map merge stage
-    assert {"clean", "stats", "merge", "rollup", "metrics"} <= stages
+    # dedup + extract run inside the grouped-map merge stage, and the
+    # epoch's stats come back on the kernel's rows: no stats stage
+    assert {"clean", "merge", "rollup", "metrics"} <= stages
+    assert "stats" not in stages
     assert lin.filter(F.col("epoch") == 0).count() >= 4
+    # the merge row's rows_out is the epoch's distinct keys, as the
+    # stats pre-pass reported them
+    from etl_spark.operators.clean import clean_changes
+
+    changes = epoch_provider(spark, SF_SMALL)
+    merge_rows = {
+        r.epoch: r.rows_out for r in lin.filter(F.col("stage") == "merge").collect()
+    }
+    assert merge_rows == {
+        e: clean_changes(changes(e)).select("url").distinct().count()
+        for e in range(N_EPOCHS)
+    }
     # the per-epoch throughput/lag row (north rule: "throughput/lag
     # metrics emitted each epoch"): one per applied epoch, events/sec
     # positive, lag = now − newest 2024 event time (large and positive)

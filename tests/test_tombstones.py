@@ -192,3 +192,45 @@ def test_newer_insert_resurrects_after_delete(spark, tmp_path, merge_path):
     assert len(rows) == 1 and rows[0].text == "back"
     # the tombstone was replaced, not duplicated
     assert wh.pages.read(spark, include_deleted=True).count() == 1
+
+
+def test_append_keeps_tombstone_stats(spark, tmp_path, monkeypatch):
+    """An append adds its files' marker count and earliest marker to
+    each bucket's recorded tombstone state instead of marking the
+    bucket unknown: after a marker-free append, expire_tombstones scans
+    no appended bucket."""
+    wh = Warehouse.init(str(tmp_path / "wh"), n_buckets=2)
+    rows = [
+        (1, 0, "I", f"https://t.example/{i}", "2024-01-01 00:00:00",
+         f"<p>{i}</p>".encode(), None)
+        for i in range(8)
+    ] + [(9, 0, "D", "https://t.example/0", "2024-01-05 00:00:00", None, None)]
+    ingest_epoch(spark, wh, _df(spark, rows), 0, with_rollup=False)
+    t = wh.pages
+    before = t.snapshot().tombstone_stats["buckets"]
+    copies = t.read(spark).withColumn("url", F.concat("url", F.lit("-copy")))
+    snap = t.append(copies, event_time_col="warc_ts")
+    appended = {b for b, paths in snap.files.items() if len(paths) > 1}
+    assert appended
+    assert snap.tombstone_stats["buckets"] == before
+
+    scanned = []
+    read = t.read
+
+    def spy(spark, *args, **kwargs):
+        scanned.append(kwargs.get("buckets"))
+        return read(spark, *args, **kwargs)
+
+    monkeypatch.setattr(t, "read", spy)
+    # the one marker is newer than the horizon: nothing is expirable
+    t.expire_tombstones(spark, "2024-01-03 00:00:00", "warc_ts")
+    for buckets in scanned:
+        assert buckets is not None and not appended & {str(b) for b in buckets}
+
+    # an appended marker adds to its bucket's count and earliest marker
+    marker = t.read(spark, include_deleted=True).filter("_deleted").withColumn(
+        "warc_ts", F.to_timestamp(F.lit("2024-01-04 00:00:00"))
+    )
+    (mb,) = [b for b, (n, _) in before.items() if n]
+    snap = t.append(marker, event_time_col="warc_ts")
+    assert snap.tombstone_stats["buckets"][mb] == [2, "2024-01-04T00:00:00+00:00"]
