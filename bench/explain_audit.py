@@ -199,21 +199,18 @@ def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
     or write stage above it. The whole epoch starts 2 Spark jobs, the
     kernel's shuffle map stage and its grouped map: no stats pre-pass.
     An epoch whose rollup takes the kernel's partial files, and its
-    lineage flush, must start no Spark job. The
-    fallback rollup — an epoch touching a bucket whose stored file
-    lacks ``_domain`` — is a DataFrame commit, whose writer job is a
-    FlatMapGroupsInArrow grouped on ``_bucket``: it must sit on exactly
-    one hash Exchange, on ``_bucket`` (the partial aggregate and the
-    writer's grouping both reuse the explicit bucket shuffle)."""
+    lineage flush, must start no Spark job. The rollup's rebuild — here
+    the crash-repair call for an epoch whose merge landed without its
+    rollup — computes and writes each bucket's partials in one grouped
+    map: its writer job's root must be FlatMapGroupsInArrow, on exactly
+    one hash Exchange, on ``_bucket``."""
     import dataclasses
 
-    import pyarrow.parquet as pq
     from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
     from etl_spark import lineage, pipeline
     from etl_spark.lake.table import BucketFileWrite
-    from etl_spark.operators.rollup import DOMAIN_COL
 
     wh = pipeline.Warehouse.init(os.path.join(root, "wh_shape"), n_buckets=8)
     # every commit with data writes through a BucketFileWrite; the
@@ -270,11 +267,12 @@ def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
             spark, "audit_epoch", pipeline.ingest_epoch, spark, wh, events(0), 0
         )
         pipeline.rollup_domain_stats, lineage.LineageLog.flush = originals
-        # a bucket file written before the hidden column existed: drop
-        # it from one stored file, so the next epoch's rollup falls back
-        path = os.path.join(wh.pages.root, wh.pages.snapshot().files["0"][0])
-        pq.write_table(pq.read_table(path).drop_columns([DOMAIN_COL]), path)
-        pipeline.ingest_epoch(spark, wh, events(1), 1, with_lineage=False)
+        # the next epoch's merge lands without its rollup; the repair
+        # rebuilds the touched buckets' partials
+        pipeline.ingest_epoch(
+            spark, wh, events(1), 1, with_lineage=False, with_rollup=False
+        )
+        pipeline.rollup_domain_stats(spark, wh.pages, wh.rollup, 1)
     finally:
         pipeline.rollup_domain_stats, lineage.LineageLog.flush = originals
         BucketFileWrite.rows = rows
@@ -311,7 +309,7 @@ def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
         or not re.match(by_bucket, ex[0])
     ):
         failures.append(
-            "ingest_stage_shape: the fallback per-epoch rollup's writer job "
+            "ingest_stage_shape: the rollup rebuild's writer job "
             "must run FlatMapGroupsInArrow as its root on exactly one hash "
             f"Exchange on _bucket; got {plan_tree(rollup)[:2]} on {ex}"
         )

@@ -289,8 +289,8 @@ class Snapshot:
     # row}. Every data file a writer produces carries them next to
     # BUCKET_COL, outside the table schema (``read`` never shows them):
     # a DataFrame commit evaluates the expression before its write, the
-    # merge kernel receives them on its input. A file that lacks one
-    # predates its declaration. The table format stays schema-agnostic;
+    # merge kernel receives them on its input, and refuses a stored file
+    # that lacks one. The table format stays schema-agnostic;
     # the pipeline declares the pages table's ``_domain`` here.
     derived_cols: dict = field(default_factory=dict)
 
@@ -738,23 +738,23 @@ class LakeTable:
     def read_bucket_files(root: str, paths: list[str], schema: T.StructType):
         """Read data files (relative to ``root``, through the filesystem
         seam) as ONE ``pyarrow.Table`` in the table's write layout (see
-        :func:`arrow_schema`), and the set of ``schema`` columns some
-        file lacked. Each file is cast to that layout before the concat:
-        files written by Spark's parquet writer (tables written before
-        every commit went through ``write_bucket_file``) store timestamps
-        as INT96, which read back as naive ``timestamp[ns]`` holding UTC
-        wall time, ``write_bucket_file`` stores ``timestamp[us,
-        tz=UTC]``, and files
-        older than an additive schema change (or a derived column's
-        declaration) lack its columns (read as nulls) —
-        ``concat_tables`` refuses to mix any of these as is."""
+        :func:`arrow_schema`), and a map from each ``schema`` column some
+        file lacked to the first such file. Each file is cast to that
+        layout before the concat: files written by Spark's parquet
+        writer (tables written before every commit went through
+        ``write_bucket_file``) store timestamps as INT96, which read
+        back as naive ``timestamp[ns]`` holding UTC wall time,
+        ``write_bucket_file`` stores ``timestamp[us, tz=UTC]``, and
+        files older than an additive schema change lack its columns
+        (read as nulls) — ``concat_tables`` refuses to mix any of these
+        as is."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         target = arrow_schema(schema)
         filesystem, base = _resolve_filesystem(root)
         tables = [target.empty_table()]
-        absent: set[str] = set()
+        absent: dict[str, str] = {}
         for p in paths:
             # use_threads=False: parallelism comes from Spark tasks;
             # Arrow's default per-call pool (cpu_count threads in EVERY
@@ -762,7 +762,9 @@ class LakeTable:
             got = pq.read_table(
                 f"{base}/{p}", filesystem=filesystem, use_threads=False
             )
-            absent.update(f.name for f in target if f.name not in got.column_names)
+            for f in target:
+                if f.name not in got.column_names:
+                    absent.setdefault(f.name, p)
             tables.append(
                 pa.Table.from_arrays(
                     [
@@ -875,30 +877,19 @@ class LakeTable:
         }
         return written, bucket_stats, file_stats, n_bytes
 
-    def _frame_write(
-        self, df: DataFrame, event_time_col: str | None, derived_cols: dict
+    def grouped_write(
+        self, df: DataFrame, to_file: Callable, event_time_col: str | None
     ) -> BucketFileWrite:
-        """A DataFrame commit input (it must carry BUCKET_COL) as a
-        :class:`BucketFileWrite`: one grouped-map job hands each bucket's
-        rows to ``write_bucket_file`` as one Arrow table and returns the
-        files' stats rows, so a rewrite is a single Spark job with no
-        re-scan of its output. ``derived_cols`` (the snapshot's hidden
-        columns) are evaluated first, so every rewrite carries them and
-        fills them where a legacy input file lacked them.
-
-        ``groupBy(BUCKET_COL)`` shuffles on the bucket unless the input
-        is already hash-partitioned on it (``repartition_by_bucket``),
-        which Catalyst sees, so no second shuffle is planned. A bucket
-        is one group, held in one Python worker's memory, as the merge
-        kernel holds it. ``applyInArrow`` hands timestamps over as
-        instants in the session zone; the cast to :func:`arrow_schema`
-        makes them UTC without moving them."""
+        """A :class:`BucketFileWrite` whose build is one grouped-map job
+        over ``df`` (with BUCKET_COL): each bucket's rows reach one Python
+        worker as one Arrow table (timestamps as session-zone instants),
+        ``to_file(data, bucket)`` turns them into the file's rows, and
+        ``write_bucket_file`` writes them. The grouping plans no second
+        shuffle when ``df`` is already hash-partitioned on the bucket
+        (``repartition_by_bucket``)."""
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        for name, sql in derived_cols.items():
-            df = df.withColumn(name, F.expr(sql))
         root = self.root
-        layout = arrow_schema(df.schema)
         row_layout = to_arrow_schema(BUCKET_FILE_SCHEMA)
 
         def build(version: int) -> DataFrame:
@@ -907,13 +898,29 @@ class LakeTable:
 
                 bucket = data[BUCKET_COL][0].as_py()
                 row = LakeTable.write_bucket_file(
-                    root, version, bucket, data.cast(layout), event_time_col
+                    root, version, bucket, to_file(data, bucket), event_time_col
                 )
                 return pa.Table.from_pylist([row], schema=row_layout)
 
             return df.groupBy(BUCKET_COL).applyInArrow(write, BUCKET_FILE_SCHEMA)
 
         return BucketFileWrite(build)
+
+    def _frame_write(
+        self, df: DataFrame, event_time_col: str | None, derived_cols: dict
+    ) -> BucketFileWrite:
+        """A DataFrame commit input as a :meth:`grouped_write` of its
+        rows: a rewrite is one Spark job with no re-scan of its output.
+        ``derived_cols`` (the snapshot's hidden columns) are evaluated
+        first, so every rewrite carries them and fills them where a
+        legacy input file lacked them. The cast to :func:`arrow_schema`
+        makes the session-zone instants UTC without moving them."""
+        for name, sql in derived_cols.items():
+            df = df.withColumn(name, F.expr(sql))
+        layout = arrow_schema(df.schema)
+        return self.grouped_write(
+            df, lambda data, _bucket: data.cast(layout), event_time_col
+        )
 
     def commit(
         self,

@@ -5,8 +5,9 @@
 lineage LakeTable so every run is self-documenting.
 
 Timing caveat: Spark stages are lazy — a stage whose body only builds
-a DataFrame plan (clean, dedup, extract) records near-zero ``seconds``;
-the compute lands in whichever stage triggers the action (stats, merge).
+a DataFrame plan (clean) records near-zero ``seconds``; the compute
+lands in the stage that triggers the action (merge: the kernel job
+that dedups, extracts, writes and computes the rollup partials).
 ``seconds`` is therefore "wall-clock attributable to actions started in
 this stage", not per-transformation cost; the per-epoch SUM across
 stages is the meaningful latency number.

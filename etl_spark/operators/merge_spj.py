@@ -47,8 +47,8 @@ delta Arrow batch by Arrow batch):
      a POSIX root reads locally, a ``s3://``/``hdfs://`` root reads
      via the store's client — no kernel change to leave shared disk.
      Every file is cast to one Arrow layout first (Spark-written INT96
-     and kernel-written UTC-micros timestamps, files that predate a
-     column), and both sides' timestamps become UTC instants;
+     and kernel-written UTC-micros timestamps, files that predate an
+     added payload column), and both sides' timestamps become UTC instants;
   4. row arbitration: delta wins iff no current row or it is >= on the
      (warc_ts, seq) tuple, NULL comparing as -inf on either side; 'D'
      winners become tombstones; untouched current rows carry through
@@ -70,9 +70,10 @@ delta Arrow batch by Arrow batch):
 
 Hidden derived columns (``Snapshot.derived_cols``, the pages table's
 ``_domain``) are evaluated in the JVM on the delta before the shuffle
-and carried like payload: the kernel never re-implements them. A
-bucket whose stored files predate such a column is written without
-it, and its partials are reported unknown (``rollup_rows`` null).
+and carried like payload: the kernel never re-implements them. Every
+stored pages file carries them (every writer writes them), so a stored
+file that lacks one fails the kernel task, naming the file, instead of
+being rewritten without it.
 
 The kernel runs inside ``LakeTable.commit`` (a :class:`BucketFileWrite`):
 the commit claims the version, runs the kernel job, replaces every
@@ -113,15 +114,16 @@ from etl_spark.operators.rollup import (
     KernelPartials,
     bucket_partials,
     claim_kernel_partials,
+    layout_stamp,
 )
 
 OP_COL = "op"
 
 # The kernel's row per touched bucket: the pages file (path null when
 # no row is left), then the rollup partial file written next to it (all
-# null when no rollup version was claimed; ``rollup_rows`` null =
-# partials unknown, 0 = no live page, no file), then the bucket's share
-# of the epoch's delta: its events, distinct keys and newest event time.
+# null when no rollup version was claimed; ``rollup_rows`` 0 = no live
+# page, no file), then the bucket's share of the epoch's delta: its
+# events, distinct keys and newest event time.
 KERNEL_SCHEMA = T.StructType(
     BUCKET_FILE_SCHEMA.fields
     + [
@@ -264,8 +266,8 @@ def make_bucket_merger(
     ``timestamp[us, tz=UTC]`` — so a bucket rewrite never shifts the
     rows it carries through, whatever the session zone.
 
-    ``hidden``: the table's derived columns, present on the delta and
-    carried into the file when every current file has them.
+    ``hidden``: the table's derived columns, present on the delta and on
+    every current file, and carried into the written file.
     ``rollup`` = (rollup root, claimed rollup version): also write the
     bucket's rollup partial file there and report it on the row."""
     payload_cols = [f.name for f in schema.fields]
@@ -276,10 +278,7 @@ def make_bucket_merger(
     ts_cols = [f.name for f in schema.fields if isinstance(f.dataType, T.TimestampType)]
     bucket_field = [T.StructField(BUCKET_COL, T.IntegerType())]
     with_hidden = T.StructType(schema.fields + list(hidden))
-    # the file layout, with the hidden columns and without (a bucket
-    # whose stored files predate one cannot carry it)
-    full_layout = arrow_schema(T.StructType(with_hidden.fields + bucket_field))
-    bare_layout = arrow_schema(T.StructType(schema.fields + bucket_field))
+    layout = arrow_schema(T.StructType(with_hidden.fields + bucket_field))
 
     def prepare(pdf: pd.DataFrame) -> pd.DataFrame:
         """One delta batch in the kernel's types: timestamps as UTC
@@ -374,13 +373,18 @@ def make_bucket_merger(
         # an older file lacks as nulls. int64 -> nullable Int64 at the
         # Arrow boundary: the default conversion renders
         # int64-with-nulls as float64, already lossy above 2^53. A
-        # current file without a derived column leaves its value
-        # unknown for this bucket: the column is not written and the
-        # rollup partials are not computed.
+        # current file without a derived column cannot be carried
+        # through: fail loudly rather than write the bucket without it.
         cur_table, absent = LakeTable.read_bucket_files(
             root, files_map.get(str(bucket), []), with_hidden
         )
-        known = not absent.intersection(hidden_cols)
+        for c in hidden_cols:
+            if c in absent:
+                raise ValueError(
+                    f"stored file {absent[c]} of bucket {bucket} lacks the "
+                    f"table's derived column {c!r}; rewrite the table "
+                    "(compact_files) before merging into it"
+                )
         cur = cur_table.to_pandas(
             use_threads=False, types_mapper={pa.int64(): pd.Int64Dtype()}.get
         )
@@ -468,8 +472,7 @@ def make_bucket_merger(
             "n_dead": 0,
             "dead_min": None,
             "rollup_path": None,
-            # an empty bucket's partials are known: there are none
-            "rollup_rows": None if parts or rollup is None else 0,
+            "rollup_rows": None if rollup is None else 0,
             "rollup_bytes": None,
             "n_events": n_events,
             "n_keys": len(winners),
@@ -478,7 +481,6 @@ def make_bucket_merger(
         if parts:
             out = pd.concat(parts, ignore_index=True)
             out[BUCKET_COL] = bucket
-            layout = full_layout if known else bare_layout
             data = pa.Table.from_pandas(
                 _arrow_safe(out, schema)[layout.names],
                 schema=layout,
@@ -486,7 +488,7 @@ def make_bucket_merger(
             )
             row.update(LakeTable.write_bucket_file(root, version, bucket, data, ts_col))
             # 6. the bucket's rollup partials, from the rows just written.
-            if rollup is not None and known:
+            if rollup is not None:
                 partials = bucket_partials(data, bucket, session_tz)
                 row["rollup_rows"] = partials.num_rows
                 if partials.num_rows:
@@ -502,11 +504,8 @@ def make_bucket_merger(
     return merge_bucket
 
 
-def _partial_rows(kernel_rows) -> list[dict] | None:
-    """The rollup's ``BUCKET_FILE_SCHEMA`` rows from the kernel's rows,
-    or None when some bucket's partials are unknown."""
-    if any(r["rollup_rows"] is None for r in kernel_rows):
-        return None
+def _partial_rows(kernel_rows) -> list[dict]:
+    """The rollup's ``BUCKET_FILE_SCHEMA`` rows from the kernel's rows."""
     return [
         {
             BUCKET_COL: r[BUCKET_COL],
@@ -653,7 +652,12 @@ def merge_epoch_spj(
     )
     partials = None
     if rollup_version is not None:
-        partials = KernelPartials(rollup_version, _partial_rows(kernel_rows))
+        partials = KernelPartials(
+            rollup_version,
+            _partial_rows(kernel_rows),
+            summary.get("touched_list", []),
+            layout_stamp(snap.n_buckets),
+        )
     newest = [r["max_event_ts"] for r in kernel_rows if r["max_event_ts"] is not None]
     return MergeStats(
         epoch,

@@ -22,18 +22,18 @@ K5 note: "compute-before-write (preferred: make rollups pure)") —
 replaying an epoch regenerates identical partials, so the rollup is
 exactly-once by construction, with the applied-epoch guard on top.
 
-Where partials are computed: the merge kernel already holds each
-touched bucket's final rows in Arrow, so it aggregates them
-(:func:`bucket_partials`) and writes the bucket's partial file in the
-same task, under a rollup version claimed before the kernel job
-(:func:`claim_kernel_partials`). The domain is not re-derived in
-Python: the pages table declares a hidden ``_domain`` column,
-``domain_of(url)`` evaluated in the JVM, and every pages file carries
-it. The epoch's rollup commit then only publishes the returned file
-rows — no Spark job. A touched bucket whose stored files predate the
-column makes the kernel's partials unknown, and that epoch's rollup
-recomputes the touched buckets' partials with Spark, as do the
-crash-window repair and a full refresh.
+Two outcomes. Every normal epoch *publishes*: the merge
+kernel already holds each touched bucket's final rows in Arrow, so it
+aggregates them (:func:`bucket_partials`) and writes the bucket's
+partial file in the same task, under a rollup version claimed before
+the kernel job (:func:`claim_kernel_partials`); the epoch's rollup
+commit only publishes those files — no Spark job. The domain is not
+re-derived in Python: the pages table declares a hidden ``_domain``
+column, ``domain_of(url)`` evaluated in the JVM, and every pages file
+carries it. Everything else *rebuilds* (:func:`rebuild_partials`): the
+crash-window repair of an epoch whose rollup commit never landed, a
+full refresh, and the rebuild after a pages rebucket all run the same
+``bucket_partials`` over the pages buckets in one grouped-map job.
 """
 
 from __future__ import annotations
@@ -44,7 +44,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_spark.functions.keys import smart_date_id
 from etl_spark.lake.table import (
     BUCKET_COL,
     DELETED_COL,
@@ -55,7 +54,6 @@ from etl_spark.lake.table import (
     arrow_schema,
     repartition_by_bucket,
 )
-from etl_spark.operators.clean import domain_of
 
 # The pages table's hidden derived column (``Snapshot.derived_cols``):
 # ``domain_of(url)`` as Spark SQL, evaluated in the JVM by every writer.
@@ -84,51 +82,34 @@ ROLLUP_SCHEMA = T.StructType(
 )
 
 
-def compute_partials(pages_df: DataFrame) -> DataFrame:
-    """Partial aggregates keyed (src_bucket, domain, day_id)."""
-    return (
-        pages_df.select(
-            F.col(BUCKET_COL).alias("src_bucket"),
-            domain_of(F.col("url")).alias("domain"),
-            smart_date_id(F.col("warc_ts")).alias("day_id"),
-            F.length(F.col("text")).alias("_chars"),
-            F.col("warc_ts"),
-        )
-        .groupBy("src_bucket", "domain", "day_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_pages"),
-            F.sum("_chars").alias("text_chars"),
-            F.max("warc_ts").alias("max_warc_ts"),
-        )
-    )
-
-
 @dataclass
 class KernelPartials:
     """Rollup partial files the merge kernel wrote for one epoch.
 
     ``version`` is the rollup version claimed before the kernel job;
     ``rows`` are the ``BUCKET_FILE_SCHEMA`` rows of the files written
-    under it (a touched bucket left with no live page has none), or
-    None when some touched bucket's partials are unknown."""
+    under it (a touched bucket left with no live page has none);
+    ``touched`` are the pages buckets the epoch rewrote, whose rollup
+    buckets the publish replaces; ``layout`` is the :func:`layout_stamp`
+    of the pages snapshot the kernel read."""
 
     version: int
-    rows: list[dict] | None
+    rows: list[dict]
+    touched: list[int]
+    layout: str
 
 
 def claim_kernel_partials(
     pages_snap: Snapshot, rollup: LakeTable, epoch: int
 ) -> int | None:
     """Claim the rollup version the merge kernel writes partial files
-    under, or None when the epoch's rollup cannot take them: the pages
-    table declares no ``_domain``, the epoch's rollup already landed,
-    or the rollup table holds data without the current layout stamp
-    (it needs a full refresh first)."""
-    if DOMAIN_COL not in pages_snap.derived_cols or epoch in rollup.applied_epochs():
-        return None
+    under, or None when the epoch's rollup cannot take them: it already
+    landed, or the rollup table holds data without the current layout
+    stamp (it needs a full refresh first). Reads the rollup head once."""
     head = rollup.snapshot()
-    if any(head.files.values()) and head.summary.get("layout") != layout_stamp(
-        pages_snap.n_buckets
+    if epoch in head.applied_epochs or (
+        any(head.files.values())
+        and head.summary.get("layout") != layout_stamp(pages_snap.n_buckets)
     ):
         return None
     return rollup._claim_version()
@@ -140,12 +121,13 @@ PARTIAL_SCHEMA = T.StructType(
 
 
 def bucket_partials(data, bucket: int, session_tz: str):
-    """:func:`compute_partials` over one pages bucket's rows (a
+    """The rollup's partial aggregate over one pages bucket's rows (a
     ``pyarrow.Table`` carrying ``_domain``), in the rollup's file
     layout: live rows only, grouped on (domain, day_id) with null
-    domains kept as a group; ``day_id`` is ``smart_date_id`` in the
-    session zone; ``text_chars`` sums code-point lengths (Spark's
-    ``length``), skipping null text."""
+    domains kept as a group; ``n_pages`` counts rows, ``day_id`` is
+    ``smart_date_id`` in the session zone; ``text_chars`` sums
+    code-point lengths (Spark's ``length``), skipping null text;
+    ``max_warc_ts`` is the newest event time."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -196,101 +178,115 @@ def bucket_partials(data, bucket: int, session_tz: str):
     )
 
 
+def rebuild_partials(
+    spark: SparkSession,
+    pages: LakeTable,
+    rollup: LakeTable,
+    buckets: list[int] | None,
+    summary: dict,
+    applied_epoch: int | None = None,
+) -> None:
+    """Recompute the rollup partials of the pages ``buckets`` (None:
+    every bucket, replacing the whole rollup table) from the pages head
+    and commit them, stamped with that snapshot's layout: one
+    grouped-map job on one ``_bucket`` Exchange runs each bucket's live
+    rows, ``_domain`` evaluated in the JVM, through the kernel's own
+    :func:`bucket_partials`. The partials are a pure function of the
+    pages snapshot, so a lost publish race re-derives and retries, 3
+    tries in all."""
+    session_tz = spark.conf.get("spark.sql.session.timeZone")
+
+    def partials_write(snap: Snapshot) -> BucketFileWrite | None:
+        if buckets is not None and not buckets:
+            return None  # nothing touched: a metadata-only commit
+        # only what the aggregate reads crosses the shuffle
+        live = repartition_by_bucket(
+            pages.read(
+                spark, buckets=buckets, version=snap.version, with_bucket=True
+            ).select(
+                BUCKET_COL, "warc_ts", "text", F.expr(DOMAIN_SQL).alias(DOMAIN_COL)
+            ),
+            range(snap.n_buckets) if buckets is None else buckets,
+        )
+        return rollup.grouped_write(
+            live, lambda data, bucket: bucket_partials(data, bucket, session_tz), None
+        )
+
+    for _ in range(3):
+        snap = pages.snapshot()
+        try:
+            rollup.commit(
+                partials_write(snap),
+                touched_buckets=buckets,
+                overwrite_all=buckets is None,
+                applied_epoch=applied_epoch,
+                summary={**summary, "layout": layout_stamp(snap.n_buckets)},
+            )
+            return
+        except CommitConflictError:
+            continue
+    raise CommitConflictError("rollup rebuild lost the commit race 3 times; re-run")
+
+
 def rollup_domain_stats(
     spark: SparkSession,
     pages: LakeTable,
     rollup: LakeTable,
     epoch: int,
-    touched_buckets: list[int] | None = None,
     partials: KernelPartials | None = None,
 ) -> None:
-    """Refresh partials for (only) the buckets the epoch touched.
+    """Bring the rollup up to date with pages epoch ``epoch``.
 
-    The commit replaces exactly those rollup buckets (identity
-    bucketing: rollup BUCKET_COL == src_bucket), so untouched partial
-    files carry forward by manifest reference — the same bucket-granular
-    copy-on-write ``merge_epoch_spj`` uses for pages. A touched src_bucket
-    that ends up with zero pages simply writes no partial file and its
-    old entry is dropped from the manifest.
+    With ``partials`` (every normal epoch), publish the files the merge
+    kernel wrote: a metadata-only commit under the version claimed for
+    them that replaces exactly the rollup buckets of the pages buckets
+    the epoch touched (identity bucketing: rollup BUCKET_COL ==
+    src_bucket) and carries every other partial file forward — the
+    same bucket-granular copy-on-write the merge uses for pages. A
+    touched bucket left with no live page has no file, so its old entry
+    drops out. No head is read here: the commit reads the fresh one,
+    and its applied-epoch check makes a replay a no-op.
 
-    ``partials``: the files the merge kernel wrote for this epoch. When
-    they are known they are published as they are, a metadata-only
-    commit under the version claimed for them; otherwise (or with no
-    ``touched_buckets``, or an unstamped table) the partials are
-    recomputed from the pages table with Spark."""
-    if epoch in rollup.applied_epochs():
-        return
-    psnap = pages.snapshot()
-    if touched_buckets is None and psnap.summary.get("epoch") == epoch:
-        # Head-summary fallback is only trustworthy when the pages head
-        # IS this epoch's merge commit (the normal call site runs
-        # rollup immediately after the merge). Any other head — a later
-        # maintenance commit, a replay repair several epochs on — would
-        # hand us some OTHER epoch's touched list; leaving None routes
-        # to the always-correct full refresh instead.
-        touched_buckets = psnap.summary.get("touched_list")
-    stamp = layout_stamp(psnap.n_buckets)
-    summary = {"operation": "rollup", "epoch": epoch, "layout": stamp}
-    # Layout guard: bucket-granular replace is only sound against a
-    # manifest whose keys ARE src_buckets under the pages table's
-    # current bucket count. A rollup table written by an older
-    # (hash-bucketed) engine, stamped under a different pages bucket
-    # count (rebucket crash window), or any non-empty table missing the
-    # stamp, gets ONE full refresh — which rewrites it into the
-    # identity layout and re-stamps it — instead of a partial replace
-    # that would drop unrelated partials and double-count survivors.
-    head = rollup.snapshot()
-    stamped = head.summary.get("layout") == stamp
-    has_data = any(head.files.values())
-    if touched_buckets is None or (has_data and not stamped):
-        # Full refresh (still pure + idempotent). overwrite_all raises
-        # on a lost publish race instead of rebasing; the refresh is a
-        # pure function of the pages snapshot, so re-derive and retry
-        # (same loop as LakeTable.compact_files).
-        for _ in range(3):
-            fresh = compute_partials(pages.read(spark, with_bucket=True))
-            try:
-                rollup.commit(
-                    fresh.withColumn(BUCKET_COL, F.col("src_bucket")),
-                    overwrite_all=True,
-                    applied_epoch=epoch,
-                    summary=summary,
-                )
-                return
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            "rollup full refresh lost the commit race 3 times; re-run"
-        )
-    if partials is not None and partials.rows is not None:
-        # an epoch that touched nothing publishes no file, under the
-        # version claimed for it
+    Without them (the crash-window repair of an epoch whose pages commit
+    landed and whose rollup commit did not), :func:`rebuild_partials`
+    recomputes the buckets the pages head's summary names as this
+    epoch's, or every bucket when the head is another commit or the
+    rollup table lacks the current layout stamp."""
+    if partials is not None:
         rollup.commit(
             BucketFileWrite(lambda _v: partials.rows, version=partials.version),
-            touched_buckets=[int(b) for b in touched_buckets],
+            touched_buckets=partials.touched,
             applied_epoch=epoch,
-            summary=summary,
+            summary={"operation": "rollup", "epoch": epoch, "layout": partials.layout},
         )
         return
-    if not touched_buckets:
-        rollup.commit(None, applied_epoch=epoch, summary=summary)
+    head = rollup.snapshot()
+    if epoch in head.applied_epochs:
         return
-    # One explicit shuffle on the pages bucket: the partial aggregate's
-    # (src_bucket, domain, day_id) clustering is already satisfied by it
-    # (src_bucket IS _bucket), and so is the commit's grouping on
-    # _bucket — one file per bucket, on all cores, with no second
-    # shuffle (bench/explain_audit.py checks the plan).
-    fresh = compute_partials(
-        repartition_by_bucket(
-            pages.read(spark, buckets=touched_buckets, with_bucket=True),
-            touched_buckets,
-        )
+    psnap = pages.snapshot()
+    # the head summary's touched list is this epoch's only when the
+    # head IS this epoch's merge; any other head routes to the
+    # always-correct full refresh
+    touched = (
+        psnap.summary.get("touched_list")
+        if psnap.summary.get("epoch") == epoch
+        else None
     )
-    rollup.commit(
-        fresh.withColumn(BUCKET_COL, F.col("src_bucket")),
-        touched_buckets=[int(b) for b in touched_buckets],
+    # Layout guard: a bucket-granular replace is only sound when the
+    # manifest's keys ARE src_buckets under the current pages bucket
+    # count. A non-empty rollup without that stamp (an older layout, a
+    # rebucket crash window) gets ONE full refresh, which re-stamps it.
+    if any(head.files.values()) and head.summary.get("layout") != layout_stamp(
+        psnap.n_buckets
+    ):
+        touched = None
+    rebuild_partials(
+        spark,
+        pages,
+        rollup,
+        touched,
+        {"operation": "rollup", "epoch": epoch},
         applied_epoch=epoch,
-        summary=summary,
     )
 
 

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_spark import schema as S
-from etl_spark.lake.table import BUCKET_COL, LakeTable
+from etl_spark.lake.table import LakeTable
 from etl_spark.lineage import LineageLog
 from etl_spark.operators.clean import clean_changes
 
@@ -36,7 +36,7 @@ from etl_spark.operators.clean import clean_changes
 # ``delta_stats`` on this module by name for its ``dedup.stats`` span.
 from etl_spark.operators.dedup import delta_stats  # noqa: F401
 from etl_spark.operators.merge_spj import MergeStats, merge_epoch_spj
-from etl_spark.operators.rollup import rollup_domain_stats
+from etl_spark.operators.rollup import rebuild_partials, rollup_domain_stats
 
 PAGES = "pages"
 LINEAGE = "lineage"
@@ -122,15 +122,8 @@ def ingest_epoch(
         # convergent across BOTH tables and stays a no-op when the
         # rollup did land.
         if with_rollup and epoch not in wh.rollup.applied_epochs():
-            touched = (
-                head.summary.get("touched_list")
-                if head.summary.get("epoch") == epoch
-                else None  # older head: full refresh, always correct
-            )
             with log.stage(epoch, "rollup") as rec:
-                rollup_domain_stats(
-                    spark, wh.pages, wh.rollup, epoch, touched_buckets=touched
-                )
+                rollup_domain_stats(spark, wh.pages, wh.rollup, epoch)
             log.flush(spark)
         return MergeStats(epoch, True, 0, 0, head.version)
 
@@ -159,16 +152,9 @@ def ingest_epoch(
 
         if with_rollup:
             with log.stage(epoch, "rollup") as rec:
-                # the kernel's touched list keeps an empty epoch a
-                # metadata-only rollup commit, and its partial files
-                # publish as they are
+                # the kernel's partial files publish as they are
                 rollup_domain_stats(
-                    spark,
-                    wh.pages,
-                    wh.rollup,
-                    epoch,
-                    touched_buckets=stats.touched_list,
-                    partials=stats.partials,
+                    spark, wh.pages, wh.rollup, epoch, partials=stats.partials
                 )
 
         # per-epoch throughput + event-time lag, from the kernel's rows
@@ -205,39 +191,23 @@ def rebucket_warehouse(
     Both commits are ordinary snapshots: rollback-able, replay
     bookkeeping untouched. Appends one maintenance lineage row
     (rows_in/rows_out = old/new bucket count)."""
-    from etl_spark.operators.rollup import compute_partials, layout_stamp
-
     log = LineageLog(wh.lineage)
     with log.stage(MAINTENANCE_EPOCH, "maint_rebucket") as rec:
         rec["rows_in"] = wh.pages.snapshot().n_buckets
         wh.pages.rebucket(spark, new_n_buckets)
         # Crash window between the two commits is safe: the rollup head
         # would still carry the OLD bucket count's stamp, which no
-        # longer matches layout_stamp(new_n_buckets), so the next
-        # epoch's rollup_domain_stats full-refreshes instead of
-        # partial-replacing against a stale layout.
-        # overwrite_all raises on a lost publish race; the rebuild is a
-        # pure function of the (already-rebucketed) pages snapshot, so
-        # re-derive and retry. If all retries lose, the stamp mismatch
-        # still routes the next epoch to a full refresh (crash-window
-        # rule above), so failing here is loud but never corrupting.
-        from etl_spark.lake.table import CommitConflictError
-
-        for attempt in range(3):
-            fresh = compute_partials(wh.pages.read(spark, with_bucket=True))
-            try:
-                wh.rollup.commit(
-                    fresh.withColumn(BUCKET_COL, F.col("src_bucket")),
-                    overwrite_all=True,
-                    summary={
-                        "operation": "rollup_rebuild_after_rebucket",
-                        "layout": layout_stamp(new_n_buckets),
-                    },
-                )
-                break
-            except CommitConflictError:
-                if attempt == 2:
-                    raise
+        # longer matches the new layout, so the next epoch's rollup
+        # full-refreshes instead of partial-replacing against a stale
+        # layout. The same holds when every retry of the rebuild loses
+        # its publish race: failing here is loud but never corrupting.
+        rebuild_partials(
+            spark,
+            wh.pages,
+            wh.rollup,
+            None,
+            {"operation": "rollup_rebuild_after_rebucket"},
+        )
         rec["rows_out"] = new_n_buckets
     log.flush(spark)
 

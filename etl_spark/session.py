@@ -23,6 +23,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(phys_bytes: int) -> str:
+    """The driver heap ``get_spark`` asks for unless
+    ``SPARK_GRAFT_DRIVER_MEM`` says otherwise: half the host's physical
+    memory (the rest stays for the Python workers and the OS), at most
+    48 GB. A heap larger than the host gets the JVM killed mid-job."""
+    return f"{min(48 * 1024, phys_bytes // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "etl_spark",
     parallelism: int | None = None,
@@ -57,8 +65,7 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # AQE: runtime re-plan — coalesces small shuffle partitions and
-        # splits skewed ones; the engine still salts explicitly where the
-        # skew is known (hot domains), AQE covers the residual.
+        # splits skewed ones.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -72,12 +79,14 @@ def get_spark(
         # version can stand in: a task then skips re-reading 16 zip
         # directories (~0.2 s) on start (etl_spark/worker_daemon.py).
         .config("spark.python.daemon.module", "etl_spark.worker_daemon")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or default_driver_memory(
+                os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+            ),
+        )
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.parquet.compression.codec", "snappy")
-        # Parallel task-commit renames (v2): the v1 job-commit loop is a
-        # driver-side serial rename per file — pure Amdahl cost per epoch.
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

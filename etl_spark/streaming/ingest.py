@@ -10,7 +10,7 @@ as ``readStream -> foreachBatch -> exactly-once sink``:
 * ``Trigger.AvailableNow`` drains the backlog as bounded micro-batches
   then stops (the reference's catch-up-all-days mode);
 * every micro-batch reuses the SAME stage functions as the batch path
-  (clean -> stats -> LWW dedup -> extract -> MERGE) — one code path,
+  (clean -> merge kernel -> rollup publish -> lineage) — one code path,
   two drivers (SURVEY.md §7.3.7);
 * exactly-once: Spark's checkpoint gives at-least-once ``foreachBatch``
   delivery with a stable ``batch_id``; the warehouse's applied-epoch

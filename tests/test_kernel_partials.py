@@ -1,9 +1,10 @@
 """The merge kernel computes the epoch's rollup partials and the lineage
-flush writes on the driver: partials equal ``compute_partials`` over
-the same snapshot in any session zone, a bucket whose files predate the
-hidden ``_domain`` column falls back to the Spark rollup, Spark-side
-rewrites carry the column, an epoch runs one Spark step, the kernel's
-(2 jobs), and every new commit window converges on replay."""
+flush writes on the driver: kernel partials, a crash-repair rebuild and
+a full refresh all equal a Spark SQL aggregate over the same snapshot
+in any session zone, a stored pages file without the hidden ``_domain``
+column fails the epoch loudly and a Spark-side rewrite restores it, an
+epoch runs one Spark step, the kernel's (2 jobs), and every new commit
+window converges on replay."""
 
 from __future__ import annotations
 
@@ -17,11 +18,11 @@ from etl_spark.lake.table import LakeTable, bucket_expr
 from etl_spark.operators.merge_spj import merge_epoch_spj
 from etl_spark.operators.rollup import (
     DOMAIN_COL,
-    compute_partials,
     read_rollup,
     rollup_domain_stats,
 )
 from etl_spark.pipeline import Warehouse, ingest_epoch, ingest_range
+from tests.conftest import spark_partials
 
 EVENTS = (
     "seq long, epoch long, op string, url string, warc_ts string, "
@@ -63,7 +64,7 @@ def _stored_partials(spark, wh):
 
 
 def _expected_partials(spark, wh):
-    return _partials(compute_partials(wh.pages.read(spark, with_bucket=True)))
+    return _partials(spark_partials(wh.pages.read(spark, with_bucket=True)))
 
 
 def _bucket_of(spark, urls, n):
@@ -71,29 +72,63 @@ def _bucket_of(spark, urls, n):
     return {r.url: r.b for r in df.select("url", bucket_expr(["url"], n).alias("b")).collect()}
 
 
+def _touched(delta, n):
+    buckets = delta.select(bucket_expr(["url"], n).alias("b")).collect()
+    return sorted({r.b for r in buckets})
+
+
 def _apply(spark, wh, delta, epoch):
     """One epoch's merge + rollup the way ingest_epoch runs them, without
     clean (so a null-html insert reaches the table as null text)."""
-    touched = sorted(
-        {r.b for r in delta.select(bucket_expr(["url"], 4).alias("b")).collect()}
-    )
     stats = merge_epoch_spj(spark, wh.pages, delta, epoch, rollup=wh.rollup)
-    assert stats.touched_list == touched
-    rollup_domain_stats(
-        spark, wh.pages, wh.rollup, epoch, touched_buckets=touched,
-        partials=stats.partials,
-    )
+    assert stats.touched_list == _touched(delta, 4)
+    assert stats.partials.touched == stats.touched_list
+    rollup_domain_stats(spark, wh.pages, wh.rollup, epoch, partials=stats.partials)
     return stats
 
 
+def _repair(spark, wh, delta, epoch):
+    """The epoch's merge lands and its rollup commit does not; the
+    replay's repair rebuilds exactly the buckets the merge touched."""
+    stats = merge_epoch_spj(spark, wh.pages, delta, epoch)
+    assert stats.partials is None
+    before = wh.rollup.snapshot()
+    rollup_domain_stats(spark, wh.pages, wh.rollup, epoch)
+    after = wh.rollup.snapshot()
+    touched = {str(b) for b in _touched(delta, 4)}
+    assert after.applied_epochs == before.applied_epochs + [epoch]
+    for b in set(before.files) | set(after.files):
+        if b in touched:
+            new = f"data/v{after.version:06d}/"
+            assert all(p.startswith(new) for p in after.files.get(b, []))
+        else:
+            assert after.files.get(b) == before.files.get(b)
+
+
+def _refresh(spark, wh, delta, epoch):
+    """The epoch's merge lands, then a compaction, so the pages head no
+    longer names the epoch's touched buckets: the rollup rebuilds every
+    bucket."""
+    merge_epoch_spj(spark, wh.pages, delta, epoch)
+    wh.pages.compact_files(spark, max_files=0)
+    rollup_domain_stats(spark, wh.pages, wh.rollup, epoch)
+    head = wh.rollup.snapshot()
+    assert epoch in head.applied_epochs
+    assert all(
+        p.startswith(f"data/v{head.version:06d}/")
+        for paths in head.files.values()
+        for p in paths
+    )
+
+
 @pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
-def test_kernel_partials_equal_compute_partials(spark, tmp_path, session_tz, tz):
-    """Kernel partials equal compute_partials over the same snapshot:
-    tombstones excluded, a bucket emptied of live rows, null text, a
-    null domain (a non-ASCII host), and day ids that differ between
-    UTC and New York (02:00 UTC is the previous day there)."""
+def test_every_partials_route_equals_spark_sql(spark, tmp_path, session_tz, tz):
+    """Kernel partials, a crash-repair rebuild of the touched buckets and
+    a full refresh each equal a Spark SQL aggregate over the same
+    snapshot: tombstones excluded, a bucket emptied of live rows, null
+    text, a null domain (a non-ASCII host), and day ids that differ
+    between UTC and New York (02:00 UTC is the previous day there)."""
     session_tz(tz)
-    wh = Warehouse.init(str(tmp_path / "wh"), n_buckets=4)
     urls = [f"https://p{i % 3}.example/{i}" for i in range(16)]
     bucket = _bucket_of(spark, urls, 4)
     emptied = [u for u in urls if bucket[u] == bucket[urls[0]]]
@@ -105,13 +140,6 @@ def test_kernel_partials_equal_compute_partials(spark, tmp_path, session_tz, tz)
         (100, 0, "I", "https://ü.example/x", "2024-03-02 02:00:00", b"<p>nul</p>", None),
         (101, 0, "I", "https://n.example/none", "2024-03-02 01:00:00", None, None),
     ]
-    stats = _apply(spark, wh, _events(spark, rows), 0)
-    assert stats.partials is not None and stats.partials.rows is not None
-    assert _stored_partials(spark, wh) == _expected_partials(spark, wh)
-    got = {r.domain: r for r in read_rollup(spark, wh.rollup).collect()}
-    assert None in got  # the null domain is its own group
-    assert got["n.example"].text_chars is None  # only null text: null sum
-
     # epoch 1 deletes every url of one bucket (tombstones only remain)
     # and tombstones one more elsewhere
     other = next(u for u in urls if bucket[u] != bucket[urls[0]])
@@ -119,20 +147,29 @@ def test_kernel_partials_equal_compute_partials(spark, tmp_path, session_tz, tz)
         (200 + i, 1, "D", u, "2024-03-05 00:00:00", None, None)
         for i, u in enumerate(emptied + [other])
     ]
-    stats = _apply(spark, wh, _events(spark, deletes), 1)
-    assert stats.partials is not None and stats.partials.rows is not None
-    assert str(bucket[urls[0]]) not in wh.rollup.snapshot().files
-    assert wh.pages.read(spark, buckets=[bucket[urls[0]]]).count() == 0
-    assert _stored_partials(spark, wh) == _expected_partials(spark, wh)
+    for route in (_apply, _repair, _refresh):
+        wh = Warehouse.init(str(tmp_path / route.__name__), n_buckets=4)
+        route(spark, wh, _events(spark, rows), 0)
+        assert _stored_partials(spark, wh) == _expected_partials(spark, wh)
+        got = {r.domain: r for r in read_rollup(spark, wh.rollup).collect()}
+        assert None in got  # the null domain is its own group
+        assert got["n.example"].text_chars is None  # only null text: null sum
+
+        route(spark, wh, _events(spark, deletes), 1)
+        assert str(bucket[urls[0]]) not in wh.rollup.snapshot().files
+        assert wh.pages.read(spark, buckets=[bucket[urls[0]]]).count() == 0
+        assert wh.pages.read(spark, include_deleted=True).count() == len(rows)
+        assert _stored_partials(spark, wh) == _expected_partials(spark, wh)
 
 
-def test_bucket_without_domain_falls_back_and_compaction_restores_it(
+def test_stored_file_without_domain_fails_the_epoch_and_compaction_restores_it(
     spark, tmp_path
 ):
-    """A touched bucket whose stored file lacks ``_domain`` makes the
-    epoch's rollup take the Spark path (still correct), and a Spark-side
-    rewrite of the pages table fills the column again, so the fast path
-    comes back."""
+    """A touched bucket whose stored file lacks ``_domain`` fails the
+    epoch loudly, naming the file: neither head moves and the merge's
+    lineage row records the failure. A Spark-side rewrite of the pages
+    table fills the column again, and the replayed epoch publishes
+    kernel partials."""
     wh = Warehouse.init(str(tmp_path / "wh"), n_buckets=2)
 
     def epoch(e):
@@ -143,19 +180,19 @@ def test_bucket_without_domain_falls_back_and_compaction_restores_it(
              for i in range(6)],
         )
 
-    assert ingest_epoch(spark, wh, epoch(0), 0).partials.rows is not None
-    snap = wh.pages.snapshot()
-    path = os.path.join(wh.pages.root, snap.files["0"][0])
+    assert ingest_epoch(spark, wh, epoch(0), 0).partials.rows
+    stripped = wh.pages.snapshot().files["0"][0]
+    path = os.path.join(wh.pages.root, stripped)
     pq.write_table(pq.read_table(path).drop_columns([DOMAIN_COL]), path)
 
-    stats = ingest_epoch(spark, wh, epoch(1), 1)
-    assert stats.partials is not None and stats.partials.rows is None
-    assert _stored_partials(spark, wh) == _expected_partials(spark, wh)
-    # the kernel wrote bucket 0 without the column it could not carry
-    rewritten = wh.pages.snapshot().files["0"][0]
-    assert DOMAIN_COL not in pq.read_schema(
-        os.path.join(wh.pages.root, rewritten)
-    ).names
+    pages_v, rollup_v = wh.pages.head_version(), wh.rollup.head_version()
+    with pytest.raises(Exception, match="lacks the table's derived column") as err:
+        ingest_epoch(spark, wh, epoch(1), 1)
+    assert stripped in str(err.value)
+    assert wh.pages.head_version() == pages_v
+    assert wh.rollup.head_version() == rollup_v
+    merge_rows = wh.lineage.read(spark).filter("epoch = 1 AND stage = 'merge'").collect()
+    assert len(merge_rows) == 1 and merge_rows[0].status != "ok"
 
     wh.pages.compact_files(spark, max_files=0)
     for paths in wh.pages.snapshot().files.values():
@@ -168,8 +205,8 @@ def test_bucket_without_domain_falls_back_and_compaction_restores_it(
             ]
             assert got[DOMAIN_COL] == want
     assert "_domain" not in wh.pages.read(spark).columns
-    stats = ingest_epoch(spark, wh, epoch(2), 2)
-    assert stats.partials.rows is not None
+    stats = ingest_epoch(spark, wh, epoch(1), 1)
+    assert stats.partials.rows and 1 in wh.rollup.applied_epochs()
     assert _stored_partials(spark, wh) == _expected_partials(spark, wh)
 
 

@@ -313,41 +313,43 @@ def test_kernel_stats_equal_spark_rescan(spark, tmp_path, session_tz, tz):
 def test_no_engine_path_runs_the_spark_parquet_writer(
     spark, tmp_path, monkeypatch
 ):
-    """Spark's parquet writer is never called: a merge epoch, an epoch
-    whose rollup falls back to Spark (a touched bucket's file lacks
-    ``_domain``), rebucket_warehouse, compact_warehouse,
-    expire_warehouse_tombstones and a DataFrame append all write through
-    ``write_bucket_file``, and each leaves the expected table state."""
+    """Spark's parquet writer is never called: a merge epoch, the
+    crash-repair rollup rebuild of an epoch, rebucket_warehouse,
+    compact_warehouse, expire_warehouse_tombstones and a DataFrame
+    append all write through ``write_bucket_file``, and each leaves the
+    expected table state."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from etl_spark import pipeline
     from etl_spark.operators import rollup
-    from etl_spark.operators.rollup import DOMAIN_COL, read_rollup
+    from etl_spark.operators.rollup import read_rollup
 
     def forbidden(*_a, **_k):
         raise AssertionError("the Spark parquet writer must not run")
 
     monkeypatch.setattr(DataFrameWriter, "parquet", forbidden)
     monkeypatch.setattr(DataFrameWriter, "save", forbidden)
-    spark_partials = []
-    orig_partials = rollup.compute_partials
+    rebuilds = []
+    orig_rebuild = rollup.rebuild_partials
 
-    def counted_partials(df):
-        spark_partials.append(1)
-        return orig_partials(df)
+    def counted_rebuild(*args, **kwargs):
+        rebuilds.append(1)
+        return orig_rebuild(*args, **kwargs)
 
-    monkeypatch.setattr(rollup, "compute_partials", counted_partials)
+    for module in (rollup, pipeline):
+        monkeypatch.setattr(module, "rebuild_partials", counted_rebuild)
 
     wh = Warehouse.init(str(tmp_path / "wh"), n_buckets=2)
     urls = [f"https://{d}.example/{i}" for i, d in enumerate("aabbc")]
 
-    def epoch(e, op, targets):
+    def epoch(e, op, targets, with_rollup=True):
         ingest_epoch(
             spark, wh,
             _events(spark, [(10 * e + i, e, op, u, f"2024-01-0{e + 1} 00:00:00",
                              None if op == "D" else f"<p>e{e}</p>".encode(), None)
                             for i, u in enumerate(targets)]),
             e,
+            with_rollup=with_rollup,
         )
 
     def rollup_rows():
@@ -356,18 +358,19 @@ def test_no_engine_path_runs_the_spark_parquet_writer(
         )
 
     epoch(0, "I", urls)  # merge epoch, kernel partials
-    assert spark_partials == []
+    assert rebuilds == []
     assert rollup_rows() == [("a.example", 2), ("b.example", 2), ("c.example", 1)]
 
-    # strip the hidden column from one stored file: the next epoch's
-    # rollup recomputes the touched buckets' partials with Spark
-    path = os.path.join(wh.pages.root, wh.pages.snapshot().files["0"][0])
-    pq.write_table(pq.read_table(path).drop_columns([DOMAIN_COL]), path)
+    # the epoch's rollup commit never lands; its replay rebuilds the
+    # touched buckets' partials
+    epoch(1, "U", urls, with_rollup=False)
+    assert 1 not in wh.rollup.applied_epochs()
     epoch(1, "U", urls)
-    assert spark_partials == [1]
+    assert rebuilds == [1] and 1 in wh.rollup.applied_epochs()
     assert rollup_rows() == [("a.example", 2), ("b.example", 2), ("c.example", 1)]
 
     pipeline.rebucket_warehouse(spark, wh, 4)
+    assert rebuilds == [1, 1]
     assert wh.pages.snapshot().n_buckets == 4
     assert sorted(r.url for r in wh.pages.read(spark).collect()) == sorted(urls)
     assert rollup_rows() == [("a.example", 2), ("b.example", 2), ("c.example", 1)]

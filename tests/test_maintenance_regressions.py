@@ -17,13 +17,10 @@ from pyspark.sql import functions as F
 
 from etl_spark.lake.table import BUCKET_COL, bucket_expr
 from etl_spark.operators.merge_spj import merge_epoch_spj
-from etl_spark.operators.rollup import (
-    compute_partials,
-    layout_stamp,
-    read_rollup,
-)
+from etl_spark.operators.rollup import layout_stamp, read_rollup
 from etl_spark.pipeline import Warehouse, ingest_epoch
 from etl_spark.sources.changelog import epoch_provider
+from tests.conftest import spark_partials
 
 SF_DIR = "/root/testdata/sf0.001"
 SCHEMA = (
@@ -65,7 +62,7 @@ def _rollup_state(spark, wh):
 
 def _expected_rollup(spark, wh):
     exp = (
-        compute_partials(wh.pages.read(spark, with_bucket=True))
+        spark_partials(wh.pages.read(spark, with_bucket=True))
         .groupBy("domain", "day_id")
         .agg(
             F.sum("n_pages").alias("n_pages"),

@@ -322,14 +322,23 @@ def test_rollup_full_refresh_retries_lost_race(spark, tmp_path, monkeypatch):
     wh.pages.compact_files(spark, max_files=0)
     assert wh.pages.snapshot().summary.get("epoch") is None
 
+    rebuilds = []
+    orig_rebuild = rollup.rebuild_partials
+
+    def counted_rebuild(*args, **kwargs):
+        rebuilds.append(args[3])
+        return orig_rebuild(*args, **kwargs)
+
+    monkeypatch.setattr(rollup, "rebuild_partials", counted_rebuild)
+    # each try derives the partials from its own pages read
     derived = []
-    orig_partials = rollup.compute_partials
+    orig_read = wh.pages.read
 
-    def counted_partials(df):
+    def counted_read(*args, **kwargs):
         derived.append(1)
-        return orig_partials(df)
+        return orig_read(*args, **kwargs)
 
-    monkeypatch.setattr(rollup, "compute_partials", counted_partials)
+    wh.pages.read = counted_read
     commits = []
     orig_commit = wh.rollup.commit
 
@@ -357,6 +366,7 @@ def test_rollup_full_refresh_retries_lost_race(spark, tmp_path, monkeypatch):
     rollup.rollup_domain_stats(spark, wh.pages, wh.rollup, 0)  # must not raise
     assert commits == [True, True]
     assert published == [False, True]
+    assert rebuilds == [None]  # one rebuild call, of every bucket
     assert derived == [1, 1]
     head = wh.rollup.snapshot()
     assert head.summary["operation"] == "rollup" and head.applied_epochs == [0]
