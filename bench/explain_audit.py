@@ -195,9 +195,10 @@ def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
     must sit on exactly one explicit-count hash shuffle on ``_bucket``
     (a byte-sized shuffle would let AQE collapse a small epoch into one
     task), below the grouped-map kernel that writes its own files: the
-    kernel job's root is FlatMapGroupsInPandas, with no write shuffle
-    or write stage above it. The whole epoch starts 2 Spark jobs, the
-    kernel's shuffle map stage and its grouped map: no stats pre-pass.
+    kernel job's root is FlatMapGroupsInArrow (the Arrow kernel: no
+    pandas boundary), with no write shuffle or write stage above it.
+    The whole epoch starts 2 Spark jobs, the kernel's shuffle map stage
+    and its grouped map: no stats pre-pass.
     An epoch whose rollup takes the kernel's partial files, and its
     lineage flush, must start no Spark job. The rollup's rebuild — here
     the crash-repair call for an epoch whose merge landed without its
@@ -292,12 +293,12 @@ def ingest_stage_shape(spark, root: str) -> tuple[dict[str, str], list[str]]:
     merge = plans.get("merge", "")
     ex = shuffle_exchanges(merge)
     if (
-        plan_tree(merge)[:2] != ["AdaptiveSparkPlan", "FlatMapGroupsInPandas"]
+        plan_tree(merge)[:2] != ["AdaptiveSparkPlan", "FlatMapGroupsInArrow"]
         or len(ex) != 1
         or not re.match(by_bucket + ", REPARTITION_BY_NUM", ex[0])
     ):
         failures.append(
-            "ingest_stage_shape: SPJ merge must run FlatMapGroupsInPandas as "
+            "ingest_stage_shape: SPJ merge must run FlatMapGroupsInArrow as "
             "the job's root on one REPARTITION_BY_NUM hash Exchange on "
             f"_bucket; got {plan_tree(merge)[:2]} on {ex}"
         )

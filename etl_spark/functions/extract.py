@@ -48,6 +48,11 @@ _RE_MARKUP = re.compile(
     r"|<!--.*"                             # unclosed comment -> EOF
     r"|<[^>]+>"                            # bare tag
 )
+# The whitespace collapse is defined as ``_RE_WS.sub(" ", s).strip()``;
+# the kernel computes it as ``" ".join(s.split())``, which is equal
+# (``str.split``/``strip`` and ``re``'s ``\s`` on ``str`` use one set of
+# 29 whitespace code points; tests/test_extract.py pins the equality)
+# and about 4x faster.
 _RE_WS = re.compile(r"\s+")
 # Order matters: &amp; last, so "&amp;lt;" -> "&lt;" (literal), not "<".
 _ENTITIES = (
@@ -69,8 +74,7 @@ def extract_text_series(html: pd.Series) -> pd.Series:
     txt = txt.str.replace(_RE_MARKUP, " ", regex=True)
     for ent, ch in _ENTITIES:
         txt = txt.str.replace(ent, ch, regex=False)
-    txt = txt.str.replace(_RE_WS, " ", regex=True).str.strip()
-    return txt
+    return txt.map(lambda s: " ".join(s.split()), na_action="ignore")
 
 
 @F.pandas_udf(T.StringType())

@@ -1098,6 +1098,7 @@ class LakeTable:
         df: DataFrame | BucketFileWrite,
         summary: dict | None = None,
         event_time_col: str | None = None,
+        base: Snapshot | None = None,
     ) -> Snapshot:
         """Append-only commit (the lineage/audit path): rows hash into
         the table's fixed ``n_buckets`` and the new files EXTEND each
@@ -1113,8 +1114,9 @@ class LakeTable:
         bucket it reaches. A :class:`BucketFileWrite` brings files its
         ``build`` wrote (the driver-side lineage flush), already hashed
         into the table's buckets; its files extend the lists the same
-        way."""
-        head = self.snapshot()
+        way. ``base``: the table's snapshot when the caller holds it
+        already (a lost publish race re-reads the head and rebases)."""
+        head = base if base is not None else self.snapshot()
         if isinstance(df, DataFrame):
             df = self._frame_write(
                 df.withColumn(BUCKET_COL, bucket_expr(head.key_cols, head.n_buckets)),

@@ -172,5 +172,7 @@ class LineageLog:
                 for b in sorted(set(table[BUCKET_COL].to_pylist()))
             ]
 
-        self.table.append(BucketFileWrite(write), summary={"operation": "lineage"})
+        self.table.append(
+            BucketFileWrite(write), summary={"operation": "lineage"}, base=snap
+        )
         self.rows.clear()

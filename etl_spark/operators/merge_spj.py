@@ -12,7 +12,7 @@ A textbook merge shuffles the epoch payload three times: LWW groupBy
 write repartition (hash by bucket). This one collapses them into ONE
 payload shuffle, and the epoch into ONE Spark job:
 
-    delta.repartition(n, bucket).groupBy(bucket).applyInPandas(merge_bucket)
+    delta.repartition(n, bucket).groupBy(bucket).applyInArrow(merge_bucket)
          -> collect one row per touched bucket -> publish
 
 The kernel's partition count is ``n = min(n_buckets, slots)``
@@ -29,16 +29,23 @@ Nothing runs before the kernel: the buckets the epoch touches, its
 event and key counts and its newest event time all come back on the
 kernel's rows.
 
-Inside the grouped-map kernel (one call per bucket, fed the bucket's
-delta Arrow batch by Arrow batch):
+The kernel is Arrow end to end: it takes the bucket's delta as an
+iterator of ``pyarrow.RecordBatch`` (the iterator form of
+``applyInArrow``) and every step below is a columnar compute kernel, so
+a call's cost is its data, not Python per-call overhead. Batches arrive
+with exact nullable int64 and with timestamps as instants (tagged with
+the session zone); casting them to ``timestamp[us, tz=UTC]`` changes
+only metadata. Inside the kernel (one call per bucket):
   1. LWW winner per key, folded over the batches: the running winners
      and the batches since the last fold are concatenated, stably
-     sorted on the order tuple and deduplicated keep-last — the same
-     (warc_ts, seq) total order as the JVM max-struct dedup. A call
-     holds a batch plus at most twice the bucket's distinct keys,
-     however many events a hot key has;
+     sorted on (keys, warc_ts, seq) with nulls first — the same total
+     order as the JVM max-struct dedup, ties kept in arrival order —
+     and the last row of each key run is kept (an adjacent-key
+     ``not_equal`` mask; no hash aggregate). A fold runs once the
+     pending batches hold as many rows as the winners;
   2. html -> text extraction for winners only (the SAME frozen kernel,
-     functions/extract.extract_text_series — byte-identity preserved);
+     functions/extract.extract_text_series — byte-identity preserved;
+     its pandas Series is the kernel's only pandas);
   3. executor-local pyarrow read of the bucket's CURRENT parquet files
      (the manifest's file map rides a broadcast) — a hand-rolled
      storage-partitioned join: current rows never cross a shuffle,
@@ -48,11 +55,16 @@ delta Arrow batch by Arrow batch):
      via the store's client — no kernel change to leave shared disk.
      Every file is cast to one Arrow layout first (Spark-written INT96
      and kernel-written UTC-micros timestamps, files that predate an
-     added payload column), and both sides' timestamps become UTC instants;
-  4. row arbitration: delta wins iff no current row or it is >= on the
-     (warc_ts, seq) tuple, NULL comparing as -inf on either side; 'D'
-     winners become tombstones; untouched current rows carry through
-     (the whole bucket is rewritten, so losers must be re-emitted);
+     added payload column);
+  4. row arbitration, as one more fold step over keys and order
+     tuples only: the current rows (the oldest arrivals) and the
+     winners, sorted and cut by the same rule as step 1. A winner
+     replaces its current row iff no current row or it is >= on the
+     (warc_ts, seq) tuple, NULL comparing as -inf on either side; a
+     current row no winner replaces carries through (the whole bucket
+     is rewritten, so losers must be re-emitted). Each side's payload
+     is taken once, by position. 'D' winners become tombstones
+     (payload nulled);
   5. write + stats: the bucket, sorted on event time, becomes one
      parquet file ``data/v<claim>/_pb=<bucket>/part-<bucket>.parquet``
      (``LakeTable.write_bucket_file``: deterministic name, tmp +
@@ -83,9 +95,11 @@ crosses back to the JVM, and there is no stats pre-pass, no Spark write
 job, no stats re-scan and no rollup job.
 
 Memory contract: one call holds one Arrow batch of the bucket's delta,
-at most twice its distinct keys and its current rows. n_buckets is the knob — size
-it so bucket ~ O(100 MB) at the target scale (thousands of buckets at
-100 TB).
+at most twice its distinct keys (the running winners plus the pending
+batches, which a fold bounds by the winners' count) and its current
+rows; the arbitration sorts only their keys and order columns.
+n_buckets is the knob — size it so bucket ~ O(100 MB) at the target
+scale (thousands of buckets at 100 TB).
 """
 
 from __future__ import annotations
@@ -93,10 +107,13 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Iterable, Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from etl_spark.functions.extract import extract_text_series
 from etl_spark.lake.table import (
@@ -174,60 +191,31 @@ def evolve_for_delta(
     return snap
 
 
-# Sentinel for null tie-break values (arbitration already treats null
-# as smallest-possible): tie-break columns cross the Arrow boundary as
-# a sentinel-filled NON-NULL long shadow (``<col>__tb``) because
-# applyInPandas renders a long-with-nulls column as float64 — already
-# rounded above 2^53 before any pandas-side cast could save it. The
-# kernel restores exact nullable Int64 from the shadow. -2^63 itself is
-# therefore reserved (a real seq of -2^63 is indistinguishable from
-# null, which the fillna arbitration conflated anyway).
-TB_SENTINEL = -(2**63)
+def _differs(a, b):
+    """Element-wise ``a != b`` where NULL equals NULL and differs from
+    every value."""
+    return pc.coalesce(pc.not_equal(a, b), pc.xor(pc.is_null(a), pc.is_null(b)))
 
 
-def _as_exact_int64(s: pd.Series) -> pd.Series:
-    """Nullable Int64 WITHOUT a float64 detour wherever exactness is
-    still recoverable: an Int64 column passes through, and an
-    object-dtype column of ints + None converts element-wise —
-    to_numeric would upcast the whole column to float64 the moment one
-    null is present, rounding values above 2^53 before the Int64 cast
-    could save them. Only genuinely numeric-but-inexact inputs (float64
-    delivered by Arrow, already rounded upstream) take the to_numeric
-    path."""
-    if str(s.dtype) == "Int64":
-        return s
-    if s.dtype == object:
-        try:
-            return pd.Series(
-                pd.array(s.to_numpy(), dtype="Int64"), index=s.index
-            )
-        except (TypeError, ValueError):
-            pass  # non-integer junk: coerce lossily below
-    return pd.to_numeric(s, errors="coerce").astype("Int64")
-
-
-def _arrow_safe(pdf: pd.DataFrame, schema: T.StructType) -> pd.DataFrame:
-    """Coerce pandas dtypes so Arrow conversion round-trips the Spark
-    schema (object for strings/binary, datetime64 for timestamps)."""
-    for f in schema.fields:
-        c = f.name
-        if c not in pdf.columns:
-            pdf[c] = None
-        if isinstance(f.dataType, T.TimestampType):
-            pdf[c] = pd.to_datetime(pdf[c], utc=True)
-        elif isinstance(f.dataType, T.LongType):
-            # outer-join NaNs turn int64 into float64; nullable Int64
-            # round-trips to Arrow int64-with-nulls losslessly (and an
-            # already-exact Int64 column must not detour via float64)
-            pdf[c] = _as_exact_int64(pdf[c])
-        elif isinstance(f.dataType, T.BooleanType):
-            # null tombstone flag (pre-column files) means live
-            pdf[c] = (
-                pdf[c].map(lambda v: bool(v) if pd.notna(v) else False)
-                if len(pdf)
-                else pdf[c].astype(bool)
-            )
-    return pdf
+def _keep_last(data: pa.Table, key_cols: list[str], order_cols: list[str]) -> pa.Table:
+    """One LWW fold: the last row of each key in the ascending (keys,
+    order columns) order, nulls first (NULL keys form one key). The
+    sort is stable, so among full ties the row that arrived last wins:
+    callers concatenate in arrival order (running winners before the
+    pending batches, current rows before the winners)."""
+    order = pc.sort_indices(
+        data,
+        [(c, "ascending") for c in key_cols + order_cols],
+        null_placement="at_start",
+    )
+    if len(order) < 2:
+        return data
+    last = None
+    for c in key_cols:
+        k = data[c].take(order).combine_chunks()
+        d = _differs(k[:-1], k[1:])
+        last = d if last is None else pc.or_(last, d)
+    return data.take(order.filter(pa.concat_arrays([last, pa.array([True])])))
 
 
 def make_bucket_merger(
@@ -244,12 +232,13 @@ def make_bucket_merger(
 ):
     """Build the grouped-map kernel: it merges one bucket, writes the
     result as ``data/v<version>/_pb=<bucket>/`` (``LakeTable.
-    write_bucket_file``) and yields that file's ``KERNEL_SCHEMA`` row —
-    one small row per bucket crosses back to the JVM, never the bucket
-    itself. The kernel takes the bucket's delta as an iterator of
-    pandas batches (the iterator form of ``applyInPandas``) and folds
-    last-writer-wins over them, so a hot key costs no more memory than
-    a batch.
+    write_bucket_file``) and yields that file's ``KERNEL_SCHEMA`` row as
+    a one-row ``pyarrow.RecordBatch`` — one small row per bucket crosses
+    back to the JVM, never the bucket itself. The kernel takes the
+    bucket's delta as an iterator of ``pyarrow.RecordBatch`` (the
+    iterator form of ``applyInArrow``; call it directly as
+    ``next(kernel(iter(batches)))``) and folds last-writer-wins over
+    them, so a hot key costs no more memory than a batch.
 
     ``files_by_bucket`` is either a plain dict (tests) or a Spark
     Broadcast of one (the pipeline path): a torrent-distributed
@@ -258,13 +247,13 @@ def make_bucket_merger(
     O(tasks x manifest) and O(executors x manifest) bytes when the
     table has millions of bucket-file entries.
 
-    ``session_tz`` is the driver's ``spark.sql.session.timeZone``: Spark
-    hands the kernel timestamps as naive wall times in that zone, while
-    stored files hold UTC instants. The kernel turns both sides into
-    UTC instants (Spark's own rule for the naive side: an ambiguous
-    wall time is read as standard time) and arbitrates and writes
-    ``timestamp[us, tz=UTC]`` — so a bucket rewrite never shifts the
-    rows it carries through, whatever the session zone.
+    Delta timestamps are read as instants: Spark tags them with the
+    session zone, and the cast to ``timestamp[us, tz=UTC]`` keeps the
+    instant (a zone-less timestamp a direct caller passes is read as
+    UTC). Stored files hold UTC instants too, so a bucket rewrite never
+    shifts the rows it carries through, whatever the session zone.
+    ``session_tz`` is the driver's ``spark.sql.session.timeZone``: the
+    rollup partials' day ids are session-zone days.
 
     ``hidden``: the table's derived columns, present on the delta and on
     every current file, and carried into the written file.
@@ -272,110 +261,98 @@ def make_bucket_merger(
     bucket's rollup partial file there and report it on the row."""
     payload_cols = [f.name for f in schema.fields]
     hidden_cols = [f.name for f in hidden]
-    carry_cols = payload_cols + hidden_cols
     ts_col = order_cols[0]
-    tb_cols = order_cols[1:]
-    ts_cols = [f.name for f in schema.fields if isinstance(f.dataType, T.TimestampType)]
-    bucket_field = [T.StructField(BUCKET_COL, T.IntegerType())]
     with_hidden = T.StructType(schema.fields + list(hidden))
-    layout = arrow_schema(T.StructType(with_hidden.fields + bucket_field))
+    layout = arrow_schema(
+        T.StructType(with_hidden.fields + [T.StructField(BUCKET_COL, T.IntegerType())])
+    )
+    # the delta as the kernel holds it: the written layout, then the op
+    # column and any tie-break column the table does not store; columns
+    # a batch lacks (pre-evolution deltas, text before extraction) are
+    # nulls, columns the kernel does not use are dropped
+    work = layout
+    for c in order_cols[1:]:
+        if c not in work.names:
+            work = work.append(pa.field(c, pa.int64()))
+    if OP_COL not in work.names:
+        work = work.append(pa.field(OP_COL, pa.string()))
+    extract = not extracted and "html" in work.names and "text" in payload_cols
+    tombstoning = DELETED_COL in payload_cols
+    # a tombstone keeps keys, order tuple, flag and derived columns
+    nulled = [
+        f
+        for f in layout
+        if f.name in payload_cols
+        and f.name not in {*key_cols, *order_cols, DELETED_COL}
+    ]
+    row_layout = to_arrow_schema(KERNEL_SCHEMA)
 
-    def prepare(pdf: pd.DataFrame) -> pd.DataFrame:
-        """One delta batch in the kernel's types: timestamps as UTC
-        instants, tie-break columns as exact nullable Int64.
+    def conform(batch: pa.RecordBatch) -> pa.Table:
+        names = batch.schema.names
+        return pa.Table.from_arrays(
+            [
+                batch.column(f.name).cast(f.type)
+                if f.name in names
+                else pa.nulls(batch.num_rows, f.type)
+                for f in work
+            ],
+            schema=work,
+        )
 
-        Tie-break columns are restored from their sentinel-filled
-        shadow when the driver shipped one (merge_epoch_spj does): the
-        shadow arrives as exact int64 — the nullable original would
-        arrive as float64, rounded above 2^53 before any pandas-side
-        recovery. Direct-kernel callers without a shadow fall back to
-        the to_numeric cast (exact only when Arrow delivered int64,
-        i.e. the batch had no nulls)."""
-        for c in ts_cols:
-            if c in pdf.columns:
-                t = pd.to_datetime(pdf[c])
-                if t.dt.tz is None:
-                    t = t.dt.tz_localize(session_tz, ambiguous=False)
-                pdf[c] = t.dt.tz_convert("UTC")
-        for c in tb_cols:
-            shadow = f"{c}__tb"
-            if shadow in pdf.columns:
-                exact = pdf[shadow].astype("int64")
-                restored = pd.Series(exact, dtype="Int64").mask(
-                    exact == TB_SENTINEL
-                )
-                pdf = pdf.drop(columns=[shadow]).assign(**{c: restored})
-            elif c in pdf.columns:
-                pdf = pdf.assign(**{c: _as_exact_int64(pdf[c])})
-        return pdf
-
-    def merge_bucket(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow as pa
-
+    def merge_bucket(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         files_map = (
             files_by_bucket.value
             if hasattr(files_by_bucket, "value")
             else files_by_bucket
         )
 
-        # 1. LWW winners, folded over the batches: keep-last over the
-        # ascending order tuple of (running winners, then the batches
-        # received since the last fold) — a stable sort keeps arrival
-        # order among full ties, so the fold picks the same winner as
-        # one sort over every event. A fold runs once the pending
-        # batches hold as many rows as the winners: each event is then
-        # sorted a bounded number of times, where folding every batch
-        # re-sorts all winners per batch (about 9x the time of one sort
-        # for a 25-batch bucket of distinct keys), and a call holds at
-        # most twice its distinct keys plus a batch.
-        # na_position='first' matches the JVM max-struct order (nulls
-        # smallest), so a null-seq event loses a tied-ts dedup to a
-        # concrete-seq one.
-        def fold(frames: list[pd.DataFrame]) -> pd.DataFrame:
-            pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-            return pdf.sort_values(
-                order_cols, kind="mergesort", na_position="first"
-            ).drop_duplicates(key_cols, keep="last")
-
+        # 1. LWW winners, folded over the batches (see _keep_last). A
+        # fold runs once the pending batches hold as many rows as the
+        # winners: each event is then sorted a bounded number of times,
+        # where folding every batch re-sorts all winners per batch, and
+        # a call holds at most twice its distinct keys plus a batch.
         winners, pending, n_pending = None, [], 0
         bucket, n_events, max_ts = None, 0, None
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            bucket = int(pdf[BUCKET_COL].iloc[0])
-            pdf = prepare(pdf)
-            n_events += len(pdf)
-            newest = pdf[ts_col].max() if ts_col in pdf.columns else None
-            if pd.notna(newest) and (max_ts is None or newest > max_ts):
+            delta = conform(batch)
+            bucket = delta[BUCKET_COL][0].as_py()
+            n_events += delta.num_rows
+            newest = pc.max(delta[ts_col]).as_py()
+            if newest is not None and (max_ts is None or newest > max_ts):
                 max_ts = newest
-            pending.append(pdf)
-            n_pending += len(pdf)
-            if winners is None or n_pending >= len(winners):
-                winners = fold(([] if winners is None else [winners]) + pending)
+            pending.append(delta)
+            n_pending += delta.num_rows
+            if winners is None or n_pending >= winners.num_rows:
+                winners = _keep_last(
+                    pa.concat_tables(([] if winners is None else [winners]) + pending),
+                    key_cols,
+                    order_cols,
+                )
                 pending, n_pending = [], 0
         if winners is None:
             return
         if pending:
-            winners = fold([winners] + pending)
-        winners = winners.copy()
+            winners = _keep_last(
+                pa.concat_tables([winners] + pending), key_cols, order_cols
+            )
 
         # 2. extract text for surviving payloads only.
-        if not extracted and "html" in winners.columns:
-            winners["text"] = extract_text_series(winners["html"])
-        # pre-evolution deltas may lack later-added payload columns
-        for c in carry_cols:
-            if c not in winners.columns:
-                winners[c] = None
+        if extract:
+            text = extract_text_series(winners["html"].to_pandas())
+            winners = winners.set_column(
+                work.get_field_index("text"),
+                work.field("text"),
+                pa.array(text, pa.string(), from_pandas=True),
+            )
 
         # 3. executor-local read of the bucket's current rows (through
         # the filesystem seam: POSIX root or object-store URI), every
-        # file cast to one layout: timestamps as UTC instants, columns
-        # an older file lacks as nulls. int64 -> nullable Int64 at the
-        # Arrow boundary: the default conversion renders
-        # int64-with-nulls as float64, already lossy above 2^53. A
-        # current file without a derived column cannot be carried
-        # through: fail loudly rather than write the bucket without it.
-        cur_table, absent = LakeTable.read_bucket_files(
+        # file cast to the table's layout. A current file without a
+        # derived column cannot be carried through: fail loudly rather
+        # than write the bucket without it.
+        cur, absent = LakeTable.read_bucket_files(
             root, files_map.get(str(bucket), []), with_hidden
         )
         for c in hidden_cols:
@@ -385,80 +362,64 @@ def make_bucket_merger(
                     f"table's derived column {c!r}; rewrite the table "
                     "(compact_files) before merging into it"
                 )
-        cur = cur_table.to_pandas(
-            use_threads=False, types_mapper={pa.int64(): pd.Int64Dtype()}.get
-        )
 
-        # 4. arbitration: delta wins iff no current row or it is >= on
-        # the full lexicographic (warc_ts, seq) tuple — the stored seq
-        # makes equal-ts events in later epochs arbitrate by global LWW
-        # order, not arrival order.
-        merged = winners.merge(
-            cur,
-            on=key_cols,
-            how="outer",
-            suffixes=("", "_cur"),
-            indicator=True,
+        # 4. arbitration is one more fold step, over keys and order
+        # tuples only: the current rows come first, as the oldest
+        # arrivals, then the winners. The last row of each key run
+        # survives, so a winner replaces its current row iff it is >= on
+        # the order tuple (NULL lowest on either side, a full tie to the
+        # delta), and a current row that no winner replaces carries
+        # through. Either side's payload is then taken once, by
+        # position; it never passes through the sort.
+        def side(t: pa.Table, is_delta: bool) -> pa.Table:
+            n = t.num_rows
+            return pa.Table.from_arrays(
+                [
+                    t[c] if c in t.column_names else pa.nulls(n, work.field(c).type)
+                    for c in key_cols + order_cols
+                ]
+                + [
+                    pa.repeat(pa.scalar(is_delta), n),
+                    pa.array(np.arange(n, dtype=np.int64)),
+                ],
+                names=key_cols + order_cols + ["_delta", "_pos"],
+            )
+
+        last = _keep_last(
+            pa.concat_tables([side(cur, False), side(winners, True)]),
+            key_cols,
+            order_cols,
         )
-        cur_ts = merged.get(f"{ts_col}_cur")
-        in_delta = merged["_merge"] != "right_only"
-        has_cur = merged["_merge"] != "left_only"
-        tb_col = order_cols[1] if len(order_cols) > 1 else None
-        cur_tb = merged.get(f"{tb_col}_cur") if tb_col else None
-        if cur_ts is None:
-            delta_wins = in_delta
-        else:
-            # a NULL event time on EITHER side compares as -inf (both
-            # NULL: equal), so a NaT comparison — False both ways —
-            # can never make a concrete-ts update lose to a NULL-ts row
-            d_ts = merged[ts_col]
-            d_null, c_null = d_ts.isna(), cur_ts.isna()
-            ts_gt = ~d_null & (c_null | (d_ts > cur_ts).fillna(False))
-            ts_eq = (d_null & c_null) | (d_ts == cur_ts).fillna(False)
-            if cur_tb is not None and tb_col in merged.columns:
-                # null seq on EITHER side compares as -inf too: ties
-                # with unknown seq go to the delta. Both sides are
-                # nullable Int64 by now, so the comparison is exact
-                # integer order across the full int64 range.
-                cur_tb_f = _as_exact_int64(cur_tb).fillna(TB_SENTINEL)
-                d_tb = _as_exact_int64(merged[tb_col]).fillna(TB_SENTINEL)
-                newer = ts_gt | (ts_eq & (d_tb >= cur_tb_f))
-            else:
-                newer = ts_gt | ts_eq
-            delta_wins = in_delta & (~has_cur | newer)
-        if OP_COL in merged.columns:
-            is_delete = merged[OP_COL].eq("D")
-        else:
-            is_delete = pd.Series(False, index=merged.index)
-        tombstoning = DELETED_COL in payload_cols
+        kept = winners.take(pc.filter(last["_pos"], last["_delta"]))
+        carried = cur.take(pc.filter(last["_pos"], pc.invert(last["_delta"])))
+        is_delete = pc.fill_null(pc.equal(kept[OP_COL], "D"), False)
         if tombstoning:
-            # a winning delete persists as a tombstone row: keys +
-            # order tuple survive (future arbitration), payload nulls.
-            keep_delta = delta_wins
-        else:  # legacy tables without the column: drop on delete
-            keep_delta = delta_wins & ~is_delete
-        keep_cur = has_cur & ~delta_wins
-
-        parts = []
-        if keep_delta.any():
-            dv = merged.loc[keep_delta, carry_cols].copy()
-            if tombstoning:
-                tomb = is_delete.loc[keep_delta]
-                preserve = (
-                    set(key_cols) | set(order_cols) | {DELETED_COL} | set(hidden_cols)
+            # a winning delete persists as a tombstone row: keys + order
+            # tuple survive (future arbitration), payload nulls.
+            for f in nulled:
+                kept = kept.set_column(
+                    work.get_field_index(f.name),
+                    f,
+                    pc.if_else(is_delete, pa.scalar(None, f.type), kept[f.name]),
                 )
-                for c in payload_cols:
-                    if c not in preserve:
-                        dv.loc[tomb, c] = None
-                dv[DELETED_COL] = tomb.to_numpy()
-            parts.append(dv)
-        if keep_cur.any():
-            cur_view = merged.loc[keep_cur].copy()
-            for c in carry_cols:
-                cc = f"{c}_cur"
-                if cc in cur_view.columns:
-                    cur_view[c] = cur_view[cc]
-            parts.append(cur_view[carry_cols])
+            kept = kept.set_column(
+                work.get_field_index(DELETED_COL), layout.field(DELETED_COL), is_delete
+            )
+        else:  # legacy tables without the column: drop on delete
+            kept = kept.filter(pc.invert(is_delete))
+        data = pa.concat_tables(
+            [
+                kept.select(layout.names),
+                carried.append_column(
+                    layout.field(BUCKET_COL),
+                    pa.repeat(pa.scalar(bucket, pa.int32()), carried.num_rows),
+                ),
+            ]
+        )
+        # a null tombstone flag (files that predate the column) means live
+        for i, f in enumerate(layout):
+            if pa.types.is_boolean(f.type):
+                data = data.set_column(i, f, pc.fill_null(data[f.name], False))
 
         # 5. write the bucket's one file (none when no row is left) and
         # hand back its stats row with the bucket's share of the delta.
@@ -475,17 +436,10 @@ def make_bucket_merger(
             "rollup_rows": None if rollup is None else 0,
             "rollup_bytes": None,
             "n_events": n_events,
-            "n_keys": len(winners),
+            "n_keys": winners.num_rows,
             "max_event_ts": max_ts,
         }
-        if parts:
-            out = pd.concat(parts, ignore_index=True)
-            out[BUCKET_COL] = bucket
-            data = pa.Table.from_pandas(
-                _arrow_safe(out, schema)[layout.names],
-                schema=layout,
-                preserve_index=False,
-            )
+        if data.num_rows:
             row.update(LakeTable.write_bucket_file(root, version, bucket, data, ts_col))
             # 6. the bucket's rollup partials, from the rows just written.
             if rollup is not None:
@@ -497,9 +451,7 @@ def make_bucket_merger(
                     )
                     row["rollup_path"] = written["path"]
                     row["rollup_bytes"] = written["bytes"]
-        out = pd.DataFrame([row])
-        out["max_event_ts"] = pd.to_datetime(out["max_event_ts"], utc=True)
-        yield out
+        yield pa.RecordBatch.from_pylist([row], schema=row_layout)
 
     return merge_bucket
 
@@ -571,13 +523,8 @@ def merge_epoch_spj(
             for c in delta.columns
         ]
     )
-    # Ship each tie-break column as a sentinel-filled non-null long
-    # shadow so it crosses the Arrow boundary as exact int64 (see
-    # TB_SENTINEL above); the kernel restores nullable Int64 and drops
-    # the shadow before writing. Tie-break columns must be integral:
-    # fail loudly here rather than an ANSI cast abort mid-job (or a
-    # silent null under try_cast) — and TB_SENTINEL stays a reserved
-    # value only within the integral domain the caller opted into.
+    # Tie-break columns must be integral (they arbitrate as exact
+    # int64): fail loudly here rather than an ANSI cast abort mid-job.
     for c in order_cols[1:]:
         if c in delta.columns:
             dt = delta.schema[c].dataType
@@ -588,10 +535,6 @@ def merge_epoch_spj(
                     f"merge_epoch_spj tie-break column {c!r} must be an "
                     f"integral type, got {dt.simpleString()}"
                 )
-            delta = delta.withColumn(
-                f"{c}__tb",
-                F.coalesce(F.col(c).try_cast("long"), F.lit(TB_SENTINEL)),
-            )
     # the table's hidden derived columns, evaluated in the JVM here so
     # the kernel carries them without re-implementing them
     for name, sql in snap.derived_cols.items():
@@ -620,7 +563,7 @@ def merge_epoch_spj(
             hidden=hidden,
             rollup=(rollup.root, rollup_version) if rollup_version else None,
         )
-        return bucketed.groupBy(BUCKET_COL).applyInPandas(kernel, KERNEL_SCHEMA)
+        return bucketed.groupBy(BUCKET_COL).applyInArrow(kernel, KERNEL_SCHEMA)
 
     # the kernel's rows, when its job ran (an epoch another writer
     # applied first returns before building it); the commit summary

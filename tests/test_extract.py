@@ -78,3 +78,45 @@ def test_kernel_in_spark_plan(spark):
     )
     got = with_extracted_text(df).select("text").collect()
     assert [r.text for r in got] == ["one", None]
+
+
+def _frozen_regex_pipeline(html: pd.Series) -> pd.Series:
+    """The kernel as frozen, whitespace collapsed by ``_RE_WS``: the
+    reference the kernel's ``" ".join(s.split())`` must equal."""
+    from etl_spark.functions.extract import _ENTITIES, _RE_MARKUP, _RE_WS
+
+    txt = html.map(
+        lambda b: b.decode("utf-8", "replace") if b is not None else None,
+        na_action="ignore",
+    )
+    txt = txt.str.replace(_RE_MARKUP, " ", regex=True)
+    for ent, ch in _ENTITIES:
+        txt = txt.str.replace(ent, ch, regex=False)
+    return txt.str.replace(_RE_WS, " ", regex=True).str.strip()
+
+
+def test_whitespace_collapse_equals_frozen_regex():
+    """``str.split()`` and ``re``'s ``\\s`` see the same 29 whitespace
+    code points, and the kernel equals the frozen regex pipeline on
+    each of them (alone, between words, at the edges), on the goldens,
+    and on random markup built from them."""
+    import random
+    import re
+
+    spaces = [chr(c) for c in range(0x110000) if re.match(r"\s", chr(c))]
+    assert len(spaces) == 29
+    assert spaces == [chr(c) for c in range(0x110000) if chr(c).isspace()]
+
+    rng = random.Random(0)
+    parts = spaces + [
+        "a", "b", "\u00e9", "\u200b", "<p>", "</p>", "<script>", "</script>",
+        "<style>", "<!--", "-->", "&amp;", "&lt;", "&#39;", "&", ";", "<", ">",
+    ]
+    texts = spaces + [f"{w}a{w}{w}b{w}" for w in spaces]
+    texts += ["".join(rng.choices(parts, k=rng.randint(0, 30))) for _ in range(5000)]
+    html = pd.Series(
+        [t.encode("utf-8") for t in texts]
+        + [h for h, _ in GOLDENS]
+        + [b"\xff\x85 a\xc2\xa0b", None]
+    )
+    assert list(extract_text_series(html)) == list(_frozen_regex_pipeline(html))

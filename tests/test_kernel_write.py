@@ -500,6 +500,7 @@ def test_kernel_rerun_for_a_bucket_leaves_one_file(tmp_path):
     name: two runs of the kernel for one (version, bucket) leave exactly
     one data file and no temporary files."""
     import pandas as pd
+    import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import types as T
 
@@ -525,7 +526,8 @@ def test_kernel_rerun_for_a_bucket_leaves_one_file(tmp_path):
                 "_bucket": [3, 3],
             }
         )
-        row = next(kernel(iter([delta]))).iloc[0]
+        batch = pa.RecordBatch.from_pandas(delta, preserve_index=False)
+        row = next(kernel(iter([batch]))).to_pylist()[0]
     bucket_dir = tmp_path / "data" / "v000007" / "_pb=3"
     assert sorted(os.listdir(bucket_dir)) == ["part-00003.parquet"]
     assert row["path"] == "data/v000007/_pb=3/part-00003.parquet"

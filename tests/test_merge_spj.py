@@ -146,6 +146,7 @@ def test_kernel_fold_equals_one_sort(tmp_path, batch):
     (the later arrival wins) and null seqs, over 30 other keys."""
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import types as T
 
@@ -182,13 +183,16 @@ def test_kernel_fold_equals_one_sort(tmp_path, batch):
             str(tmp_path), version, {}, schema, ["url"], ["warc_ts", "seq"],
             extracted=True, session_tz="UTC",
         )
-        row = next(kernel(iter(batches))).iloc[0]
+        row = next(kernel(iter(batches))).to_pylist()[0]
         assert (row["n_events"], row["n_keys"]) == (n, 31)
         got = pq.read_table(tmp_path / row["path"]).to_pandas()
         return sorted(zip(got["url"], got["note"]))
 
-    parts = [delta.iloc[i : i + batch].copy() for i in range(0, n, batch)]
-    assert written(1, parts) == written(2, [delta.copy()])
+    def batch_of(pdf):
+        return pa.RecordBatch.from_pandas(pdf, preserve_index=False)
+
+    parts = [batch_of(delta.iloc[i : i + batch]) for i in range(0, n, batch)]
+    assert written(1, parts) == written(2, [batch_of(delta)])
 
 
 def test_deletes_emptying_a_bucket_drop_its_file(spark, tmp_path):
@@ -338,14 +342,13 @@ def test_equal_ts_cross_epoch_arbitrates_by_seq(spark, tmp_path, merge_path):
 
 
 def test_seq_above_2_53_exact_with_null_seq_in_group(spark, tmp_path):
-    """Arrow renders a long-with-nulls column as float64 in
-    applyInPandas, which rounds seqs above 2^53 — 2^60 and 2^60+1
-    become the same float. The pipeline never feeds the kernel nulls
+    """Seqs above 2^53 stay exact with a null seq in the same bucket
+    group: a float64 detour anywhere on the way (pandas renders a
+    long-with-nulls column as float64) would make 2^60 and 2^60+1 the
+    same value. The pipeline never feeds the kernel nulls
     (clean_changes drops them), so this exercises the DIRECT
-    merge_epoch_spj API: with a null-seq event in the SAME bucket
-    group, the 2^60+1 event must beat the 2^60 event on a tied
-    warc_ts, and the stored seq must round-trip bit-exactly (the
-    sentinel-shadow transport, not a lossy float64 detour)."""
+    merge_epoch_spj API: the 2^60+1 event must beat the 2^60 event on a
+    tied warc_ts, and the stored seq must round-trip bit-exactly."""
     from etl_spark.operators.merge_spj import merge_epoch_spj
 
     wh = Warehouse.init(str(tmp_path / "wh"), n_buckets=1)
@@ -358,8 +361,8 @@ def test_seq_above_2_53_exact_with_null_seq_in_group(spark, tmp_path):
     big = 2**60
     e0 = spark.createDataFrame(
         [
-            # null-seq event for another key: without the shadow, this
-            # forces the bucket's whole seq column to lossy float64
+            # null-seq event for another key: in pandas, this would
+            # force the bucket's whole seq column to lossy float64
             (None, 0, "I", "https://a.example/other", ts, b"<p>x</p>", None),
             (big, 0, "I", url, ts, b"<p>low</p>", None),
             (big + 1, 0, "U", url, ts, b"<p>high</p>", None),
@@ -382,33 +385,11 @@ def test_seq_above_2_53_exact_with_null_seq_in_group(spark, tmp_path):
     merge_epoch_spj(spark, wh.pages, e1, 1)
     row = {r.url: r for r in wh.pages.read(spark).collect()}[url]
     assert row.text == "high" and row.seq == big + 1
-    # the null-seq event's key survives with a null (not sentinel) seq
+    # the null-seq event's key survives with a null seq
     other = {r.url: r for r in wh.pages.read(spark).collect()}[
         "https://a.example/other"
     ]
     assert other.seq is None
-
-
-def test_as_exact_int64_object_dtype_no_float_detour():
-    """An object-dtype column of Python ints + None (the shape pandas
-    merges produce) must convert element-wise: to_numeric would upcast
-    the whole column to float64 because of the null, collapsing 2^60
-    and 2^60+1 before the Int64 cast. Pure-pandas unit test for the
-    direct-kernel fallback path."""
-    import pandas as pd
-
-    from etl_spark.operators.merge_spj import _as_exact_int64
-
-    big = 2**60
-    s = pd.Series([big, big + 1, None], dtype=object)
-    out = _as_exact_int64(s)
-    assert str(out.dtype) == "Int64"
-    assert out.iloc[0] == big and out.iloc[1] == big + 1  # distinct
-    assert pd.isna(out.iloc[2])
-    # already-exact inputs pass through losslessly too
-    assert _as_exact_int64(out).iloc[1] == big + 1
-    exact = pd.Series([big, big + 1], dtype="int64")
-    assert list(_as_exact_int64(exact)) == [big, big + 1]
 
 
 def test_kernel_reads_current_side_through_fs_seam(spark, tmp_path):
@@ -417,6 +398,7 @@ def test_kernel_reads_current_side_through_fs_seam(spark, tmp_path):
     for any object-store URI) must produce the same merge output as the
     plain POSIX root."""
     import pandas as pd
+    import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import types as T
 
@@ -465,7 +447,9 @@ def test_kernel_reads_current_side_through_fs_seam(spark, tmp_path):
             extracted=True,
             session_tz="UTC",
         )
-        row = next(kernel(iter([delta.copy()]))).iloc[0]
+        row = next(
+            kernel(iter([pa.RecordBatch.from_pandas(delta, preserve_index=False)]))
+        ).to_pylist()[0]
         out = pq.read_table(tmp_path / row["path"]).to_pandas()
         assert row["rows"] == len(out)
         outs[label] = sorted(
